@@ -5,9 +5,10 @@ The reference dispatches every pair through rapidfuzz C++
 Spark engine's hot paths instead go through this module:
 
 * :func:`score_matrix`   — all-pairs score matrix for a block (the greedy
-  matcher's kernel; ``operators/greedy_match.py`` computes the whole
-  block's matrix vectorized, then runs the sequential argmax assignment
-  the reference semantics demand);
+  matchers' kernel through :func:`config_score_matrix`: the driver-local
+  matcher scores whole blocks, ``operators/greedy_match.py`` scores tiles
+  of them on executors, and both then run the sequential argmax
+  assignment the reference semantics demand);
 * :func:`score_pairs`    — aligned pairwise scores for Arrow batches;
 * :func:`scorer_udf`     — pandas UDF twin of ``pairscore.get_similarity``
   (lowercase, empty->0, result in [0, 1]) for DataFrame pipelines.
@@ -112,7 +113,7 @@ def scorer_udf(algorithm: str):
 
 
 # ---------------------------------------------------------------------------
-# pair-join scorers (the distributed matcher's scoring stage)
+# pair-stream scorers (the matcher's LSH candidate mode)
 # ---------------------------------------------------------------------------
 
 
@@ -153,10 +154,12 @@ def _dedup_pair_scores(a_vals, b_vals, pairs_fn, matrix_fn=None) -> np.ndarray:
     if matrix_fn is not None and len(ua) * len(ub) <= max(4 * n, 65536):
         m = np.asarray(matrix_fn(list(ua), list(ub)), dtype=np.float64)
         return m[ca, cb]
-    key = ca.astype(np.int64) * len(ub) + cb
+    nb = len(ub)
+    key = ca.astype(np.int64) * nb + cb
     kcodes, kuniq = pd.factorize(key)
-    ka = [ua[k // len(ub)] for k in kuniq]
-    kb = [ub[k % len(ub)] for k in kuniq]
+    # fancy-index object arrays: element-wise pandas Index lookups are slow
+    ka = ua.to_numpy(dtype=object)[kuniq // nb].tolist()
+    kb = ub.to_numpy(dtype=object)[kuniq % nb].tolist()
     scored = pairs_fn(ka, kb)
     return np.asarray(scored, dtype=np.float64)[kcodes]
 

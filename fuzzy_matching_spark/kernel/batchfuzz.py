@@ -72,15 +72,16 @@ def partial_ratio_pairs(left: list, right: list) -> np.ndarray:
         return np.zeros(0, dtype=np.float64)
     # PAIR-level dedup FIRST: candidate streams under blocking compare each
     # left against many rights and repeat whole pairs, and partial_ratio is
-    # symmetric (the shorter side slides regardless of argument order), so
-    # the window sweep runs once per unique (shorter, longer) pair and the
-    # maxima scatter back by slot id.
+    # symmetric (the shorter side slides regardless of argument order; equal
+    # lengths sweep both alignments), so the window sweep runs once per
+    # unique unordered pair and the maxima scatter back by slot id.  The key
+    # orders equal-length pairs by value so (a, b) and (b, a) share a slot.
     pair_uniq: dict[tuple[str, str], int] = {}
     upairs: list[tuple[str, str]] = []
     pair_uid = np.empty(n, dtype=np.int64)
     for p in range(n):
         s1, s2 = left[p], right[p]
-        if len(s1) > len(s2):
+        if (len(s1), s1) > (len(s2), s2):
             s1, s2 = s2, s1
         key = (s1, s2)
         uid = pair_uniq.setdefault(key, len(upairs))

@@ -320,6 +320,28 @@ def partial_ratio_windows(left: list, right: list) -> np.ndarray:
     Preconditions (the :mod:`kernel.batchfuzz` caller enforces them):
     ``1 <= len(left[p]) <= 64`` and ``len(left[p]) <= len(right[p])``.
 
+    Equal-length pairs have no shorter side, so (as in rapidfuzz and
+    :func:`kernel.fuzz.partial_ratio`) both alignments are swept and the
+    better one kept: the swapped twin of each such pair rides along as one
+    more pair of the same sweep.
+    """
+    P = len(left)
+    eq = [p for p in range(P) if len(left[p]) == len(right[p])]
+    if not eq:
+        return _partial_windows_oneway(left, right)
+    both = _partial_windows_oneway(
+        list(left) + [right[p] for p in eq], list(right) + [left[p] for p in eq]
+    )
+    out = both[:P]
+    idx = np.asarray(eq, dtype=np.int64)
+    out[idx] = np.maximum(out[idx], both[P:])
+    return out
+
+
+def _partial_windows_oneway(left: list, right: list) -> np.ndarray:
+    """:func:`partial_ratio_windows` sliding ``left[p]`` over ``right[p]``
+    only (no equal-length second alignment).
+
     Every window of every pair is a state slot in one flat uint64 array;
     step ``j`` feeds slot ``w`` the char ``s2[lo_w + j]`` through the same
     ``u = V & PM[c]; V = (V + u) | (V - u)`` recurrence as
@@ -347,7 +369,7 @@ def partial_ratio_windows(left: list, right: list) -> np.ndarray:
             # largest hi with chunk sum <= _WINDOW_CHUNK (>= 1 pair always)
             hi = int(np.searchsorted(csum, base + _WINDOW_CHUNK, side="right"))
             hi = max(lo + 1, min(hi, P))
-            out[lo:hi] = partial_ratio_windows(left[lo:hi], right[lo:hi])
+            out[lo:hi] = _partial_windows_oneway(left[lo:hi], right[lo:hi])
             lo = hi
         return out
 

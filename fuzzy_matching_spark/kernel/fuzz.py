@@ -91,13 +91,25 @@ def partial_ratio(s1: str, s2: str) -> float:
 
     Scans every alignment of the shorter string over the longer, including
     partially-overlapping windows at both edges (rapidfuzz semantics:
-    "optimal alignment of the shorter string in the longer string").
+    "optimal alignment of the shorter string in the longer string").  When
+    the lengths are equal neither string is "the shorter", so both
+    alignments are scanned and the better one kept — as rapidfuzz does —
+    which makes the score independent of argument order.
     """
     if len(s1) > len(s2):
         s1, s2 = s2, s1
-    len1, len2 = len(s1), len(s2)
-    if len1 == 0:
+    if not s1:
         return 0.0
+    best = _partial_windows(s1, s2)
+    if len(s1) == len(s2) and best < 100.0:
+        best = max(best, _partial_windows(s2, s1))
+    return best
+
+
+def _partial_windows(s1: str, s2: str) -> float:
+    """Max ``ratio(s1, window)`` over every alignment window of ``s2``
+    (``len(s1) <= len(s2)``, ``s1`` non-empty)."""
+    len1, len2 = len(s1), len(s2)
     if s1 in s2:  # exact-substring fast path -> a full window scores 100
         return 100.0
     best = 0.0

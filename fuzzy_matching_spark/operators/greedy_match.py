@@ -9,12 +9,15 @@ from the sequential part:
 * derive the block key as a Catalyst expression (``functions.text.block_key``);
   the block equi-join *is* the reference's intersection rule
   (``data_matcher.py:438-441``) — keys on one side only produce no pairs.
-* **scoring stage** — block equi-join + Arrow-batched pairwise LCS kernel
-  (``functions/scoring.py``), with per-record value pre-transforms and a
-  lossless JVM length-bound prune.  Fully parallel and AQE-skew-splittable:
-  a hot block key ('S' holds ~10% of a real corpus) is split across tasks
-  instead of serializing one cogroup task, which is what makes this shape
-  survive a 100x scale-up.
+* **scoring stage** — each side is ranked within its block and cut into
+  tiles of at most ``TILE`` ranks; the block equi-join pairs tiles, the
+  tile pairs are hash-spread over the cluster, and one ``mapInPandas``
+  scores each tile pair as a score-matrix block with the driver-local
+  kernel (``functions.scoring.config_score_matrix``).  A record crosses
+  the JVM->Python boundary once per tile of the other side, not once per
+  candidate pair, and a hot block key ('S' holds ~10% of a real corpus)
+  still splits into many independent tile-pair tasks instead of
+  serializing one cogroup task.
 * **assignment stage** — only the >= threshold edges (with block-local
   ranks) are shuffled to a per-block greedy that replays the reference's
   sequential argmax.  Sequential work is O(edges), not O(block^2).
@@ -36,6 +39,7 @@ consolidate algebra.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,6 +51,53 @@ __all__ = ["SparkMatcher", "attach_seq", "minhash_candidates"]
 
 SEQ = "_fm_seq"
 BK = "_fm_bk"
+
+
+# Ranks per tile side in the blocked scorer: each tile pair is one
+# ``config_score_matrix`` call of at most TILE x TILE cells.  Smaller tiles
+# spread a hot block over more tasks but send each record to Python more
+# often (once per tile of the other side); larger tiles amortize the
+# per-call overhead.  Measured on the perfbench ``match_persons`` workload
+# (2 x 2,100 persons, 679,986 blocked pairs; local[4] on a 4-core shared
+# host), 5 alternating seeds per size, median op wall: T=128 3.65 s,
+# T=256 3.51 s, T=512 3.59 s — flat within noise, so the middle one.
+TILE = 256
+
+
+def _tile_scorer(config: MatchConfig):
+    """``mapInPandas`` body: score each (left tile, right tile) pair of a
+    block with the driver-local kernel (``config_score_matrix``) and emit
+    only the edges that can take part in the greedy — ``sim > 0`` and
+    ``sim >= threshold`` — with their block ranks and seqs."""
+    from fuzzy_matching_spark.functions.scoring import config_score_matrix
+
+    threshold = config.threshold
+
+    def score(batches):
+        for pdf in batches:
+            out = []
+            for bk, ta, tb in zip(pdf[BK], pdf["_ta"], pdf["_tb"]):
+                left = pd.DataFrame.from_records(list(ta))
+                right = pd.DataFrame.from_records(list(tb))
+                m = config_score_matrix(left, right, config)
+                i, j = np.nonzero((m > 0.0) & (m >= threshold))
+                if i.size:
+                    out.append(
+                        pd.DataFrame(
+                            {
+                                BK: bk,
+                                "_lr": left["_rank"].to_numpy()[i],
+                                "_rr": right["_rank"].to_numpy()[j],
+                                "left_seq": left["_seq"].to_numpy()[i],
+                                "right_seq": right["_seq"].to_numpy()[j],
+                                "sim": m[i, j],
+                            }
+                        )
+                    )
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
+    return score
 
 
 def minhash_candidates(dedup_config=None, fields=None):
@@ -218,18 +269,14 @@ def attach_seq(df: DataFrame) -> DataFrame:
 class SparkMatcher:
     """Distributed ``match_and_consolidate`` with reference semantics.
 
-    ``rebalance_min_rows``: below this many total input rows the candidate
-    stream is NOT hash-rebalanced before scoring — on small inputs the
-    extra shuffle's stage barrier costs more than the skew it prevents
-    (the whole pair stream fits in a task or two), while at corpus scale
-    the rebalance is what keeps a hot block from serializing the Python
-    scorer.  The decision reads the exact input counts, which are free:
-    d1/d2 are localCheckpoint-pinned and must materialize anyway.  The
-    default is deliberately conservative: row count under-measures scoring
-    cost for long-value fields (measured: skipping at 5k rows of document
-    text serialized the LCS kernel into a few block tasks, 2.4x the wall),
-    so only inputs small enough that even quadratic scoring is sub-second
-    skip the shuffle.
+    ``rebalance_min_rows``: at or below this many total input rows the
+    match counts as *small*: the blocked plan ranks each side in 8
+    block-key partitions instead of ``spark.sql.shuffle.partitions``, and
+    the greedy's pair table is broadcast into the consolidation joins, so
+    a latency-class input pays as few stage barriers as possible.  The
+    decision reads the exact input counts, which are free: d1/d2 are
+    pinned and must materialize anyway.  Candidates (LSH) mode also skips
+    its pair-stream rebalance below it.
 
     ``pin_inputs``: persist the prepared inputs so the ``_fm_seq`` row ids
     are computed once and every downstream consumer (scoring join,
@@ -260,23 +307,9 @@ class SparkMatcher:
     only take on work it finishes faster than the cluster's fixed stage
     latency.  ``last_strategy`` records which path ran.
 
-    ``broadcast_join_max_rows`` / ``broadcast_join_char_budget``: the
-    scoring-join strategy gate.  When either prepared side fits both
-    bounds, the block equi-join runs as *pre-spread big side* x
-    *broadcast small side*: the big side is hash-repartitioned on
-    (block key, within-block rank) BEFORE the join, so the quadratic
-    pair explosion happens already spread across the cluster and the
-    pair stream never moves again — no post-join exchange at all.
-    Without this, a latency-class input (thousands of rows, ~1 MB
-    shuffle stats) gets its join inputs AQE-coalesced into one
-    partition, the many-million-row explosion runs serially, and the
-    rebalance then re-shuffles the full multi-GB pair stream (measured
-    at n=10000 persons: 23 s -> 4.1 s, identical output).  On a real
-    cluster this is the classic fact x dim shape: the dim side
-    broadcasts, the fact side's partitioning drives the explosion.
-    When BOTH sides exceed the bounds, the shuffle equi-join + AQE
-    skew-split + pair-stream rebalance path below handles it — that is
-    the only shape where moving the pair stream once is worth it.
+    The blocked scoring stage has one plan (see :meth:`match_pairs`):
+    tiles of the within-block rank order, joined on the block key,
+    hash-spread and scored as ``config_score_matrix`` blocks.
     """
 
     def __init__(
@@ -287,8 +320,6 @@ class SparkMatcher:
         driver_match_max_rows: int = 4_096,
         driver_match_char_budget: int = 2_000_000,
         driver_match_pair_budget: int = 2_000_000,
-        broadcast_join_max_rows: int = 1_000_000,
-        broadcast_join_char_budget: int = 64 << 20,
     ):
         self.config = config
         self.rebalance_min_rows = rebalance_min_rows
@@ -296,8 +327,6 @@ class SparkMatcher:
         self.driver_match_max_rows = driver_match_max_rows
         self.driver_match_char_budget = driver_match_char_budget
         self.driver_match_pair_budget = driver_match_pair_budget
-        self.broadcast_join_max_rows = broadcast_join_max_rows
-        self.broadcast_join_char_budget = broadcast_join_char_budget
         # observability: "driver" | "distributed", set per match call
         self.last_strategy: str | None = None
         self.match_fields = [fc.field for fc in config.fields]
@@ -307,8 +336,8 @@ class SparkMatcher:
         # match jobs call it once the results are consumed, otherwise
         # executor storage accumulates across invocations (ADVICE r3)
         self._persisted: list[DataFrame] = []
-        # set by match_pairs: True when the input was under the rebalance
-        # threshold, enabling the latency-oriented consolidation plan
+        # set by match_pairs: True when the input was at or under
+        # rebalance_min_rows, enabling the latency-oriented consolidation plan
         self._last_small = False
 
     def unpersist(self, blocking: bool = False) -> None:
@@ -350,32 +379,35 @@ class SparkMatcher:
         """Within-block processing rank = the reference's stable sort order
         ((sort keys..., input seq) — unique SEQ makes it total).
 
-        ``numparts`` pre-partitions on the block key: the window, the block
-        equi-join AND the greedy cogroup all require clustering by ``BK``,
-        so one explicit k-partition exchange here satisfies every
-        downstream distribution requirement and the plan runs with a
-        single shuffle per side instead of three sized by
-        ``spark.sql.shuffle.partitions``.  Used by the small-input path
+        ``numparts`` pre-partitions on the block key: the window, the tile
+        grouping and the block equi-join all accept clustering by ``BK``,
+        so one explicit k-partition exchange here satisfies them with a
+        single shuffle per side sized for the small-input path
         (latency-bound, where per-stage scheduling dominates); large
-        inputs keep the default sizing + the skew rebalance instead.
-        Pure execution hint — row content, ranks and greedy output are
+        inputs keep ``spark.sql.shuffle.partitions``.  Pure execution
+        hint — row content, ranks and greedy output are
         partitioning-independent."""
         from pyspark.sql.window import Window
 
-        config = self.config
-        order_cols = (
-            ([config.sort_field] if config.sort_field else [fc.field for fc in config.fields])
-            if config.sort_before_match
-            else []
-        )
         if numparts:
             d = d.repartition(numparts, F.col(BK))
         w = Window.partitionBy(BK).orderBy(
-            *[F.col(c) for c in order_cols if c in d.columns], F.col(SEQ)
+            *[F.col(c) for c in self._order_cols(d)], F.col(SEQ)
         )
         return d.filter(F.col(BK).isNotNull()).withColumn(
             rank_col, F.row_number().over(w)
         )
+
+    def _tiles(self, d: DataFrame, rank_col: str, tile_col: str, list_col: str) -> DataFrame:
+        """Group a ranked side into tiles of at most ``TILE`` consecutive
+        within-block ranks: one row per (block, tile) holding the tile's
+        records as ``array<struct<rank, seq, match fields...>>``."""
+        fields = [f for f in dict.fromkeys(self.match_fields) if f in d.columns]
+        tile = F.floor((F.col(rank_col) - 1) / F.lit(TILE)).alias(tile_col)
+        rec = F.struct(
+            F.col(rank_col).alias("_rank"), F.col(SEQ).alias("_seq"), *fields
+        )
+        return d.groupBy(F.col(BK), tile).agg(F.collect_list(rec).alias(list_col))
 
     def _is_simple(self) -> bool:
         """Fast-path eligibility: every field scores RATIO/TOKEN_SORT and no
@@ -431,27 +463,22 @@ class SparkMatcher:
         the LSH bands *are* the blocking.  See ``_match_pairs_candidates``
         for the component-wise greedy that replaces per-block grouping.
 
-        Execution shape (the 100 TB-safe one): pair *scoring* is a block
-        equi-join + vectorized pairwise kernel — fully parallel, AQE
-        skew-splittable, so one hot block key cannot serialize scoring the
-        way a per-block cogroup does — and only the >= threshold *edges*
-        (with block-local ranks) reach the per-block sequential greedy
-        assignment, which is cheap because the edge list is small.  The
-        edge-list greedy is output-identical to the full-matrix argmax:
-        any right that could ever be assigned scores >= threshold (and
-        > 0), so dropping sub-threshold pairs cannot change an argmax
+        Execution shape: each side is ranked within its block and cut into
+        tiles of at most ``TILE`` consecutive ranks; the block equi-join
+        pairs tiles, not records, and one ``mapInPandas`` scores each tile
+        pair as a ``config_score_matrix`` block — the kernel
+        ``LocalBatchedMatcher`` runs on the driver, so any scorer and
+        transliteration take the same path.  A record crosses to Python
+        once per tile of the other side instead of once per candidate
+        pair, and a hot block still spreads: it becomes
+        ``ceil(n_a/T) * ceil(n_b/T)`` independent tasks.  Only the >=
+        threshold *edges* (with block-local ranks) reach the per-block
+        sequential greedy, which is cheap because the edge list is small.
+        The edge-list greedy is output-identical to the full-matrix
+        argmax: any right that could ever be assigned scores >= threshold
+        (and > 0), so dropping sub-threshold pairs cannot change an argmax
         that leads to an assignment.
-
-        Fast path (all fields RATIO/TOKEN_SORT, no transliteration): each
-        side's values are pre-transformed once per record (lowercase /
-        sorted-token join) so pair scoring is plain ``ratio`` on
-        transformed values, and the exact transformed lengths drive a
-        lossless JVM pruning bound ``2*min(l1,l2)/(l1+l2) >= threshold``
-        inside the join.  Other configs take the general scorer (full
-        per-field semantics, unique pairs scored once).
         """
-        from fuzzy_matching_spark.functions import scoring
-
         config = self.config
         # _fm_seq derives from monotonically_increasing_id, which is only
         # stable across re-evaluations for sources with deterministic
@@ -481,127 +508,28 @@ class SparkMatcher:
             return self._match_pairs_candidates(d1, d2, candidates)
         # ONE pin/stats job for both sides (was two counts, VERDICT r3 #6):
         # the union scan materializes both persisted frames and returns the
-        # per-side row and match-field char totals that the rebalance AND
-        # broadcast-join gates need.  (InMemoryRelation caches whole rows on
-        # first scan, so the narrow projection still populates the full pin.)
-        def _mf_len(d: DataFrame):
-            cols = [f for f in self.match_fields if f in d.columns]
-            if not cols:
-                return F.lit(0).cast("long")
-            out = F.length(F.coalesce(F.col(cols[0]).cast("string"), F.lit("")))
-            for c in cols[1:]:
-                out = out + F.length(F.coalesce(F.col(c).cast("string"), F.lit("")))
-            return out.cast("long")
-
-        stats = {
-            r["_side"]: (r["n"], r["c"])
-            for r in (
-                d1.select(F.lit(0).alias("_side"), _mf_len(d1).alias("_chars"))
-                .unionAll(d2.select(F.lit(1).alias("_side"), _mf_len(d2).alias("_chars")))
-                .groupBy("_side")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.coalesce(F.sum("_chars"), F.lit(0)).alias("c"),
-                )
-                .collect()
-            )
-        }
-        rows1, chars1 = stats.get(0, (0, 0))
-        rows2, chars2 = stats.get(1, (0, 0))
-        total_rows = rows1 + rows2
+        # total row count that decides ``small``.  (InMemoryRelation caches
+        # whole rows on first scan, so the narrow projection still
+        # populates the full pin.)
+        total_rows = d1.select(SEQ).unionAll(d2.select(SEQ)).count()
         small = total_rows <= self.rebalance_min_rows
         self._last_small = small  # consumed by match_and_consolidate
         numparts = 8 if small else None
-        a = self._ranked(d1, "_lr", numparts)
-        b = self._ranked(d2, "_rr", numparts)
-
-        nf = len(config.fields)
-        weights = [fc.weight for fc in config.fields]
-        total_w = sum(weights)
-        simple = self._is_simple()
-
-        asel = a.select(
-            F.col(BK), F.col(SEQ).alias("left_seq"), F.col("_lr"),
-            *self._side_cols(a, "_fa", simple),
-        )
-        bsel = b.select(
-            F.col(BK), F.col(SEQ).alias("right_seq"), F.col("_rr"),
-            *self._side_cols(b, "_fb", simple),
-        )
-
-        # scoring-join strategy (see class docstring): pre-spread + broadcast
-        # when a side fits, shuffle join + post-join rebalance when both are
-        # huge.  The spread key includes the big side's within-block rank so
-        # each of its rows keeps a contiguous run of the broadcast side —
-        # near-rectangular Arrow batches for the matrix kernel — while a hot
-        # block's rows still hash across the whole cluster.
+        ta = self._tiles(self._ranked(d1, "_lr", numparts), "_lr", "_ti", "_ta")
+        tb = self._tiles(self._ranked(d2, "_rr", numparts), "_rr", "_tj", "_tb")
+        # the block equi-join pairs every left tile with every right tile of
+        # its block; spreading the tile pairs by hash turns a hot block into
+        # ceil(n_a/T) * ceil(n_b/T) independent tasks
         par = df1.sparkSession.sparkContext.defaultParallelism
-        nparts = 8 if small else max(32, par * 2)
-
-        def _fits(nrows: int, nchars: int) -> bool:
-            return (
-                nrows <= self.broadcast_join_max_rows
-                and nchars <= self.broadcast_join_char_budget
-            )
-
-        pre_spread = _fits(rows1, chars1) or _fits(rows2, chars2)
-        if pre_spread:
-            if _fits(rows2, chars2) and (not _fits(rows1, chars1) or chars2 <= chars1):
-                joined = asel.repartition(nparts, F.col(BK), F.col("_lr")).join(
-                    F.broadcast(bsel), BK
-                )
-            else:
-                joined = bsel.repartition(nparts, F.col(BK), F.col("_rr")).join(
-                    F.broadcast(asel), BK
-                )
-        else:
-            joined = asel.join(bsel, BK)
-
-        if simple and config.threshold > 0 and total_w > 0:
-            # lossless prune: per-field ratio upper bound from exact
-            # transformed lengths, weighted like the real score
-            ub = F.lit(0.0)
-            for i, w in enumerate(weights):
-                la = F.length(f"_fa{i}")
-                lb = F.length(f"_fb{i}")
-                fub = F.when(
-                    la + lb > 0, 2.0 * F.least(la, lb) / (la + lb)
-                ).otherwise(F.lit(0.0))
-                ub = ub + fub * F.lit(w)
-            joined = joined.filter(ub / F.lit(total_w) >= F.lit(config.threshold))
-
-        # Shuffle-join path only: the block join has as many useful
-        # partitions as block keys (~26 for first-char blocking) and a hot
-        # key ('S'...) concentrates the quadratic pair volume in one task;
-        # Python scoring is CPU-bound, so spread the candidate stream across
-        # the cluster before the UDF.  hash-repartition on (block, left
-        # rank) — not round-robin, and not repartitionByRange (whose
-        # boundary sampling would run the join twice): every left's full
-        # right-run stays in one partition, so Arrow batches remain
-        # near-rectangular and the scorer's matrix kernel (which amortizes
-        # pattern tables across a left's rights) keeps its ~10-40x
-        # advantage, while a hot block's lefts hash across the cluster.
-        # The shuffle moves exactly the candidate-pair stream once, in
-        # exchange for even CPU use.  The pre-spread broadcast plan above
-        # makes this exchange unnecessary (the pairs are born spread);
-        # below ``rebalance_min_rows`` the stage barrier costs more than
-        # the skew — see the class docstring.
-        if not pre_spread and total_rows > self.rebalance_min_rows:
-            joined = joined.repartition(max(32, par * 2), F.col(BK), F.col("_lr"))
-
-        scorer = (
-            scoring.make_simple_pair_scorer(weights)
-            if simple
-            else scoring.make_general_pair_scorer(config)
+        tile_pairs = (
+            ta.join(tb, BK)
+            .repartition(2 * par, F.col(BK), F.col("_ti"), F.col("_tj"))
+            .select(BK, "_ta", "_tb")
         )
-        scored = joined.withColumn(
-            "sim",
-            scorer(*[F.col(f"_f{s}{i}") for i in range(nf) for s in ("a", "b")]),
+        edges = tile_pairs.mapInPandas(
+            _tile_scorer(config),
+            schema=f"{BK} string, _lr int, _rr int, left_seq long, right_seq long, sim double",
         )
-        edges = scored.filter(
-            (F.col("sim") > 0.0) & (F.col("sim") >= F.lit(config.threshold))
-        ).select(BK, "_lr", "_rr", "left_seq", "right_seq", "sim")
-
         pairs = edges.groupBy(BK).applyInPandas(
             _greedy_over_edges, schema="left_seq long, right_seq long, sim double"
         )
@@ -613,8 +541,10 @@ class SparkMatcher:
         """Candidate-driven scoring + component-wise order-exact greedy.
 
         Scale shape: the candidate frame (left_seq, right_seq) is joined to
-        both sides' pre-transformed values, scored with the same vectorized
-        kernel as blocked mode, and only the >= threshold edges survive.
+        both sides' pre-transformed values, scored one Arrow row per pair by
+        the batched pair scorers (candidate pairs are sparse, so there is no
+        tile structure to score as matrix blocks), and only the >=
+        threshold edges survive.
         The greedy then runs per *connected component* of the thresholded
         bipartite edge graph instead of per block: a right can only be
         contended by lefts inside its own component, and the reference's
@@ -653,7 +583,8 @@ class SparkMatcher:
         joined = cand.join(asel, "left_seq").join(bsel, "right_seq")
 
         if simple and config.threshold > 0 and total_w > 0:
-            # same lossless length-bound prune as blocked mode
+            # lossless prune: per-field ratio upper bound from exact
+            # transformed lengths, weighted like the real score
             ub = F.lit(0.0)
             for i, w in enumerate(weights):
                 la = F.length(f"_fa{i}")

@@ -255,10 +255,14 @@ def candidate_pairs(
     ``max_bucket_size`` are excluded from pair expansion and surfaced in the
     metrics frame (band, bh, size, skipped) — never silently dropped.
 
-    The size filter is a window count over (band, bh) — one extra shuffle,
-    fully distributed.  (A broadcast semi-join of "ok buckets" would funnel
-    every bucket key through the driver: at corpus scale that's millions of
-    rows of driver work that doesn't shrink with cluster size.)
+    The size filter is a window count over (band, bh): it reuses the one
+    (band, bh) exchange the self-join needs and was measured faster on
+    this box than a groupBy-count joined back to the rows, which moves one
+    extra row per bucket through a second join.  The tradeoff: the window
+    buffers each (band, bh) partition in one task before the filter runs,
+    so a pathological hot bucket (millions of identical entries) is sorted
+    and possibly spilled in a single task even though it is then dropped;
+    the map-side-combined groupBy-count never concentrates those rows.
     """
     from pyspark.sql.window import Window
 

@@ -176,29 +176,6 @@ class DedupPipeline:
             "doc_id", F.xxhash64("repo", "path", "commit")
         ).withColumn("content_sha256", F.sha2("content", 256))
 
-    def exact_edges(self, docs: DataFrame) -> DataFrame:
-        """sha-identical files: edges to the min doc_id per hash group.
-
-        Star topology (every member -> group min) rather than all-pairs:
-        O(n) edges per group instead of O(n^2), same connected components.
-        Derived from the same sha-partitioned window as the rep-per-sha
-        dedup, so the pipeline pays the shuffle once (see ``_run``).
-        """
-        from pyspark.sql.window import Window
-
-        w_sha = Window.partitionBy("content_sha256").orderBy("doc_id")
-        return (
-            docs.withColumn("_min", F.first("doc_id").over(w_sha))
-            .filter(F.col("doc_id") != F.col("_min"))
-            .select(
-                F.col("_min").alias("id_a"),
-                F.col("doc_id").alias("id_b"),
-                F.lit("exact").alias("detector"),
-                F.lit(1.0).alias("score"),
-                F.lit("exact").alias("score_kind"),
-            )
-        )
-
     def minhash_edges(self, docs: DataFrame) -> DataFrame:
         # sigs feed three consumers (banding, the estimate prefilter, skew
         # metrics) — persist or every consumer re-runs the mapInPandas scan
@@ -408,12 +385,12 @@ class DedupPipeline:
 
         # Near-dup detectors see one representative per distinct content
         # (min doc_id of each sha256 class): byte-identical copies already
-        # form a star through exact_edges, so running MinHash/SimHash over
-        # every copy would only re-discover those components while inflating
-        # the LSH bucket joins quadratically in the copy count.  The rep
-        # pick AND the exact star edges come from ONE sha-partitioned
-        # window pass (both window functions share the spec, so Spark
-        # computes them in a single shuffle+sort).
+        # form a star through the exact edges below, so running
+        # MinHash/SimHash over every copy would only re-discover those
+        # components while inflating the LSH bucket joins quadratically in
+        # the copy count.  The rep pick AND the exact star edges come from
+        # ONE sha-partitioned window pass (both window functions share the
+        # spec, so Spark computes them in a single shuffle+sort).
         from pyspark.sql.window import Window
 
         w_sha = Window.partitionBy("content_sha256").orderBy("doc_id")

@@ -12,7 +12,7 @@ hand-computable cases.
 import random
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from fuzzy_matching_spark.kernel import fuzz
@@ -72,6 +72,9 @@ def test_partial_ratio():
     # edge-overlap alignment can beat every full window
     assert fuzz.partial_ratio("ab", "zb") == pytest.approx(2 * 1 / 3 * 100)
     assert fuzz.partial_ratio("", "abc") == 0.0
+    # equal lengths keep the better of both alignments: 'a aa' slid over
+    # 'aaab' meets edge window 'aaa' (2*3/7); 'aaab' over 'a aa' gets 75
+    assert fuzz.partial_ratio("a aa", "aaab") == pytest.approx(600 / 7)
 
 
 def test_token_sort():
@@ -100,13 +103,42 @@ def test_wratio_cascade():
 
 
 @given(st.text(alphabet=ALPHABET, max_size=40), st.text(alphabet=ALPHABET, max_size=40))
+# equal lengths: only the better of the two alignments is order-independent
+@example("a aa", "aaab")
+@example("aa a", " aaab ")
 @settings(max_examples=200, deadline=None)
 def test_scorer_ranges_and_symmetry(s1, s2):
     for name, fn in fuzz.SCORERS.items():
         v = fn(s1, s2)
         assert 0.0 <= v <= 100.0, name
-        if name != "partial_ratio":  # partial is asymmetric only via arg swap, which it normalizes
-            assert fn(s2, s1) == pytest.approx(v), name
+        assert fn(s2, s1) == pytest.approx(v), name
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.text(alphabet=ALPHABET, max_size=24),
+            st.text(alphabet=ALPHABET, max_size=24),
+        ),
+        min_size=1,
+        max_size=8,
+    )
+)
+@example([("a aa", "aaab"), ("aaab", "a aa")])
+@example([("aa a", " aaab ")])
+@settings(max_examples=150, deadline=None)
+def test_batched_equals_scalar_both_orders(pairs):
+    """Every batched scorer equals the scalar kernel in both argument
+    orders, on the same batch (so the pair-dedup in the batched kernels
+    sees each pair and its mirror)."""
+    from fuzzy_matching_spark.functions.scoring import score_pairs
+
+    left = [a for a, _ in pairs] + [b for _, b in pairs]
+    right = [b for _, b in pairs] + [a for a, _ in pairs]
+    for name, fn in fuzz.SCORERS.items():
+        got = score_pairs(name, left, right)
+        want = [fn(a, b) for a, b in zip(left, right)]
+        assert list(got) == want, name
 
 
 @given(st.text(alphabet=ALPHABET, min_size=1, max_size=40))

@@ -151,55 +151,106 @@ def test_parallelism_invariance(spark):
     assert results[0] == results[1]
 
 
-def _pairs_and_ids(m_df, c_df):
-    pairs = sorted(
-        (r["Оригинал"]["id"], r["Вариант"]["id"], round(r["Схожесть"], 9))
-        for r in m_df.collect()
+def _local_vs_distributed(spark, config, originals, variants):
+    """(matches, consolidated multiset) from LocalBatchedMatcher and from
+    the distributed plan on the same records.  NULLs are fed to Spark as
+    NULLs and to the local matcher as "" — the coercion both plans apply."""
+    from collections import Counter
+
+    from fuzzy_matching_spark.operators.local_match import LocalBatchedMatcher
+
+    def coerce(rows):
+        return [{k: ("" if v is None else v) for k, v in r.items()} for r in rows]
+
+    def record_key(rec):
+        return tuple(sorted(rec.items()))
+
+    l_matches, l_cons = LocalBatchedMatcher(config).match_and_consolidate(
+        coerce(originals), coerce(variants)
     )
-    ids = sorted(r["id"] for r in c_df.collect())
-    return pairs, ids
+    local = (
+        sorted((m["Оригинал"]["id"], m["Вариант"]["id"], m["Схожесть"]) for m in l_matches),
+        Counter(record_key(r) for r in l_cons),
+    )
+    matcher = SparkMatcher(config, driver_match_max_rows=0)
+    m_df, c_df = matcher.match_and_consolidate(
+        spark_df(spark, originals), spark_df(spark, variants)
+    )
+    assert matcher.last_strategy == "distributed"
+    dist = (
+        sorted((r["Оригинал"]["id"], r["Вариант"]["id"], r["Схожесть"]) for r in m_df.collect()),
+        Counter(record_key(r.asDict()) for r in c_df.collect()),
+    )
+    matcher.unpersist()
+    return local, dist
 
 
-def test_scoring_join_plans_agree(spark):
-    """Pre-spread + broadcast scoring join == shuffle join + rebalance.
-
-    The strategy gate (broadcast_join_max_rows/_char_budget) only picks the
-    physical join; output must be identical.  n=1600+1600 crosses
-    rebalance_min_rows so the non-small branch of both plans runs."""
-    config = base_config()
-    originals, variants = generate_person_pair(1600, seed=11)
-    df1 = spark_df(spark, originals)
-    df2 = spark_df(spark, variants)
-
-    bcast = SparkMatcher(config, driver_match_max_rows=0)
-    bres = _pairs_and_ids(*bcast.match_and_consolidate(df1, df2))
-    bcast.unpersist()
-
-    shuf = SparkMatcher(config, driver_match_max_rows=0, broadcast_join_max_rows=0)
-    sres = _pairs_and_ids(*shuf.match_and_consolidate(df1, df2))
-    shuf.unpersist()
-
-    assert bres == sres
-    assert len(bres[0]) > 0
+def _block_sizes(records, config):
+    return [len(b) for b in OracleMatcher(config)._blocks(records).values()]
 
 
-def test_scoring_join_left_broadcast_orientation(spark):
-    """When only the LEFT side fits the broadcast bounds (right too many
-    rows), the plan broadcasts the left and spreads the right — still
-    output-identical to the shuffle plan."""
-    config = base_config()
-    originals, _ = generate_person_pair(120, seed=13)
-    _, variants = generate_person_pair(900, seed=13)
-    df1 = spark_df(spark, originals)
-    df2 = spark_df(spark, variants)
+def _drop_block(originals, variants):
+    """A block key on the left only and another on the right only."""
+    first = lambda r: r["Фамилия"][:1].upper()  # noqa: E731
+    only_left, only_right = sorted({first(r) for r in originals})[:2]
+    return (
+        [r for r in originals if first(r) != only_right],
+        [r for r in variants if first(r) != only_left],
+    )
 
-    lb = SparkMatcher(config, driver_match_max_rows=0, broadcast_join_max_rows=500)
-    lres = _pairs_and_ids(*lb.match_and_consolidate(df1, df2))
-    lb.unpersist()
 
-    shuf = SparkMatcher(config, driver_match_max_rows=0, broadcast_join_max_rows=0)
-    sres = _pairs_and_ids(*shuf.match_and_consolidate(df1, df2))
-    shuf.unpersist()
+def _blank_block_values(originals, variants):
+    """Empty and NULL block values: no block, but unmatched re-entry."""
+    for i, r in enumerate(originals[:20]):
+        r["Фамилия"] = None if i % 2 else ""
+    for i, r in enumerate(variants[10:30]):
+        r["Фамилия"] = "" if i % 2 else None
+    return originals, variants
 
-    assert lres == sres
-    assert len(lres[0]) > 0
+
+_TRANSLIT = dict(
+    fields=[
+        MatchFieldConfig("Фамилия", 0.4, transliterate=True),
+        MatchFieldConfig("Имя", 0.3),
+        MatchFieldConfig("Отчество", 0.2, fuzzy_algorithm=FuzzyAlgorithm.PARTIAL_RATIO),
+        MatchFieldConfig("email", 0.1),
+    ],
+    transliteration=TransliterationConfig(enabled=True, standard="Passport"),
+)
+
+
+@pytest.mark.parametrize(
+    "sizes,seed,config_kw,tile,edit",
+    [
+        # crosses rebalance_min_rows; the largest blocks span two tiles a side
+        ((1600, 1600), 11, {}, None, None),
+        # many ragged tiles per block: ranks stay block-global across tiles
+        ((300, 300), 5, {"fuzzy_algorithm": FuzzyAlgorithm.WRatio}, 16, None),
+        ((120, 900), 13, {}, None, None),
+        ((200, 200), 3, {}, None, _drop_block),
+        ((200, 200), 4, {}, None, _blank_block_values),
+        ((300, 300), 8, {"group_fields": ["Пол"]}, None, None),
+        ((150, 150), 9, _TRANSLIT, None, None),
+    ],
+    ids=["multi_tile", "small_tiles", "lopsided", "one_sided_keys", "blank_keys",
+         "group_fields", "translit"],
+)
+def test_tiled_scoring_matches_local(spark, monkeypatch, sizes, seed, config_kw, tile, edit):
+    """Distributed tiled scoring == LocalBatchedMatcher: same matches with
+    the same similarities, same consolidated multiset."""
+    from fuzzy_matching_spark.operators import greedy_match
+
+    if tile is not None:
+        monkeypatch.setattr(greedy_match, "TILE", tile)
+    config = base_config(**config_kw)
+    originals, _ = generate_person_pair(sizes[0], seed=seed)
+    _, variants = generate_person_pair(sizes[1], seed=seed)
+    if edit is not None:
+        originals, variants = edit(originals, variants)
+    if sizes[0] > 1000 or tile is not None:
+        # the case only tests what it claims if blocks span several tiles
+        assert max(_block_sizes(originals, config)) > greedy_match.TILE
+        assert max(_block_sizes(variants, config)) > greedy_match.TILE
+    local, dist = _local_vs_distributed(spark, config, originals, variants)
+    assert dist == local
+    assert len(local[0]) > 0

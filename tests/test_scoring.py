@@ -185,3 +185,20 @@ def test_partial_ratio_windows_property():
         assert (got == want).all()
 
     check()
+
+
+@pytest.mark.parametrize("with_matrix", [False, True], ids=["sparse", "matrix"])
+def test_dedup_pair_scores_matches_rowwise(with_matrix):
+    """The unique-combination scorer returns exactly the row-by-row scores
+    on a batch with many repeated values and repeated (a, b) combinations,
+    in both its sparse (pairwise) and rectangular (matrix) branches."""
+    rng = random.Random(23)
+    pool_a = _rand_strings(rng, 40, "abc d", 0, 12)
+    pool_b = _rand_strings(rng, 40, "abd c", 0, 12)
+    a = [rng.choice(pool_a) for _ in range(3000)]
+    b = [rng.choice(pool_b) for _ in range(3000)]
+    got = scoring._dedup_pair_scores(
+        a, b, batchlcs.ratio_pairs, batchlcs.ratio_matrix if with_matrix else None
+    )
+    assert got.dtype == np.float64
+    assert list(got) == [fuzz.ratio(x, y) for x, y in zip(a, b)]
