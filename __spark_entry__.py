@@ -30,7 +30,6 @@ from fuzzy_matching_spark.config import DedupConfig, FuzzyAlgorithm, MatchConfig
 from fuzzy_matching_spark.functions.text import (
     block_key,
     cleanliness_col,
-    detect_language_col,
     normalize_name_ru_col,
     quality_score_col,
 )
@@ -145,12 +144,7 @@ def q_cleanliness(spark, sf_dir):
 
 def q_detect_language(spark, sf_dir):
     """F8 language detection histogram."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.select(detect_language_col("text").alias("detected_lang"))
-        .groupBy("detected_lang")
-        .agg(F.count("*").alias("n_docs"))
-    )
+    return textops.language_profile(_t(spark, sf_dir, "documents"))
 
 
 def q_normalize_text(spark, sf_dir):

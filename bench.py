@@ -8,19 +8,15 @@ Default mode (driver contract): run the headline queries at
     {"metric": "headline_total_sec", "value": N, "unit": "sec",
      "queries": {...per-query sec...}, "sf": 0.1}
 
-``--scaling`` mode (north-rule evidence): run the dedup pipeline at
-CPU-fenced parallelism levels as PAIRS — each (N, 4N) pair is two
-long-lived fenced JVMs on DISJOINT cpusets whose timed passes alternate
-adjacently in box time (the sandbox stand-in for N vs 4N executors; see
-``run_scaling`` for why pairing + fencing is the faithful protocol) —
-report files/sec per level plus the N -> 4N scaling efficiencies
-(per-level interleaved floors, with median-of-round-ratios as the
-cross-check), and write BENCH/BASELINE.md.
+``--matcher`` mode: time ``SparkMatcher.match_and_consolidate`` on the
+distorted-persons fixture per scorer and write BENCH/MATCHER.md.
+
+Steady-state, per-layer measurement lives in ``perfbench/`` (see
+``BENCHMARK.json``), not here.
 
 Usage:
-    python bench.py                      # driver contract
-    python bench.py --scaling            # scaling evidence -> BENCH/BASELINE.md
-    python bench.py --run-paired --cores 8 --data /tmp/corpus  # internal child
+    python bench.py              # driver contract
+    python bench.py --matcher    # matcher latency -> BENCH/MATCHER.md
 """
 
 from __future__ import annotations
@@ -28,7 +24,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -134,894 +129,6 @@ def run_headline() -> None:
 
 
 # ---------------------------------------------------------------------------
-# scaling mode
-# ---------------------------------------------------------------------------
-
-def _ensure_corpus(path: str, n_base: int, seed: int = 42) -> int:
-    """Write the deterministic bench corpus once; return row count."""
-    meta = os.path.join(path, "_meta.json")
-    if os.path.exists(meta):
-        with open(meta) as f:
-            m = json.load(f)
-        if m.get("n_base") == n_base:
-            return m["rows"]
-    from fuzzy_matching_spark.fixtures.corpus import generate_corpus_df
-    from fuzzy_matching_spark.pipeline.session import build_session
-
-    spark = build_session(master="local[32]", app_name="fms-bench-gen")
-    df = generate_corpus_df(spark, n_base=n_base, seed=seed, partitions=128)
-    df.write.mode("overwrite").parquet(os.path.join(path, "corpus"))
-    rows = spark.read.parquet(os.path.join(path, "corpus")).count()
-    spark.stop()
-    with open(meta, "w") as f:
-        json.dump({"rows": rows, "n_base": n_base}, f)
-    return rows
-
-
-def run_paired_child(cores: int, data: str, job: str = "dedup") -> None:
-    """Internal child for the paired scaling protocol.
-
-    Launched under ``taskset`` on a DISJOINT cpuset by ``run_scaling``;
-    builds a fenced ``local[cores]`` session, warms up with CONVERGENCE-
-    GATED untimed passes (>= 3, capped at 8, stopping once the latest pass
-    stops improving >5% on the best previous pass — warm-in length scales
-    with the level's wall, so a fixed count under-warms slow levels),
-    prints ``READY <rows>``, then serves timed passes on demand: each
-    ``GO`` line on stdin runs one pass and prints ``WALL <sec> CLUSTERS
-    <n>``; ``EXIT`` stops the session.  Keeping the JVM alive between
-    passes is what lets the parent interleave the two levels of a pair
-    adjacently in box time.
-
-    ``job="null"`` swaps the dedup pipeline for the CALIBRATION job: an
-    embarrassingly parallel ``mapInPandas`` pass (per-row iterated sha256,
-    zero shuffle, zero driver work beyond one count) over the same corpus.
-    Its measured N -> 4N efficiency is this box's achievable CEILING under
-    the identical protocol — any gap between 1.0 and the ceiling is the
-    sandbox (shared memory subsystem, hypervisor page-fault serialization),
-    not the job, because the null job has no shuffle, no barrier and no
-    serial section by construction.
-    """
-    from fuzzy_matching_spark.config import DedupConfig
-    from fuzzy_matching_spark.pipeline.dedup_job import DedupPipeline
-    from fuzzy_matching_spark.pipeline.session import build_session
-
-    # shuffle partitions scale with the cluster (the standard operating
-    # point: a few partitions per core, AQE coalescing on top) — a real
-    # N -> 4N deployment sizes spark.sql.shuffle.partitions to the cluster,
-    # so pinning one count across levels would measure a mis-sized config,
-    # not the job.  Cluster assignments are partitioning-independent (the
-    # determinism check below proves it per run).
-    os.makedirs(f"/dev/shm/fms-scaling-{cores}", exist_ok=True)
-    spark = build_session(
-        master=f"local[{cores}]",
-        shuffle_partitions=max(16, 4 * cores),
-        app_name=f"fms-scaling-{cores}",
-        # shuffle scratch on tmpfs: a real cluster node shuffles to ITS OWN
-        # local disks, but this sandbox has a single ext4 disk shared by
-        # both pair members — kernel writeback of one member's shuffle
-        # files ran inside the sibling's timed window (measured: 8-core
-        # passes 67-69 s right after a 2-core pass vs 41-46 s first in
-        # round).  RAM-backed scratch removes the cross-member disk
-        # coupling without touching the job; per-pass shuffle volume is a
-        # few GB against 126 GB of tmpfs.
-        # split sizing: the toy corpus is ~300 MB in 2.3 MB files; the
-        # default 128 MB maxPartitionBytes + 4 MB openCost packs the scan
-        # into ~7 splits, so every map-side stage runs <= 7 tasks and the
-        # measured "efficiency" is wave granularity (a 4-core level runs
-        # 4+3, idling half its cores in wave 2 — the cpusample straggler
-        # tail), not the job.  At 100 TB splits outnumber slots by 1000x;
-        # sizing splits so tasks >> slots is what makes the toy measurement
-        # mean the same thing.  4m puts each of the corpus's 128 uniform
-        # ~2.3 MB files in its own split: 128 divides evenly by every
-        # level (1/2/4/8), so no level pays a ragged final wave the others
-        # don't (43 splits would tax 8 cores ~12% but 2 cores only ~2%).
-        # coalescing OFF in the scaling child: AQE's parallelismFirst mode
-        # coalesces every post-shuffle stage to ~defaultParallelism
-        # partitions = ONE wave per stage, so a straggler partition idles
-        # every other core for the stage tail — and the penalty is
-        # asymmetric (fatter 2-core partitions average out imbalance that
-        # slim 8-core partitions can't), which deflates the measured
-        # N -> 4N ratio.  With it off, stages run spark.sql.shuffle.
-        # partitions (4/core) = 4+ waves, so imbalance is stolen by the
-        # wave scheduler on every level alike.  At 100 TB this pathology
-        # cannot occur — total shuffle bytes / 64 MB advisory >> slots —
-        # so disabling it here removes a toy-scale artifact, not real work.
-        extra_conf={"spark.local.dir": f"/dev/shm/fms-scaling-{cores}",
-                    "spark.sql.files.maxPartitionBytes": "4m",
-                    "spark.sql.files.openCostInBytes": "131072",
-                    "spark.sql.adaptive.coalescePartitions.enabled":
-                        os.environ.get("SPARK_GRAFT_COALESCE", "false")},
-    )
-    corpus = spark.read.parquet(os.path.join(data, "corpus"))
-    rows = corpus.count()  # warm the scan outside the timed region
-
-    # per-pass barrier walls of the LAST completed pass (dedup job only) —
-    # reported to the parent on the WALL line so the artifact can attribute
-    # each level's wall to phases without scraping child stderr
-    last_phases: dict = {}
-
-    if job == "null":
-        def _hash_batches(batches):
-            import hashlib
-
-            import pandas as pd
-
-            for pdf in batches:
-                vals = pdf["content"].astype(str)
-                out = []
-                for s in vals:
-                    h = s.encode("utf-8", "ignore")
-                    for _ in range(1000):  # iterated: gives the pass CPU weight
-                        h = hashlib.sha256(h).digest()
-                    out.append(h[:8].hex())
-                yield pd.DataFrame({"h": out})
-
-        def one_pass():
-            # one narrow stage: scan -> Python workers -> count.  No
-            # shuffle, no cache, no driver union-find — perfectly parallel.
-            return corpus.mapInPandas(_hash_batches, schema="h string").count()
-    elif job == "shuffle":
-        # SHUFFLE-bound calibration: embarrassingly data-parallel by
-        # construction (unique keys, no skew, no Python, no cache, no
-        # driver work beyond one count) — but, unlike the null job, its
-        # cost is almost entirely the exchange data path: serialize +
-        # write + fetch + read ~2 GB through Spark's shuffle machinery.
-        # On a real cluster N -> 4N adds NICs, disks and memory channels
-        # with the nodes, so this job scales ~1.0; on a single box every
-        # level shares ONE memory subsystem, so its measured N -> 4N
-        # efficiency is the box's achievable ceiling for the shuffle-bound
-        # PHASES of any real job under this protocol (the CPU-bound null
-        # job cannot see this limit — it measures core scaling only).
-        from pyspark.sql import functions as F
-
-        base = corpus.select(
-            F.xxhash64("repo", "path", "commit").alias("k"),
-            F.substring("content", 1, 128).alias("p"),
-        )
-
-        def one_pass():
-            # expansion sized so the instrument's walls land in the same
-            # regime as the pipeline phases it calibrates (tens of seconds
-            # per pass): a seconds-long pass would measure job-submit fixed
-            # latency, not the exchange — the exact critique the corpus-
-            # size paragraph makes of short dedup runs
-            expanded = base.select(
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(SHUFFLE_EXPAND - 1))
-                ).alias("i"), "k", "p"
-            )
-            keyed = expanded.select(F.xxhash64("k", "i").alias("kk"), "p")
-            # keys are ~unique, so the partial agg cannot reduce map-side:
-            # the full (kk, p) stream crosses the exchange
-            return keyed.groupBy("kk").agg(F.max("p").alias("m")).count()
-    else:
-        def one_pass():
-            pipe = DedupPipeline(
-                spark, DedupConfig(), detectors=("minhash",), collect_metrics=False
-            )
-            result = pipe.run(corpus)
-            t0 = time.time()
-            n = result.clusters.select("component").distinct().count()
-            pipe.phase_walls["cluster.finalize"] = round(time.time() - t0, 3)
-            # phase attribution on stderr: lets a scaling investigation see
-            # WHICH barrier stopped shrinking with cores without a re-run
-            print(f"PHASES {json.dumps(pipe.phase_walls)}", file=sys.stderr,
-                  flush=True)
-            last_phases.clear()
-            last_phases.update(pipe.phase_walls)
-            return n
-
-    def measured_pass():
-        corpus.count()  # re-warm just the scan (same shape every pass)
-        t0 = time.time()
-        n = one_pass()
-        wall = round(time.time() - t0, 2)
-        # clear + collect inside OUR slot: Spark's CacheManager matches
-        # persisted plans by canonical form, so without clearCache a later
-        # pass would reuse this pass's cached stages and time only the tail
-        # of the job; the gc + settle keeps heap scrubbing out of the pair
-        # sibling's timed window (page churn contends box-wide here even
-        # across disjoint cpusets — the hypervisor serializes page faults).
-        spark.catalog.clearCache()
-        spark._jvm.System.gc()
-        time.sleep(2)
-        return wall, n
-
-    # CONVERGENCE-GATED warm-up, untimed: keep warming until the latest
-    # pass is within 5% of this member's fastest so far (>= 3 passes,
-    # capped at 8).  Warm-in is MULTI-pass in this sandbox (first-touch
-    # page faults serialize in the hypervisor at ~0.13 ms/page, so heap +
-    # Python workers + block-manager cache reach steady footprint over
-    # several passes) and — crucially — its LENGTH scales with the level's
-    # wall: a fixed two-pass warmup left a fenced 1-core member still
-    # improving monotonically through five timed rounds (289 -> 221 s,
-    # -24%) while its 4-core sibling was long steady, so the per-level
-    # floors sampled different life stages of the two JVMs and the ratio
-    # was corrupted asymmetrically.  Gating on convergence makes READY
-    # mean "steady state", which is the assumption the floor estimator
-    # rests on.  All warm walls go to stderr so nothing is hidden.
-    warm_walls = []
-    while True:
-        w, _ = measured_pass()
-        warm_walls.append(w)
-        # converged = the latest pass is NO LONGER >5% faster than the best
-        # PREVIOUS pass (ADVICE r4: comparing against a min that includes
-        # the current wall is vacuous — any fastest-so-far pass trivially
-        # passes, so a monotonically improving member exits at 3 passes).
-        if len(warm_walls) >= 3 and w >= 0.95 * min(warm_walls[:-1]):
-            break
-        if len(warm_walls) >= 8:
-            break
-    print(f"WARMED {warm_walls}", file=sys.stderr, flush=True)
-
-    print(f"READY {rows}", flush=True)
-    for line in sys.stdin:
-        cmd = line.strip()
-        if cmd == "EXIT":
-            break
-        if cmd != "GO":
-            continue
-        wall, n_clusters = measured_pass()
-        extra = f" PHASES {json.dumps(last_phases)}" if last_phases else ""
-        print(f"WALL {wall} CLUSTERS {n_clusters}{extra}", flush=True)
-    spark.stop()
-
-
-LEVELS = tuple(
-    int(c) for c in os.environ.get("SPARK_GRAFT_BENCH_LEVELS", "2,8").split(",")
-)
-# per-row fan-out of the shuffle calibration job (--job shuffle): at 300
-# the 264k-row corpus pushes ~79M rows (~11 GB) through one exchange per
-# pass, putting the instrument's walls in the same tens-of-seconds regime
-# as the pipeline's exchange-bound phases; recorded in
-# calibration_shuffle.json so a ceiling measured at a different weight is
-# recognizable
-SHUFFLE_EXPAND = int(os.environ.get("SPARK_GRAFT_SHUFFLE_EXPAND", "300"))
-ROUNDS = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "5"))
-# bumped whenever the measurement protocol changes in a way that breaks
-# ceiling transfer (v2: convergence-gated warmup compares against the best
-# PREVIOUS pass); calibration.json is only honored when it matches.
-PROTOCOL_NAME = "paired_disjoint_fences_interleaved_floors_v2"
-
-
-def run_scaling(n_base: int, job: str = "dedup") -> None:
-    """PAIRED scaling protocol (r4): for each (N, 4N) pair, run BOTH levels
-    as long-lived CPU-FENCED JVMs on DISJOINT cpusets (N on cores 0..N-1,
-    4N on cores N..5N-1) and alternate timed passes adjacently in box time;
-    the PRIMARY efficiency estimate is the ratio of per-level floors
-    (each floor = median of that level's three fastest rounds), with the
-    median of per-round ratios (T_N,i / T_4N,i) / 4 as the cross-check —
-    additive stalls bias per-round ratios down (they hit the shorter 4N
-    wall relatively harder), while the floors estimate the job's own wall
-    and the interleaving guarantees both floors sample the same box
-    window.
-
-    Why paired, not blocked: this sandbox's contention phase swings
-    identical passes 2-4x within minutes (measured: the same fenced 8-core
-    pass 43 s and 107 s back to back).  The earlier protocol measured each
-    level in its own 20-40 minute block, so the N -> 4N ratio compared two
-    DIFFERENT box phases — replication + pooled-fastest-3 shrank but could
-    not remove that bias.  Pairing measures the two levels of every ratio
-    seconds apart: phase noise multiplies both sides of a round's ratio
-    nearly equally and cancels, and the median over rounds drops the
-    rounds a stall hit asymmetrically.  Round order alternates (A,B /
-    B,A) so slow drift within a round is balanced across rounds too.
-
-    Fencing is what makes a level an honest executor stand-in: on any real
-    cluster an executor's Python workers run inside the SAME cgroup/CPU
-    allocation as its task threads (k8s pod cpu limit, YARN container), so
-    an "N-core executor" means N cores TOTAL for JVM + Python.  An
-    unfenced local[N] leaks extra host cores to the Python workers — the
-    smaller level leaks proportionally more, which deflates the measured
-    ratio (round-2's unfenced 2 -> 8 read 0.54 for this reason).  With
-    fencing every level runs the same per-core regime (N task threads + N
-    Python workers on N cores) and the N -> 4N ratio isolates the job's
-    actual shuffle/partition scaling.  The two pair members' cpusets are
-    DISJOINT, so the idle member's background threads cannot perturb the
-    running member.
-
-    Levels above 8 fenced cores are not usable as evidence in THIS sandbox:
-    the hypervisor serializes first-touch page faults across the whole
-    box, so 32 concurrent Python workers measure paging contention, not
-    the job (walls at 32 fenced cores exceed 8-core walls with ~97% system
-    time).  A real cluster adds *machines* — page-fault serialization does
-    not span nodes.
-
-    Corpus size matters for what the measurement MEANS: the pipeline has a
-    ~10 s parallelism-independent floor (driver planning, stage barriers,
-    the driver union-find) that is amortized at production data volumes but
-    dominates a 1-minute toy run.  The bench therefore sizes the corpus so
-    per-level work is in the minutes, the regime the 10^12-file north rule
-    actually describes — scaling efficiency of a 20-second run measures
-    Spark's fixed latencies, not the job.
-    """
-    data = os.environ.get("SPARK_GRAFT_BENCH_DIR", "/tmp/fms-bench-corpus")
-    rows = _ensure_corpus(data, n_base)
-
-    env = dict(os.environ)
-    env["PYTHONUNBUFFERED"] = "1"
-    # big-corpus runs cache signatures + two content copies; the 8g default
-    # heap GC-thrashes at 330k docs (measured), and heap size is a per-
-    # executor constant on a real cluster, not something that varies with
-    # cluster SIZE — so pinning it across levels is the faithful setup
-    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-
-    pairs = [(n, 4 * n) for n in LEVELS if 4 * n in LEVELS]
-    if not pairs:
-        raise SystemExit(
-            f"SPARK_GRAFT_BENCH_LEVELS={','.join(map(str, LEVELS))} contains no "
-            "(N, 4N) pair — add levels like 2,8 or 1,2,4,8 so a scaling "
-            "efficiency can be computed."
-        )
-
-    def spawn(cores: int, cpuset: str):
-        errlog = open(f"/tmp/fms-scaling-{cores}.stderr", "w")
-        proc = subprocess.Popen(
-            ["taskset", "-c", cpuset, sys.executable,
-             os.path.abspath(__file__), "--run-paired",
-             "--cores", str(cores), "--data", data, "--job", job],
-            stdin=subprocess.PIPE, stdout=subprocess.PIPE, stderr=errlog,
-            text=True, bufsize=1, cwd=REPO, env=env,
-        )
-        return proc
-
-    def wait_ready(proc):
-        for line in proc.stdout:
-            if line.startswith("READY"):
-                return int(line.split()[1])
-        raise SystemExit(
-            f"paired child died before READY (rc={proc.poll()}); see its "
-            "/tmp/fms-scaling-*.stderr log"
-        )
-
-    def timed_pass(proc):
-        proc.stdin.write("GO\n")
-        proc.stdin.flush()
-        for line in proc.stdout:
-            if line.startswith("WALL"):
-                parts = line.split(None, 5)
-                phases = json.loads(parts[5]) if len(parts) > 5 else None
-                return float(parts[1]), int(parts[3]), phases
-        raise SystemExit(f"paired child died mid-pass (rc={proc.poll()})")
-
-    pair_results = []  # per pair: dict with rounds, medians, clusters
-    all_clusters = set()
-    for n, m in pairs:
-        # inter-pair hygiene: a prior pair's tens-of-GB churn leaves the
-        # host reclaiming pages, and in this sandbox reclaim serializes
-        # first-touch faults — dropping the page cache + settling returns
-        # the box to the quiet-box state each pair deserves.
-        try:
-            with open("/proc/sys/vm/drop_caches", "w") as dc:
-                os.sync()
-                dc.write("3")
-            time.sleep(15)
-        except OSError:
-            pass  # not privileged: measure anyway, all rounds are reported
-        cpuset_a = "0" if n == 1 else f"0-{n - 1}"
-        cpuset_b = f"{n}-{n + m - 1}"
-        pa, pb = spawn(n, cpuset_a), spawn(m, cpuset_b)
-        try:
-            # warmups run concurrently on the disjoint fences (untimed)
-            rows_a = wait_ready(pa)
-            rows_b = wait_ready(pb)
-            assert rows_a == rows_b == rows
-            rounds = []
-            for i in range(ROUNDS):
-                order = [(pa, n), (pb, m)] if i % 2 == 0 else [(pb, m), (pa, n)]
-                walls = {}
-                clusters = {}
-                phases_by_core = {}
-                for proc, cores in order:
-                    # inter-pass hygiene: flush the PREVIOUS pass's dirty
-                    # shuffle pages now (untimed, in the parent's slot) and
-                    # settle, so kernel writeback does not run inside the
-                    # next member's timed window.  Measured: without this,
-                    # an 8-core pass read 67-69 s right after a 2-core pass
-                    # vs 41-46 s when it ran first in the round — the
-                    # sibling's ~GBs of dirty pages were being written back
-                    # during its window.  sync keeps the page cache WARM
-                    # (unlike drop_caches), so no cold-read penalty.
-                    os.sync()
-                    time.sleep(5)
-                    walls[cores], clusters[cores], ph = timed_pass(proc)
-                    phases_by_core[cores] = ph
-                all_clusters.update(clusters.values())
-                eff = round((walls[n] / walls[m]) / 4.0, 3)
-                rounds.append(
-                    {"order": "AB" if i % 2 == 0 else "BA",
-                     f"t{n}": walls[n], f"t{m}": walls[m], "eff": eff,
-                     **({f"p{n}": phases_by_core[n], f"p{m}": phases_by_core[m]}
-                        if phases_by_core.get(n) and phases_by_core.get(m) else {})}
-                )
-                print(json.dumps({"pair": f"{n}->{m}", **rounds[-1]}),
-                      file=sys.stderr)
-        finally:
-            for proc in (pa, pb):
-                try:
-                    proc.stdin.write("EXIT\n")
-                    proc.stdin.flush()
-                except OSError:
-                    pass
-            for proc in (pa, pb):
-                proc.wait(timeout=120)
-        # PRIMARY estimator: ratio of per-level FLOORS, each floor the
-        # median of that level's three fastest rounds.  Box noise here is
-        # strictly additive and heavy-tailed (a stall only ever ADDS wall),
-        # so per-round ratios are biased DOWN — the same absolute stall is
-        # a larger relative hit on the shorter 4N wall (measured: per-round
-        # effs 0.49-0.62 in a window whose per-level floors gave 0.86).
-        # The floor (fastest passes) is the consistent estimate of the
-        # job's own wall, and interleaving guarantees both levels sample
-        # the SAME box window, which is what the blocked protocol lacked.
-        # Median-of-round-ratios is reported alongside as the
-        # phase-robust cross-check.
-        f3n = sorted(r[f"t{n}"] for r in rounds)[:3]
-        f3m = sorted(r[f"t{m}"] for r in rounds)[:3]
-        floor_n = f3n[min(1, len(f3n) - 1)]
-        floor_m = f3m[min(1, len(f3m) - 1)]
-        floor_eff = round((floor_n / floor_m) / 4.0, 3)
-        effs_sorted = sorted(r["eff"] for r in rounds)
-        med_eff = effs_sorted[len(effs_sorted) // 2]
-        # per-phase floors per level (same estimator as the walls: median of
-        # that phase's 3 smallest readings across rounds) — the wall
-        # attribution the composite ceiling weighs in _finish_scaling
-        phase_floors = {}
-        for lvl in (n, m):
-            per_phase: dict = {}
-            for r in rounds:
-                for ph, w in (r.get(f"p{lvl}") or {}).items():
-                    per_phase.setdefault(ph, []).append(w)
-            if per_phase:
-                phase_floors[str(lvl)] = {
-                    ph: sorted(ws)[:3][min(1, len(ws) - 1)]
-                    for ph, ws in per_phase.items()
-                }
-        pair_results.append(
-            {"n": n, "m": m, "rounds": rounds, "floor_eff": floor_eff,
-             "median_ratio_eff": med_eff,
-             "floor_tn": floor_n, "floor_tm": floor_m,
-             "fastest3_tn": f3n, "fastest3_tm": f3m,
-             "phase_floors": phase_floors}
-        )
-
-    # raw results persist to BENCH/scaling_raw*.json so the artifact can be
-    # re-rendered (e.g. re-normalized against a calibration measured later
-    # in the same box phase) WITHOUT repeating the hours-long measurement:
-    # `bench.py --renormalize` reloads them and rewrites BASELINE.md.
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    raw_name = {"dedup": "scaling_raw.json", "null": "scaling_raw_null.json",
-                "shuffle": "scaling_raw_shuffle.json"}[job]
-    with open(os.path.join(REPO, "BENCH", raw_name), "w") as f:
-        json.dump({"rows": rows, "protocol": PROTOCOL_NAME, "rounds": ROUNDS,
-                   "job": job, "pairs": pair_results,
-                   "clusters": sorted(all_clusters)}, f, indent=1)
-    _finish_scaling(rows, pair_results, sorted(all_clusters), job)
-
-
-def _load_calibration(fname, rows):
-    """Load a calibration json, refusing one whose corpus or protocol does
-    not match the run being normalized (ADVICE r4: a ceiling measured on a
-    different corpus size or measurement protocol does not transfer)."""
-    path = os.path.join(REPO, "BENCH", fname)
-    if not os.path.exists(path):
-        return None
-    with open(path) as cf:
-        cal = json.load(cf)
-    if cal.get("rows") != rows or cal.get("protocol") != PROTOCOL_NAME:
-        print(
-            f"WARNING: BENCH/{fname} is stale "
-            f"(rows={cal.get('rows')} vs {rows}, "
-            f"protocol={cal.get('protocol')!r} vs {PROTOCOL_NAME!r}); "
-            "skipping it — rerun `bench.py --scaling --job null/shuffle` "
-            "to recalibrate.",
-            file=sys.stderr,
-        )
-        return None
-    return cal
-
-
-# Classification of the pipeline's barrier phases by which calibration
-# instrument matches their execution shape — BY CONSTRUCTION, not by
-# outcome.  "cpu": the wall is Arrow-batched Python work in a narrow
-# stage (the null job's shape).  "exchange": the wall is bytes moving
-# through Spark's exchange/cache machinery — shuffle writes+fetches,
-# wide aggregations, cache fills — with JVM-side compute (the shuffle
-# job's shape).  "serial": driver-side single-threaded work; it gets
-# ceiling 1.0 because its failure to scale is the JOB's own property
-# (a real cluster has one driver too), never the box's.
-PHASE_KIND = {
-    "ingest.tag": "exchange",          # full-corpus window shuffle + cache fill
-    "minhash.sig8": "cpu",             # mapInPandas signatures (Python/Arrow)
-    "minhash.estimate": "exchange",    # band explode + bucket shuffle + O(pairs) cache fill
-    "minhash.ambiguous_pairs": "exchange",
-    "edges.total_edges": "exchange",   # edge-union shuffle + cache fill
-    "cluster.components": "serial",    # driver union-find (bounded fast path)
-    "cluster.finalize": "exchange",    # clusters join + distinct count
-}
-
-
-def _phase_table(p):
-    """Render a pair's per-phase wall attribution (floors at both levels,
-    per-phase efficiency, instrument classification) for BASELINE.md."""
-    pf_n = (p.get("phase_floors") or {}).get(str(p["n"]))
-    pf_m = (p.get("phase_floors") or {}).get(str(p["m"]))
-    if not (pf_n and pf_m):
-        return ""
-    n, m = p["n"], p["m"]
-    out = (
-        f"\n\nPhase attribution (per-phase floors, same estimator as the "
-        f"walls):\n\n| phase | kind | T{n} (s) | T{m} (s) | phase eff |\n"
-        "|---|---|---|---|---|\n"
-    )
-    for ph in sorted(set(pf_n) | set(pf_m), key=lambda k: -pf_m.get(k, 0.0)):
-        wn, wm = pf_n.get(ph), pf_m.get(ph)
-        eff = round(wn / wm / 4.0, 2) if wn and wm else None
-        out += (f"| {ph} | {PHASE_KIND.get(ph, 'serial')} | {wn} | {wm} "
-                f"| {eff} |\n")
-    resid_n = round(p["floor_tn"] - sum(pf_n.values()), 2)
-    resid_m = round(p["floor_tm"] - sum(pf_m.values()), 2)
-    out += (f"| (unattributed: driver planning, job submission) | serial "
-            f"| {resid_n} | {resid_m} | — |\n")
-    return out
-
-
-def _finish_scaling(rows, pair_results, clusters, job):
-    """Normalize, summarize and write the BENCH artifact for one scaling
-    run — separated from the measurement loop so ``--renormalize`` can
-    re-render a persisted run against a newer calibration."""
-    # gate on the WORST pair's floor estimate (ADVICE r3: never cherry-pick
-    # a pair)
-    worst = min(p["floor_eff"] for p in pair_results)
-
-    # Box-normalized efficiency.  A job that is perfectly parallel in
-    # every phase would NOT measure 1.0 on this box: its CPU-bound phases
-    # can at best show the null-job ceiling and its exchange-bound phases
-    # the shuffle-job ceiling (both measured under the identical paired
-    # fenced protocol; BENCH/CALIBRATION*.md).  The composite ceiling is
-    # that perfect job's reading with THIS pipeline's work mix: each
-    # phase's measured share of the 4N wall weighs its instrument's
-    # ceiling; driver-serial phases and unattributed wall weigh 1.0 — the
-    # pipeline gets no excuse for its own serial sections.  raw/composite
-    # is then the job's own N -> 4N scaling with the box's instrument
-    # error divided out — the faithful cluster estimate, since a real
-    # cluster adds a memory subsystem and exchange data path with every
-    # node and both ceilings are ~1.0 there.
-    cal = cal_sh = None
-    if job == "dedup":
-        cal = _load_calibration("calibration.json", rows)
-        cal_sh = _load_calibration("calibration_shuffle.json", rows)
-    for p in pair_results:
-        key = f"{p['n']}->{p['m']}"
-        ceil_cpu = (cal or {}).get("ceilings", {}).get(key)
-        ceil_ex = (cal_sh or {}).get("ceilings", {}).get(key)
-        pf = (p.get("phase_floors") or {}).get(str(p["m"]))
-        ceil = None
-        if pf and ceil_cpu and ceil_ex:
-            attributed = sum(pf.values())
-            resid = max(0.0, p["floor_tm"] - attributed)
-            num = resid * 1.0
-            for ph, w in pf.items():
-                kind = PHASE_KIND.get(ph, "serial")
-                num += w * (ceil_cpu if kind == "cpu"
-                            else ceil_ex if kind == "exchange" else 1.0)
-            ceil = round(num / (attributed + resid), 3)
-            p["ceiling_kind"] = "composite(cpu+exchange, 4N-wall-weighted)"
-        elif ceil_cpu:
-            # no phase attribution or no shuffle instrument: fall back to
-            # the flat null-job ceiling (the pre-r5 behavior)
-            ceil = ceil_cpu
-            p["ceiling_kind"] = "null-flat"
-        p["ceiling"] = ceil
-        p["ceiling_cpu"] = ceil_cpu
-        p["ceiling_exchange"] = ceil_ex
-        p["norm_eff"] = (round(min(p["floor_eff"] / ceil, 1.0), 3)
-                         if ceil else None)
-    norm_effs = [p["norm_eff"] for p in pair_results if p["norm_eff"]]
-    worst_norm = min(norm_effs) if norm_effs else None
-
-    level_walls = {}
-    for p in pair_results:
-        level_walls[p["n"]] = p["floor_tn"]
-        level_walls[p["m"]] = p["floor_tm"]
-    summary = {
-        "metric": ("scaling_ceiling_N_to_4N_cores" if job == "null"
-                   else "scaling_efficiency_N_to_4N_cores"),
-        "value": worst,
-        "unit": "ratio",
-        "queries": {
-            **{f"dedup_fenced{c}_files_per_sec": round(rows / w, 1)
-               for c, w in sorted(level_walls.items())},
-            **{f"dedup_fenced{c}_sec": w for c, w in sorted(level_walls.items())},
-            **{f"scaling_efficiency_{p['n']}_to_{p['m']}_cores": p["floor_eff"]
-               for p in pair_results},
-            **{f"median_round_ratio_eff_{p['n']}_to_{p['m']}": p["median_ratio_eff"]
-               for p in pair_results},
-            **({f"box_normalized_eff_{p['n']}_to_{p['m']}": p["norm_eff"]
-                for p in pair_results if p.get("norm_eff")} if job != "null" else {}),
-        },
-        "sf": rows,
-        "rounds": ROUNDS,
-        "protocol": PROTOCOL_NAME,
-    }
-    print(json.dumps(summary))
-
-    identical = len(set(clusters)) == 1
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    met = "meets" if worst >= 0.8 else "MISSES"
-    if job == "null":
-        _write_calibration_md(rows, pair_results, worst, level_walls)
-        return
-    if job == "shuffle":
-        _write_shuffle_calibration_md(rows, pair_results, level_walls)
-        return
-    pair_tables = ""
-    for p in pair_results:
-        n, m = p["n"], p["m"]
-        pair_tables += (
-            f"### Pair N={n} -> 4N={m} (fences: cores 0-{n - 1} vs {n}-{n + m - 1})\n\n"
-            f"| round | order | T{n} (s) | T{m} (s) | eff (T{n}/T{m})/4 |\n"
-            "|---|---|---|---|---|\n"
-            + "".join(
-                f"| {i + 1} | {r['order']} | {r[f't{n}']} | {r[f't{m}']} | {r['eff']} |\n"
-                for i, r in enumerate(p["rounds"])
-            )
-            + f"\n**Floor efficiency {n} -> {m}: {p['floor_eff']}** "
-            f"(floors {p['floor_tn']} s / {p['floor_tm']} s = medians of the "
-            f"fastest 3 rounds {p['fastest3_tn']} / {p['fastest3_tm']}; "
-            f"cross-check median of per-round ratios: {p['median_ratio_eff']})"
-            + (f"\n**Box-normalized {n} -> {m}: {p['norm_eff']}** "
-               f"(ceiling {p['ceiling']}, {p.get('ceiling_kind', 'null-flat')}; "
-               f"instruments: cpu {p.get('ceiling_cpu')}, "
-               f"exchange {p.get('ceiling_exchange')} — "
-               "BENCH/CALIBRATION.md, BENCH/CALIBRATION_SHUFFLE.md)"
-               if p.get("norm_eff") else "")
-            + _phase_table(p)
-            + "\n\n"
-        )
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(
-            "# BENCH/BASELINE — scaling evidence (sandbox stand-in for N vs 4N executors)\n\n"
-            f"Deterministic synthetic code corpus (seed=42): **{rows} files**.\n"
-            "Same job (MinHash dedup pipeline, DedupConfig defaults), same input.\n\n"
-            "**PAIRED protocol**: each (N, 4N) pair runs as two long-lived\n"
-            "CPU-fenced JVMs on DISJOINT cpusets (`taskset -c 0..N-1` vs\n"
-            "`taskset -c N..5N-1`), each warmed with CONVERGENCE-GATED\n"
-            "untimed passes (until the latest warm pass is within 5% of\n"
-            "that member's fastest; >= 3 passes, cap 8; warm walls logged\n"
-            "to the member's stderr) — warm-in length scales with the\n"
-            "level's wall in this sandbox, so a fixed warm-pass count\n"
-            "leaves the slow member mid-warm-in and skews the ratio;\n"
-            f"then {ROUNDS} timed rounds alternate between them, adjacently in\n"
-            "box time, with the in-round order flipped every round (A,B /\n"
-            "B,A).  The PRIMARY efficiency estimate is the ratio of per-level\n"
-            "FLOORS — each floor the median of that level's three fastest\n"
-            "rounds — because box noise here is strictly additive and\n"
-            "heavy-tailed (a stall only ever ADDS wall), which biases\n"
-            "per-round ratios DOWN: the same absolute stall is a larger\n"
-            "relative hit on the shorter 4N wall (measured: per-round effs\n"
-            "0.49-0.62 in a window whose per-level floors gave 0.86).  The\n"
-            "interleaving is what makes the two floors comparable: both\n"
-            "levels sample the SAME box window, which the old blocked\n"
-            "protocol could not guarantee.  The median of per-round ratios\n"
-            "is reported per pair as a cross-check.\n\n"
-            "Why paired: this sandbox's contention phase swings identical\n"
-            "passes 2-4x within minutes (measured: the same fenced 8-core\n"
-            "pass 43 s and 107 s back to back; a 2-core pass 985.8 s between\n"
-            "133 s neighbors).  A blocked protocol (all of level N, then all\n"
-            "of level 4N) compares two different box phases, and no amount\n"
-            "of per-level pooling removes that bias — the r4 replication run\n"
-            "measured pooled 2->8 efficiencies of 1.174 and 0.783 for the\n"
-            "SAME code, a spread entirely attributable to phase drift.\n"
-            "Pairing makes phase noise multiply both sides of each round's\n"
-            "ratio nearly equally, so it cancels in the ratio; the median\n"
-            "over rounds drops rounds a stall hit asymmetrically; and the\n"
-            "alternating order balances slow drift within rounds.  Every\n"
-            "round is listed below — nothing is discarded silently.\n\n"
-            "Why fenced: on a real cluster an executor's Python workers share its\n"
-            "cgroup CPU allocation (k8s pod limit / YARN container), so an N-core\n"
-            "executor = N cores total for JVM + Python.  Unfenced local[N] leaks\n"
-            "extra host cores to Python workers — proportionally more at small N —\n"
-            "which deflates the ratio (round-2's unfenced 2 -> 8 read 0.542 for\n"
-            "this reason, not because the job stopped scaling).  Fenced, every\n"
-            "level runs N task threads + N Python workers on exactly N cores:\n"
-            "the same per-core regime an executor sees at any cluster size.  The\n"
-            "pair members' fences are disjoint, so the idle member cannot\n"
-            "perturb the running one.\n\n"
-            "Why this corpus size: the pipeline has a ~10 s parallelism-\n"
-            "independent floor (driver planning, stage-barrier latencies, the\n"
-            "driver union-find) that production data volumes amortize.  At a\n"
-            "66k-file toy size that floor is ~half the 8-core wall, so the\n"
-            "measured 'efficiency' is Spark's fixed latency, not the job\n"
-            "(measured 0.61 at 66k files).  The bench sizes per-level work\n"
-            "into the minutes — the regime the 10^12-file north rule\n"
-            "describes.\n\n"
-            + pair_tables
-            + f"Worst N -> 4N pair (raw floor estimate): {worst} — {met} the >= 0.8 target"
-            " in BASELINE.json as read on THIS box (gated on the minimum across all"
-            " configured pairs, never a cherry-pick).\n"
-            + (
-                f"\n**Worst pair box-normalized: {worst_norm} — "
-                f"{'meets' if worst_norm >= 0.8 else 'MISSES'} the >= 0.8 target.**\n"
-                "Normalization divides each pair's raw efficiency by this box's\n"
-                "measured scaling CEILING for that pair — what a job that is\n"
-                "PERFECTLY parallel in every phase would read on this box with\n"
-                "this pipeline's work mix.  Two instruments, both measured under\n"
-                "the IDENTICAL paired fenced protocol on the same corpus: a\n"
-                "CPU-bound null job (one narrow mapInPandas stage, zero shuffle,\n"
-                "zero barrier — BENCH/CALIBRATION.md) and an exchange-bound job\n"
-                "(unique-key hash aggregation across one full shuffle, zero\n"
-                "Python, zero skew — BENCH/CALIBRATION_SHUFFLE.md).  Both are\n"
-                "embarrassingly parallel by construction, yet neither reads 1.0\n"
-                "here: all fenced levels share ONE memory subsystem and ONE\n"
-                "hypervisor page-fault path, a tax that does not exist across\n"
-                "machines on a real cluster, where every added node brings its\n"
-                "own memory channels, NICs and disks.  The composite ceiling\n"
-                "weighs each instrument by the matching pipeline phases' share\n"
-                "of the 4N wall (classification BY SHAPE, in bench.py\n"
-                "PHASE_KIND: Python/Arrow narrow stages -> cpu; shuffle/cache\n"
-                "traffic -> exchange); driver-serial phases and unattributed\n"
-                "wall weigh ceiling 1.0, so the pipeline's OWN serial sections\n"
-                "are never excused.  raw/composite is the job's own N -> 4N\n"
-                "scaling with the box's instrument error divided out.\n\n"
-                if worst_norm is not None else "\n"
-            )
-            + "Throughput at the per-level floor walls:\n\n"
-            "| fenced cores | floor wall (s) | files/sec |\n|---|---|---|\n"
-            + "".join(
-                f"| {c} | {w} | {round(rows / w, 1)} |\n"
-                for c, w in sorted(level_walls.items())
-            )
-            + "\nLevels above 8 fenced cores are unusable as evidence in this sandbox:\n"
-            "the hypervisor serializes first-touch page faults box-wide, so 32\n"
-            "concurrent Python workers measure paging contention (~97% system\n"
-            "time), not the job.  A real cluster adds machines; page-fault\n"
-            "serialization does not span nodes.\n\n"
-            f"Determinism check: cluster counts across all levels, rounds and\n"
-            f"pairs — {sorted(set(clusters))} "
-            f"({'identical' if identical else 'MISMATCH'}).\n"
-        )
-
-
-def _write_shuffle_calibration_md(rows, pair_results, level_walls) -> None:
-    """BENCH/CALIBRATION_SHUFFLE.md: the box's shuffle-path scaling ceiling.
-
-    Companion instrument to the CPU-bound null job (CALIBRATION.md): an
-    embarrassingly data-parallel job whose cost is almost entirely the
-    exchange data path (see ``run_paired_child`` job="shuffle").  It never
-    normalizes the pipeline number WHOLESALE — it supplies the ceiling for
-    the pipeline's exchange-bound PHASES in the phase-weighted composite
-    (see ``_finish_scaling``), weighted by those phases' measured share of
-    the 4N wall; CPU-bound phases use the null ceiling and serial/
-    unattributed wall gets ceiling 1.0 (no excuse).
-    """
-    pair_tables = ""
-    for p in pair_results:
-        n, m = p["n"], p["m"]
-        pair_tables += (
-            f"### Pair N={n} -> 4N={m}\n\n"
-            f"| round | order | T{n} (s) | T{m} (s) | eff |\n|---|---|---|---|---|\n"
-            + "".join(
-                f"| {i + 1} | {r['order']} | {r[f't{n}']} | {r[f't{m}']} | {r['eff']} |\n"
-                for i, r in enumerate(p["rounds"])
-            )
-            + f"\n**Shuffle ceiling (floor estimate) {n} -> {m}: {p['floor_eff']}** "
-            f"(floors {p['floor_tn']} s / {p['floor_tm']} s; cross-check "
-            f"median of per-round ratios: {p['median_ratio_eff']})\n\n"
-        )
-    with open(os.path.join(REPO, "BENCH", "calibration_shuffle.json"), "w") as f:
-        json.dump(
-            {"rows": rows,
-             "protocol": PROTOCOL_NAME,
-             "expand": SHUFFLE_EXPAND,
-             "ceilings": {f"{p['n']}->{p['m']}": p["floor_eff"]
-                          for p in pair_results},
-             "floors": {f"{p['n']}->{p['m']}": [p["floor_tn"], p["floor_tm"]]
-                        for p in pair_results}},
-            f, indent=1,
-        )
-    with open(os.path.join(REPO, "BENCH", "CALIBRATION_SHUFFLE.md"), "w") as f:
-        f.write(
-            "# BENCH/CALIBRATION_SHUFFLE — this box's shuffle-path scaling ceiling\n\n"
-            f"Exchange-bound calibration job over the same {rows}-file corpus:\n"
-            f"expand each row x{SHUFFLE_EXPAND} with unique 64-bit keys + a\n"
-            f"128-byte payload, hash-aggregate across one full shuffle\n"
-            f"(~{round(rows * SHUFFLE_EXPAND * 136 / 1e9, 1)} GB through the exchange;\n"
-            "keys unique so the map side cannot combine), count groups.  No\n"
-            "Python, no cache, no skew, no driver work — embarrassingly\n"
-            "data-parallel, measured under the IDENTICAL paired fenced protocol\n"
-            "as BENCH/BASELINE.md.\n\n"
-            "On a real cluster this job scales ~1.0 (N -> 4N adds NICs, disks\n"
-            "and memory channels with the nodes).  On this box all levels share\n"
-            "ONE memory subsystem, so the reading below is the achievable\n"
-            "CEILING for the shuffle-bound PHASES of any job under this\n"
-            "protocol.  The CPU-bound null instrument (BENCH/CALIBRATION.md)\n"
-            "cannot see this limit — the two instruments bracket a real job:\n"
-            "its attainable box efficiency is a work-mix-weighted blend of the\n"
-            "CPU ceiling and this shuffle ceiling.  BENCH/BASELINE.md computes\n"
-            "exactly that blend: a composite ceiling weighted by each measured\n"
-            "pipeline phase's share of the 4N wall (exchange-bound phases use\n"
-            "this ceiling, CPU-bound phases the null ceiling, serial and\n"
-            "unattributed wall ceiling 1.0 — i.e. no excuse), and reports the\n"
-            "pipeline's raw reading FIRST, the composite-normalized one second.\n\n"
-            + pair_tables
-            + "\nThroughput at the per-level floor walls:\n\n"
-            "| fenced cores | floor wall (s) | rows/sec |\n|---|---|---|\n"
-            + "".join(
-                f"| {c} | {w} | {round(rows / w, 1)} |\n"
-                for c, w in sorted(level_walls.items())
-            )
-        )
-
-
-def _write_calibration_md(rows, pair_results, worst, level_walls) -> None:
-    """BENCH/CALIBRATION.md: the box's measured parallel-scaling CEILING.
-
-    The null job is perfectly parallel by construction — one narrow stage
-    of Arrow-batched Python hashing, no shuffle, no stage barrier, no
-    driver-side serial section.  On ideal hardware its N -> 4N efficiency
-    is 1.0; whatever it measures HERE is the maximum any job can show under
-    this protocol on this box, because every mechanism that could slow it
-    (shared memory bandwidth, hypervisor page-fault serialization, cpuset-
-    external kernel threads) applies at least as strongly to a real job.
-    The pipeline's efficiency should therefore be read RELATIVE to this
-    ceiling: pipeline_eff / ceiling_eff is the job's own scaling with the
-    instrument error divided out — on a real cluster the ceiling is ~1.0
-    because added machines bring their own memory subsystem.
-    """
-    pair_tables = ""
-    for p in pair_results:
-        n, m = p["n"], p["m"]
-        pair_tables += (
-            f"### Pair N={n} -> 4N={m}\n\n"
-            f"| round | order | T{n} (s) | T{m} (s) | eff |\n|---|---|---|---|---|\n"
-            + "".join(
-                f"| {i + 1} | {r['order']} | {r[f't{n}']} | {r[f't{m}']} | {r['eff']} |\n"
-                for i, r in enumerate(p["rounds"])
-            )
-            + f"\n**Ceiling (floor estimate) {n} -> {m}: {p['floor_eff']}** "
-            f"(floors {p['floor_tn']} s / {p['floor_tm']} s; cross-check "
-            f"median of per-round ratios: {p['median_ratio_eff']})\n\n"
-        )
-    with open(os.path.join(REPO, "BENCH", "calibration.json"), "w") as f:
-        json.dump(
-            {"rows": rows,
-             "protocol": PROTOCOL_NAME,
-             "ceilings": {f"{p['n']}->{p['m']}": p["floor_eff"]
-                          for p in pair_results},
-             "floors": {f"{p['n']}->{p['m']}": [p["floor_tn"], p["floor_tm"]]
-                        for p in pair_results}},
-            f, indent=1,
-        )
-    with open(os.path.join(REPO, "BENCH", "CALIBRATION.md"), "w") as f:
-        f.write(
-            "# BENCH/CALIBRATION — this box's parallel-scaling ceiling\n\n"
-            f"Null job over the same {rows}-file corpus: one narrow stage of\n"
-            "Arrow-batched Python work (1000x iterated sha256 per row via\n"
-            "`mapInPandas`), zero shuffle, zero stage barrier, zero driver-side\n"
-            "serial section — perfectly parallel by construction.  Measured\n"
-            "under the IDENTICAL paired protocol as BENCH/BASELINE.md (two\n"
-            "long-lived CPU-fenced JVMs on disjoint cpusets, alternating timed\n"
-            "passes, floor = median of the three fastest rounds).\n\n"
-            "On ideal hardware this job's N -> 4N efficiency is 1.0.  What it\n"
-            "measures here is the CEILING any job can show on this box: the\n"
-            "shared memory subsystem and the hypervisor's box-wide page-fault\n"
-            "serialization tax concurrent cores regardless of what they run.\n"
-            "A real cluster is NOT subject to this ceiling — scaling out adds\n"
-            "machines, each with its own memory subsystem — so the pipeline's\n"
-            "box-normalized efficiency (pipeline / ceiling, per pair) is the\n"
-            "faithful estimate of its cluster scaling.\n\n"
-            + pair_tables
-            + f"Worst-pair ceiling: {worst}\n\n"
-            "| fenced cores | floor wall (s) | rows/sec |\n|---|---|---|\n"
-            + "".join(
-                f"| {c} | {w} | {round(rows / w, 1)} |\n"
-                for c, w in sorted(level_walls.items())
-            )
-        )
-
-
-# ---------------------------------------------------------------------------
 # matcher mode
 # ---------------------------------------------------------------------------
 
@@ -1032,7 +139,8 @@ def run_matcher() -> None:
     Protocol mirrors the r2/r3 hand measurements: full match_and_consolidate
     (both outputs counted = two result actions + consolidation joins) on the
     n=1000 distorted-persons fixture per scorer, 3 runs each in one session,
-    warm = min of runs 2-3; plus the n=10000 RATIO flow for the
+    warm = min of runs 2-3; plus RATIO at n=1000 with the driver-local gate
+    off (what the gate saves) and the n=10000 RATIO flow for the
     sublinearity check."""
     from fuzzy_matching_spark.config import (
         FuzzyAlgorithm, MatchConfig, MatchFieldConfig,
@@ -1052,7 +160,7 @@ def run_matcher() -> None:
             MatchFieldConfig("email", 0.1),
         ]
 
-    def measure(n: int, algo: FuzzyAlgorithm) -> tuple[float, list[float], int]:
+    def measure(n: int, algo: FuzzyAlgorithm, **matcher_kw) -> tuple[float, list[float], int, str]:
         orig, var = generate_person_pair(n, seed=42)
         # pandas-built frames: Arrow local relations evaluate JVM-side like
         # the file-backed frames real flows read; list-built frames replay a
@@ -1067,7 +175,7 @@ def run_matcher() -> None:
         )
         walls, n_matches, strategy = [], 0, "?"
         for _ in range(3):
-            m = SparkMatcher(cfg)
+            m = SparkMatcher(cfg, **matcher_kw)
             t0 = time.time()
             matches, cons = m.match_and_consolidate(d1, d2)
             n_matches = matches.count()
@@ -1091,6 +199,7 @@ def run_matcher() -> None:
     rows = {}
     for algo in scorers:
         rows[algo.value] = measure(1000, algo)
+    dist = measure(1000, FuzzyAlgorithm.RATIO, driver_match_max_rows=0)
     big = measure(10000, FuzzyAlgorithm.RATIO)
 
     ratio_w = rows["ratio"][0]
@@ -1101,6 +210,7 @@ def run_matcher() -> None:
         "unit": "sec",
         "queries": {
             **{f"n1000_{k}_warm_sec": v[0] for k, v in rows.items()},
+            "n1000_ratio_distributed_warm_sec": dist[0],
             "n10000_ratio_warm_sec": big[0],
             "partial_ratio_over_ratio": partial_x,
         },
@@ -1108,10 +218,11 @@ def run_matcher() -> None:
     }
     print(json.dumps(summary))
 
+    master = spark.sparkContext.master
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "MATCHER.md"), "w") as f:
         f.write(
-            "# Matcher latency — distorted persons, local[32], warm\n\n"
+            f"# Matcher latency — distorted persons, {master}, warm\n\n"
             "Auto-generated by `python bench.py --matcher` (protocol: full\n"
             "`match_and_consolidate`, BOTH outputs counted — two result actions\n"
             "+ consolidation joins; 3 runs per scorer in one warmed session;\n"
@@ -1120,65 +231,37 @@ def run_matcher() -> None:
             "driver-local batched kernel (operators/local_match.py — small\n"
             "inputs are pure stage latency on the distributed plan),\n"
             "`distributed` = the executor-parallel plan that production\n"
-            "sizes take (n=10000 exceeds the 4096-row gate).\n\n"
+            "sizes take (n=10000 exceeds the 4096-row gate; the second\n"
+            "RATIO n=1000 row turns the gate off with\n"
+            "`driver_match_max_rows=0`).\n\n"
             "| scorer | n | strategy | warm wall (s) | all walls (s) | matches |\n"
             "|---|---|---|---|---|---|\n"
             + "".join(
                 f"| {k.upper()} | 1000 | {v[3]} | {v[0]} | {v[1]} | {v[2]} |\n"
                 for k, v in rows.items()
             )
+            + f"| RATIO | 1000 | {dist[3]} | {dist[0]} | {dist[1]} | {dist[2]} |\n"
             + f"| RATIO | 10000 | {big[3]} | {big[0]} | {big[1]} | {big[2]} |\n\n"
             f"PARTIAL_RATIO / RATIO at n=1000: **{partial_x}x** "
             "(r2 bar: <= 1.5x; the reference itself pays 1.33x — "
             "0.0991 / 0.0744 s, benchmark_results_table.txt:39-40).\n\n"
-            "Sublinearity: the n=10000 flow runs the same fixed number of\n"
-            "Spark jobs — wall stays within a small multiple of n=1000 while\n"
-            "the data grows 10x, confirming the small-n wall is fixed\n"
-            "per-job latency (which production-size inputs amortize), not\n"
-            "scoring cost.  Absolute walls on this sandbox swing 2-3x with\n"
-            "host-side contention; compare scorers within one file, not\n"
-            "across rounds.\n"
+            "Sublinearity: the two `distributed` RATIO rows run the\n"
+            "distributed plan on 10x different data (n=1000 in its\n"
+            "small-input shape, `SMALL_ROWS`), so their ratio separates\n"
+            "fixed per-job latency (which production-size inputs amortize)\n"
+            "from scoring cost.  Absolute walls on a shared host swing 2-3x\n"
+            "with contention; compare rows within one file, not across\n"
+            "files.\n"
         )
     spark.stop()
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--renormalize", action="store_true",
-                    help="re-render BENCH/BASELINE.md from the persisted "
-                         "BENCH/scaling_raw.json against the current "
-                         "calibration.json, without re-measuring")
-    ap.add_argument("--matcher", action="store_true")
-    ap.add_argument("--run-paired", action="store_true")
-    ap.add_argument("--cores", type=int, default=8)
-    ap.add_argument("--data", type=str, default="/tmp/fms-bench-corpus")
-    ap.add_argument("--n-base", type=int,
-                    # 120000 base files -> 264471 rows: the corpus size every
-                    # committed BENCH artifact (BASELINE/CALIBRATION) uses, so
-                    # a bare `bench.py --scaling` reproduces them
-                    default=int(os.environ.get("SPARK_GRAFT_BENCH_NBASE", "120000")))
-    ap.add_argument("--job", choices=("dedup", "null", "shuffle"), default="dedup",
-                    help="'null' = perfectly-parallel CPU calibration job "
-                         "(box core-scaling ceiling); 'shuffle' = exchange-"
-                         "bound calibration job (box shuffle-path ceiling); "
-                         "default = the dedup pipeline")
+    ap.add_argument("--matcher", action="store_true",
+                    help="matcher latency per scorer -> BENCH/MATCHER.md")
     args = ap.parse_args()
-
-    if args.run_paired:
-        run_paired_child(args.cores, args.data, args.job)
-    elif args.renormalize:
-        with open(os.path.join(REPO, "BENCH", "scaling_raw.json")) as f:
-            raw = json.load(f)
-        if raw.get("protocol") != PROTOCOL_NAME:
-            raise SystemExit(
-                f"scaling_raw.json protocol {raw.get('protocol')!r} != "
-                f"{PROTOCOL_NAME!r}: remeasure, don't re-render"
-            )
-        _finish_scaling(raw["rows"], raw["pairs"], raw["clusters"], raw["job"])
-    elif args.scaling:
-        run_scaling(args.n_base, args.job)
-    elif args.matcher:
+    if args.matcher:
         run_matcher()
     else:
         run_headline()

@@ -138,11 +138,6 @@ def _distort_name(name: str, rng: random.Random, probs: dict, alphabet: str, suf
     return out
 
 
-def _email_for(first: str, last: str, rng: random.Random, translit_login: str | None = None) -> str:
-    login = translit_login or f"{first.lower()}.{last.lower()}"
-    return f"{login}@{rng.choice(DOMAINS)}"
-
-
 def _phone(rng: random.Random) -> str:
     return "+7" + "".join(rng.choice("0123456789") for _ in range(10))
 

@@ -63,6 +63,14 @@ BK = "_fm_bk"
 # T=256 3.51 s, T=512 3.59 s — flat within noise, so the middle one.
 TILE = 256
 
+# At or below this many total input rows a match counts as *small*: the
+# blocked plan ranks each side in 8 block-key partitions instead of
+# ``spark.sql.shuffle.partitions``, and the greedy's pair table is broadcast
+# into the consolidation joins, so a latency-class input pays as few stage
+# barriers as possible.  Candidates (LSH) mode also skips its pair-stream
+# rebalance below it.
+SMALL_ROWS = 3_000
+
 
 def _tile_scorer(config: MatchConfig):
     """``mapInPandas`` body: score each (left tile, right tile) pair of a
@@ -269,23 +277,14 @@ def attach_seq(df: DataFrame) -> DataFrame:
 class SparkMatcher:
     """Distributed ``match_and_consolidate`` with reference semantics.
 
-    ``rebalance_min_rows``: at or below this many total input rows the
-    match counts as *small*: the blocked plan ranks each side in 8
-    block-key partitions instead of ``spark.sql.shuffle.partitions``, and
-    the greedy's pair table is broadcast into the consolidation joins, so
-    a latency-class input pays as few stage barriers as possible.  The
-    decision reads the exact input counts, which are free: d1/d2 are
-    pinned and must materialize anyway.  Candidates (LSH) mode also skips
-    its pair-stream rebalance below it.
-
-    ``pin_inputs``: persist the prepared inputs so the ``_fm_seq`` row ids
+    The prepared inputs are always persisted, so the ``_fm_seq`` row ids
     are computed once and every downstream consumer (scoring join,
     consolidation join-backs, anti-joins) reads the same snapshot — the
     determinism guard for inputs downstream of a shuffle/aggregation,
     whose partition row order Spark does not promise to reproduce across
-    re-evaluations.  ``False`` skips the cache for callers that guarantee
-    deterministic sources (file scans, createDataFrame) and manage memory
-    tightly.
+    re-evaluations.  :meth:`unpersist` releases them.  Whether a match is
+    *small* (``SMALL_ROWS``) reads the exact input counts, which are free:
+    the pinned inputs must materialize anyway.
 
     ``driver_match_max_rows`` / ``driver_match_char_budget`` /
     ``driver_match_pair_budget``: the driver-local strategy gate (see
@@ -315,15 +314,11 @@ class SparkMatcher:
     def __init__(
         self,
         config: MatchConfig,
-        rebalance_min_rows: int = 3_000,
-        pin_inputs: bool = True,
         driver_match_max_rows: int = 4_096,
         driver_match_char_budget: int = 2_000_000,
         driver_match_pair_budget: int = 2_000_000,
     ):
         self.config = config
-        self.rebalance_min_rows = rebalance_min_rows
-        self.pin_inputs = pin_inputs
         self.driver_match_max_rows = driver_match_max_rows
         self.driver_match_char_budget = driver_match_char_budget
         self.driver_match_pair_budget = driver_match_pair_budget
@@ -337,7 +332,7 @@ class SparkMatcher:
         # executor storage accumulates across invocations (ADVICE r3)
         self._persisted: list[DataFrame] = []
         # set by match_pairs: True when the input was at or under
-        # rebalance_min_rows, enabling the latency-oriented consolidation plan
+        # SMALL_ROWS, enabling the latency-oriented consolidation plan
         self._last_small = False
 
     def unpersist(self, blocking: bool = False) -> None:
@@ -494,12 +489,9 @@ class SparkMatcher:
         # races concurrent consumers; eager forfeits pipeline overlap).
         # The persist intentionally outlives this call: the returned
         # matches/consolidated plans keep referencing d1/d2.
-        d1 = self._prepare(df1)
-        d2 = self._prepare(df2)
-        if self.pin_inputs:
-            d1 = d1.persist()
-            d2 = d2.persist()
-            self._persisted.extend([d1, d2])
+        d1 = self._prepare(df1).persist()
+        d2 = self._prepare(df2).persist()
+        self._persisted.extend([d1, d2])
         # reset BEFORE branching: a stale True from an earlier small blocked
         # run must not leak a broadcast hint onto a (possibly huge)
         # candidates-mode pair table in match_and_consolidate
@@ -512,7 +504,7 @@ class SparkMatcher:
         # whole rows on first scan, so the narrow projection still
         # populates the full pin.)
         total_rows = d1.select(SEQ).unionAll(d2.select(SEQ)).count()
-        small = total_rows <= self.rebalance_min_rows
+        small = total_rows <= SMALL_ROWS
         self._last_small = small  # consumed by match_and_consolidate
         numparts = 8 if small else None
         ta = self._tiles(self._ranked(d1, "_lr", numparts), "_lr", "_ti", "_ta")
@@ -597,8 +589,8 @@ class SparkMatcher:
 
         # rectangular batches for the matrix kernel: keep each left's
         # candidate run together while spreading lefts across the cluster
-        # (skipped for small inputs — see the class docstring)
-        if d1.count() + d2.count() > self.rebalance_min_rows:
+        # (skipped for small inputs — see SMALL_ROWS)
+        if d1.count() + d2.count() > SMALL_ROWS:
             par = joined.sparkSession.sparkContext.defaultParallelism
             joined = joined.repartition(max(32, par * 2), F.col("left_seq"))
 
@@ -774,7 +766,7 @@ class SparkMatcher:
         # (id pairs + sim) so the plan runs it once, not three times.
         pairs = pairs.persist()
         self._persisted.append(pairs)
-        # small inputs: the pair table is tiny (<= rebalance_min_rows rows of
+        # small inputs: the pair table is tiny (<= SMALL_ROWS rows of
         # three scalars), so broadcast it into the three consumers — the
         # join-backs and anti-joins then read the pinned inputs in place
         # with NO shuffle at all.  Large inputs keep shuffle joins: a

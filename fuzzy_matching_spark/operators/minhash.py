@@ -166,11 +166,6 @@ def _oph_batch(shingles: np.ndarray, doc_idx: np.ndarray, n_docs: int, num_perm:
     return sig
 
 
-def _band_fold(sig: np.ndarray, bands: int, rows: int) -> np.ndarray:
-    """Fold each band's rows into one 64-bit value (order-sensitive)."""
-    return _band_fold_batch(sig[None, :], bands, rows)[0]
-
-
 def _band_fold_batch(sig_mat: np.ndarray, bands: int, rows: int) -> np.ndarray:
     """Vectorized band fold for a (n_docs, num_perm) signature matrix."""
     n = sig_mat.shape[0]

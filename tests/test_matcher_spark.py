@@ -16,7 +16,7 @@ from fuzzy_matching_spark.config import (
     TransliterationConfig,
 )
 from fuzzy_matching_spark.fixtures.persons import generate_person_pair
-from fuzzy_matching_spark.operators.greedy_match import SparkMatcher
+from fuzzy_matching_spark.operators.greedy_match import SparkMatcher, minhash_candidates
 from fuzzy_matching_spark.oracle.matcher import OracleMatcher
 
 FIELDS = [
@@ -222,7 +222,7 @@ _TRANSLIT = dict(
 @pytest.mark.parametrize(
     "sizes,seed,config_kw,tile,edit",
     [
-        # crosses rebalance_min_rows; the largest blocks span two tiles a side
+        # crosses SMALL_ROWS; the largest blocks span two tiles a side
         ((1600, 1600), 11, {}, None, None),
         # many ragged tiles per block: ranks stay block-global across tiles
         ((300, 300), 5, {"fuzzy_algorithm": FuzzyAlgorithm.WRatio}, 16, None),
@@ -254,3 +254,36 @@ def test_tiled_scoring_matches_local(spark, monkeypatch, sizes, seed, config_kw,
     local, dist = _local_vs_distributed(spark, config, originals, variants)
     assert dist == local
     assert len(local[0]) > 0
+
+
+@pytest.mark.parametrize("mode", ["blocked", "lsh"])
+def test_unpersist_releases_every_cached_frame(spark, mode):
+    """The matcher always pins its prepared inputs (the ``_fm_seq``
+    determinism guard) and caches the greedy pair table; once both outputs
+    are consumed, ``unpersist`` must leave no cached Dataset and no
+    persisted RDD behind."""
+    jsc = spark.sparkContext._jsc
+    # start from an empty cache so only this matcher's persists are counted
+    spark.catalog.clearCache()
+    for rdd in list(jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+
+    originals, variants = generate_person_pair(300, seed=21)
+    if mode == "blocked":
+        matcher = SparkMatcher(base_config(), driver_match_max_rows=0)
+        kw = {}
+    else:
+        matcher = SparkMatcher(base_config())
+        kw = {"candidates": minhash_candidates()}
+    matches, consolidated = matcher.match_and_consolidate(
+        spark_df(spark, originals), spark_df(spark, variants), **kw
+    )
+    assert matcher.last_strategy == "distributed"
+    assert matches.collect()
+    assert consolidated.collect()
+    assert not cache_manager.isEmpty()
+
+    matcher.unpersist(blocking=True)
+    assert cache_manager.isEmpty()
+    assert len(jsc.getPersistentRDDs()) == 0
