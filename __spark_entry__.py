@@ -212,6 +212,7 @@ def q_streaming_lsh_dedup(spark, sf_dir):
     join broken, signature drift between batch and stream) surfaces as a
     missing verified pair and turns the row red.
     """
+    import shutil
     import uuid as _uuid
 
     from fuzzy_matching_spark.operators import minhash
@@ -222,35 +223,41 @@ def q_streaming_lsh_dedup(spark, sf_dir):
 
     docs = _docs_content(spark, sf_dir)
     tmp = f"/tmp/fms_stream_lsh_{_uuid.uuid4().hex[:12]}"
-    # two parquet files in one landing dir -> two availableNow micro-batches
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{tmp}/in")
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{tmp}/in")
+    try:
+        # two parquet files in one landing dir -> two availableNow micro-batches
+        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{tmp}/in")
+        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
+            "append"
+        ).parquet(f"{tmp}/in")
 
-    stream = read_document_stream(spark, f"{tmp}/in", max_files_per_trigger=1)
-    q = stream_lsh_candidates(
-        stream,
-        index_dir=f"{tmp}/idx",
-        pairs_dir=f"{tmp}/pairs",
-        checkpoint_dir=f"{tmp}/ckpt",
-        config=DOC_DEDUP_CONFIG,
-    )
-    q.awaitTermination()
-
-    # normalize pair order (cross pairs are (new, old), not sorted) and dedup
-    # across batches/bands, then verify exactly — same surface as the batch
-    # minhash query
-    cands = (
-        spark.read.parquet(f"{tmp}/pairs")
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
+        stream = read_document_stream(spark, f"{tmp}/in", max_files_per_trigger=1)
+        q = stream_lsh_candidates(
+            stream,
+            index_dir=f"{tmp}/idx",
+            pairs_dir=f"{tmp}/pairs",
+            checkpoint_dir=f"{tmp}/ckpt",
+            config=DOC_DEDUP_CONFIG,
         )
-        .distinct()
-    )
+        q.awaitTermination()
+
+        # normalize pair order (cross pairs are (new, old), not sorted) and
+        # dedup across batches/bands, then verify exactly — same surface as
+        # the batch minhash query.  The candidates are held in executor
+        # memory (eager local checkpoint) so the scratch directory can go
+        # before the lazily evaluated result is read.
+        cands = (
+            spark.read.parquet(f"{tmp}/pairs")
+            .select(
+                F.least("id_a", "id_b").alias("id_a"),
+                F.greatest("id_a", "id_b").alias("id_b"),
+            )
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     verified = minhash.verify_pairs_exact(cands, docs, DOC_DEDUP_CONFIG)
     return verified.filter(F.col("sim") >= 0.7).select(
         "id_a", "id_b", F.round("sim", 6).alias("sim")

@@ -105,12 +105,12 @@ class DedupConfig:
     # every candidate pair — the correctness/audit mode (and what the
     # SQL-checkable driver queries run, so results are oracle-reproducible).
     verify_mode: str = "auto"
-    # Broadcast the 125-byte truncated-signature frame into the estimate
-    # join when it has at most this many rows (~160 B/row serialized, so
-    # the default caps the broadcast at ~80 MB — one torrent ship per
-    # executor instead of shuffling O(candidate_pairs) rows twice).  The
-    # row count is free: the pipeline's recompute barrier already counts
-    # the frame.  Above the cap the join degrades to AQE's shuffle plan —
+    # Broadcast the (doc_id, s8, n_shingles) projection of the signature
+    # frame into the estimate join when the frame has at most this many
+    # rows (~160 B/row serialized, so the default caps the broadcast at
+    # ~80 MB — one torrent ship per executor instead of shuffling
+    # O(candidate_pairs) rows twice).  The row count is free: the
+    # pipeline's signature barrier already counts the frame.  Above the cap the join degrades to AQE's shuffle plan —
     # the 10^12-file regime where a per-executor signature copy stops
     # fitting.  Set to 0 to always let AQE choose.
     sig8_broadcast_max_rows: int = 500_000

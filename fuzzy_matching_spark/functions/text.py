@@ -2,7 +2,7 @@
 
 Everything here compiles to Catalyst expressions (whole-stage codegen, no
 Python boundary): blocking keys, language detection arithmetic (F8),
-normalizers (F12/F13), cleanliness scoring (A2), content hashing.  The
+the F12 name normalizer, cleanliness scoring (A2), content hashing.  The
 fuzzy scorers themselves need the vendored kernel and live in
 ``functions/scoring.py`` as pandas UDFs.
 """
@@ -16,7 +16,6 @@ __all__ = [
     "block_key",
     "detect_language_col",
     "normalize_name_ru_col",
-    "normalize_name_en_col",
     "cleanliness_col",
     "content_sha256",
     "quality_score_col",
@@ -54,12 +53,6 @@ def normalize_name_ru_col(col: Column | str) -> Column:
     """lower + trim + collapse whitespace + ё->е (F12)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.translate(F.regexp_replace(F.trim(F.lower(c)), r"\s+", " "), "ё", "е")
-
-
-def normalize_name_en_col(col: Column | str) -> Column:
-    """lower + trim + collapse whitespace (F13)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
 
 
 def cleanliness_col(match_fields: list[str], weights: dict[str, float]) -> Column:

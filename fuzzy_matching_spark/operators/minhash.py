@@ -9,16 +9,19 @@ Dataflow (all Arrow-batched, no per-row Python):
 
 1. ``minhash_signatures`` — mapInPandas: content -> k-shingle set -> 64-bit
    shingle hashes (vectorized polynomial rolling hash over codepoints) ->
-   ``num_perm`` multiply-shift permutations -> signature (array<long>) +
-   per-band fold hashes (array<long>).
+   ``num_perm`` multiply-shift permutations -> per-band fold hashes
+   (array<long>) + the signature's low bytes (``s8`` array<tinyint>).  The
+   full 64-bit signature never leaves the Python worker: banding needs only
+   the folds and the estimate only the low byte of each component.
 2. ``band_table`` — ``posexplode`` of the band array: (doc_id, band, bh).
 3. ``candidate_pairs`` — self-equi-join on (band, bh) with ``id_a < id_b``;
    hot buckets above ``max_bucket_size`` are *excluded and counted* (license
    headers / generated boilerplate would otherwise quadratically explode one
    reducer); AQE skew-join handles residual imbalance.
-4. ``verify_pairs_exact`` — join contents back and compute the exact shingle
-   Jaccard per pair in a pandas UDF (correctness mode), or
-   ``estimate_similarity`` from signature agreement (cheap mode: ±1/sqrt(P)).
+4. ``estimate_similarity`` — signature-agreement estimate (±1/sqrt(P)) from
+   the ``s8`` bytes of both sides, JVM-side; and/or ``verify_pairs_exact`` —
+   join contents back and compute the exact shingle Jaccard per pair in a
+   pandas UDF (correctness mode, and the estimate's ambiguous band).
 
 Determinism: all hash seeds derive from ``DedupConfig.seed``; output is
 independent of partitioning.
@@ -184,7 +187,12 @@ def minhash_signatures(
     id_col: str = "doc_id",
     keep_shingles: bool = False,
 ) -> DataFrame:
-    """-> (doc_id, sig array<long>, bands array<long>, n_shingles int).
+    """-> (doc_id, s8 array<tinyint>, bands array<long>, n_shingles int).
+
+    ``s8`` holds each signature component's low byte, shifted to the signed
+    range: ``(sig & 255) - 128``.  It is all :func:`estimate_similarity`
+    reads, so it is computed here in numpy and the 8-byte components never
+    cross the Arrow boundary (1 byte per component instead of 8).
 
     ``keep_shingles=True`` additionally returns the sorted unique shingle
     hashes (``sh array<long>``) so the exact verifier can reuse them —
@@ -199,7 +207,7 @@ def minhash_signatures(
     seed = config.seed
     mode = getattr(config, "minhash_mode", "oph")
 
-    out_schema = f"`{id_col}` long, sig array<long>, bands array<long>, n_shingles int"
+    out_schema = f"`{id_col}` long, s8 array<tinyint>, bands array<long>, n_shingles int"
     if keep_shingles:
         out_schema += ", sh array<long>"
 
@@ -219,9 +227,10 @@ def minhash_signatures(
                 doc_idx = np.repeat(np.arange(n, dtype=np.uint64), counts)
                 sig_mat = _oph_batch(all_sh, doc_idx, n, num_perm)
             bands_mat = _band_fold_batch(sig_mat, n_bands, rows)
+            s8 = ((sig_mat & np.uint64(255)).astype(np.int16) - 128).astype(np.int8)
             out = {
                 id_col: pdf[id_col],
-                "sig": list(sig_mat.view(np.int64)),
+                "s8": list(s8),
                 "bands": list(bands_mat.view(np.int64)),
                 "n_shingles": counts,
             }
@@ -290,35 +299,22 @@ def estimate_similarity(pairs: DataFrame, sig_df: DataFrame, id_col: str = "doc_
     than permutations — correlated and unreliable; see
     ``DedupPipeline.minhash_edges``).
 
-    The signatures are truncated to their low byte (``array<tinyint>``)
-    before the pair join: the join is the expensive part — O(pairs) rows x
-    2 signatures each — and 125 bytes moves 8x less than 125 longs.  A
+    Reads the ``s8`` column of :func:`minhash_signatures`: each component's
+    low byte only.  The join is the expensive part — O(pairs) rows x 2
+    signatures each — and 125 bytes moves 8x less than 125 longs.  A
     truncation false-match inflates the estimate by at most (1-J)/256
     (~0.004), which only widens the keep-side of the prefilter band —
     recall-safe for the drop rule; the accept rule is only applied to
     dense-signature pairs where the residual bias is far inside the
-    3-sigma margin.  All arithmetic stays JVM-side (``transform``/
-    ``zip_with``).
-
-    If ``sig_df`` already carries a truncated ``s8`` column (see
-    :func:`truncated_signatures`), it is used directly — a pre-truncated,
-    separately-persisted frame is ~8x smaller than the signature cache, so
-    the optimizer can see a broadcast-sized relation where the full
-    signatures would force a shuffle join.  At corpus scale the frame
-    outgrows the broadcast threshold and the join degrades gracefully to
-    the shuffle plan — the choice is AQE's, per size, not hardcoded.
+    3-sigma margin.  All arithmetic stays JVM-side (``zip_with``).  Pass
+    :func:`truncated_signatures` (or a broadcast of it) as ``sig_df`` to
+    keep the join sides to (doc_id, s8, n_shingles).
     """
-    if "s8" in sig_df.columns:
-        sig8 = F.col("s8")
-    else:
-        sig8 = F.transform(
-            "sig", lambda x: (x.bitwiseAND(F.lit(255)) - 128).cast("tinyint")
-        )
     a = sig_df.select(
-        F.col(id_col).alias("id_a"), sig8.alias("s8_a"), F.col("n_shingles").alias("ns_a")
+        F.col(id_col).alias("id_a"), F.col("s8").alias("s8_a"), F.col("n_shingles").alias("ns_a")
     )
     b = sig_df.select(
-        F.col(id_col).alias("id_b"), sig8.alias("s8_b"), F.col("n_shingles").alias("ns_b")
+        F.col(id_col).alias("id_b"), F.col("s8").alias("s8_b"), F.col("n_shingles").alias("ns_b")
     )
     joined = pairs.join(a, "id_a").join(b, "id_b")
     agree = F.size(
@@ -336,18 +332,9 @@ def estimate_similarity(pairs: DataFrame, sig_df: DataFrame, id_col: str = "doc_
 
 
 def truncated_signatures(sig_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """-> (doc_id, s8 array<tinyint>, n_shingles): the 1-byte-per-component
-    signature projection used by :func:`estimate_similarity`.
-
-    Built once and persisted by the pipeline so BOTH sides of the estimate
-    join read the small frame (125 B/doc instead of 1 KB/doc) — under the
-    broadcast threshold this turns the estimate stage's two shuffle joins
-    into broadcast joins with zero extra exchanges.
-    """
-    s8 = F.transform(
-        "sig", lambda x: (x.bitwiseAND(F.lit(255)) - 128).cast("tinyint")
-    )
-    return sig_df.select(F.col(id_col), s8.alias("s8"), F.col("n_shingles"))
+    """-> (doc_id, s8, n_shingles): the estimate join's side of a
+    :func:`minhash_signatures` frame, without the band folds."""
+    return sig_df.select(id_col, "s8", "n_shingles")
 
 
 def shingle_table(

@@ -18,12 +18,18 @@ rerun resumes from the last completed stage — the batch equivalent of
 
 The detectors are independently switchable; the exact detector is always on
 (it is free relative to the others and strictly increases recall).
+
+Each frame is materialized at most once (``DedupPipeline._materialize``):
+only frames read by several concurrent consumers get a count barrier, and
+the Spark jobs the pipeline issues itself carry the job description
+``dedup.<stage>.<name>`` so an event log attributes them to their phase.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+from contextlib import contextmanager
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +40,13 @@ from fuzzy_matching_spark.operators import fingerprint, minhash, simhash
 from fuzzy_matching_spark.operators.connected_components import connected_components
 
 __all__ = ["DedupPipeline", "DedupResult"]
+
+# Mixed into the checkpoint key: bump it whenever a stage checkpoint's
+# schema changes, so a run never resumes a checkpoint written in an older
+# layout (2: ``minhash_sigs`` carries ``s8 array<tinyint>``, not
+# ``sig array<long>``).
+CHECKPOINT_FORMAT = 2
+_DESCRIPTION = "spark.job.description"
 
 
 @dataclass
@@ -66,15 +79,14 @@ class DedupPipeline:
         self.collect_metrics = collect_metrics
         self._metrics: list[tuple[str, str, float]] = []
         self._temp_persists: list[DataFrame] = []
-        # wall seconds per materialization point, keyed by barrier label —
-        # always collected (two time.time() calls per barrier is free) so
-        # scaling investigations can attribute the wall without a re-run;
-        # surfaced in the metrics table as (stage, "wall_sec", v).
-        self.phase_walls: dict[str, float] = {}
-        cfg_json = json.dumps(asdict(self.config), sort_keys=True) + repr(sorted(detectors))
+        cfg_json = (
+            json.dumps(asdict(self.config), sort_keys=True)
+            + repr(sorted(detectors))
+            + f"format={CHECKPOINT_FORMAT}"
+        )
         self.config_hash = hashlib.sha256(cfg_json.encode()).hexdigest()[:16]
 
-    # -- checkpoint helpers ----------------------------------------------
+    # -- checkpoint / materialization helpers -----------------------------
 
     def _stage(self, name: str, builder) -> DataFrame:
         """Build (or resume) a stage; checkpointing keyed by (stage, config)."""
@@ -89,96 +101,90 @@ class DedupPipeline:
         if hpath.getFileSystem(hconf).exists(hpath):
             self._metrics.append((name, "resumed_from_checkpoint", 1.0))
             return self.spark.read.parquet(path)
-        df = builder()
-        df.write.mode("overwrite").parquet(path)
+        with self._phase(f"checkpoint.{name}"):
+            builder().write.mode("overwrite").parquet(path)
         return self.spark.read.parquet(path)
 
-    def _barrier(self, df: DataFrame, label: str | None = None) -> DataFrame:
-        """Eagerly materialize a persisted frame BEFORE its consumers fan out.
+    @contextmanager
+    def _phase(self, name: str):
+        """Describe the Spark jobs issued inside as ``dedup.<name>`` (the
+        event log's and UI's ``spark.job.description``), then restore the
+        caller's description.  The job group is left alone: a caller may
+        group a whole run under it."""
+        sc = self.spark.sparkContext
+        outer = sc.getLocalProperty(_DESCRIPTION)
+        sc.setLocalProperty(_DESCRIPTION, f"dedup.{name}")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty(_DESCRIPTION, outer)
 
-        Spark's DAGScheduler submits every stage whose parents are done, so
-        two consumer stages of a persisted-but-unfilled frame run
-        CONCURRENTLY against its lineage and each recomputes it — the cache
-        dedups storage, never work.  At 1 core stages serialize and the
-        first consumer fills the cache, so the race is invisible; at N
-        cores it silently multiplies the expensive subtrees (the estimate
-        join reads the signature frame on BOTH sides, so the Python
-        signature stage ran 2-3x).  Measured on the 264k-file bench corpus
-        at 4 fenced cores: fused-without-barriers walls were bimodal
-        85 <-> 217 s for identical passes (scheduling luck), while the
-        barriered pipeline is a stable ~73 s and scales at the box ceiling
-        (1 -> 4 cores eff 1.02 vs 0.4-0.6 unbarriered).  The count itself
-        adds one job whose tasks do the work the first consumer had to do
-        anyway; with ``collect_metrics=True`` the metric counts used to
-        provide exactly this barrier by accident.
+    def _materialize(
+        self,
+        df: DataFrame,
+        stage: str,
+        name: str,
+        *,
+        persist: bool = True,
+        barrier: bool = True,
+        metric: bool = False,
+        keep: bool = False,
+    ) -> tuple[DataFrame, int | None]:
+        """Persist ``df`` and/or count it once, as phase ``<stage>.<name>``.
 
-        Returns the row count — already paid for, and callers use it for
-        size-gated plan choices (e.g. broadcasting sig8).
+        ``barrier=True`` fills a persisted multi-consumer frame BEFORE its
+        consumers fan out.  Spark's DAGScheduler submits every stage whose
+        parents are done, so two consumer stages of a persisted-but-unfilled
+        frame run CONCURRENTLY against its lineage and each recomputes it —
+        the cache dedups storage, never work.  At 1 core stages serialize
+        and the first consumer fills the cache, so the race is invisible;
+        at N cores it silently multiplies the expensive subtrees (the
+        estimate join reads the signature frame on BOTH sides, so the
+        Python signature stage ran 2-3x).  Measured on the 264k-file bench
+        corpus at 4 fenced cores: fused-without-barriers walls were bimodal
+        85 <-> 217 s for identical passes, while the barriered pipeline was
+        a stable ~73 s.  So only frames that really fan out get a barrier;
+        a frame with one consumer (or whose one consumer fills it, such as
+        the connected-components size probe for ``edges``) gets none.
+
+        ``metric=True`` records the count as the ``(stage, name)`` metric
+        row when ``collect_metrics`` is on (counting without a barrier only
+        then).  The persist is registered BEFORE the count: if that job
+        throws, run()'s finally block must still be able to unpersist, or
+        the CacheManager registration leaks in long-lived sessions.
+        ``keep=True`` is for frames the caller receives in the DedupResult —
+        their cache must outlive run().
+
+        Returns the frame and its row count (None when nothing counted).
         """
-        import time as _time
-
-        t0 = _time.time()
-        n = df.count()
-        if label:
-            self.phase_walls[label] = round(
-                self.phase_walls.get(label, 0.0) + _time.time() - t0, 3
-            )
-        return n
-
-    def _count_metric(
-        self, stage: str, metric: str, df: DataFrame, keep: bool = False,
-        force_persist: bool = False,
-    ) -> DataFrame:
-        # Persist only when something will read the frame twice: the metric
-        # count is one consumer, so with ``collect_metrics=False`` a
-        # single-consumer frame is NOT cached (``force_persist=True`` marks
-        # frames with multiple downstream consumers regardless).  A persist
-        # that nothing reads twice only adds cache-write traffic and an
-        # InMemoryRelation boundary that blocks whole-stage fusion with the
-        # consumer.
-        if self.collect_metrics or force_persist:
+        if persist:
             df = df.persist()
-            # register BEFORE the eager count/barrier: if that job throws,
-            # run()'s finally block must still be able to unpersist, or the
-            # CacheManager registration leaks in long-lived sessions.
-            # ``keep=True`` is for frames the caller receives in the
-            # DedupResult — their cache must outlive run().
             if not keep:
                 self._temp_persists.append(df)
-            if force_persist and not self.collect_metrics:
-                # force_persist marks genuinely multi-consumer frames; with
-                # metrics off nothing counts them before the consumers fan
-                # out, so fill the cache here (see _barrier)
-                self._barrier(df, label=f"{stage}.{metric}")
-        if self.collect_metrics:
-            self._metrics.append((stage, metric, float(df.count())))
-        return df
+        record = metric and self.collect_metrics
+        if not (barrier or record):
+            return df, None
+        with self._phase(f"{stage}.{name}"):
+            n = df.count()
+        if record:
+            self._metrics.append((stage, name, float(n)))
+        return df, n
 
     # -- stages ------------------------------------------------------------
 
     def ingest(self, corpus: DataFrame) -> DataFrame:
         """Attach doc_id + the per-row sha256 content invariant.
 
-        If the source has fewer splits than ~2 waves of the cluster's
-        slots (one small parquet file, a fresh generator, a small-file
-        corpus the scan packed into few splits), spread it first — every
-        downstream Arrow stage (signatures, verification shingling)
-        inherits the scan's partitioning, and too few splits serializes
-        them all: 7 splits on 4 cores runs waves of 4+3, idling half the
-        cores in the second wave (measured as a ~25% wall tax at 4 fenced
-        cores).  At corpus scale inputs have plenty of splits and this is
-        a no-op.
+        No repartition: the sha window in ``run`` re-shuffles every row
+        right after this, so the Arrow stages downstream (signatures,
+        verification shingling) inherit the window's partitioning, not the
+        scan's.
         """
-        par = self.spark.sparkContext.defaultParallelism
-        if corpus.rdd.getNumPartitions() < 2 * par:
-            corpus = corpus.repartition(4 * par)
         return corpus.withColumn(
             "doc_id", F.xxhash64("repo", "path", "commit")
         ).withColumn("content_sha256", F.sha2("content", 256))
 
     def minhash_edges(self, docs: DataFrame) -> DataFrame:
-        # sigs feed three consumers (banding, the estimate prefilter, skew
-        # metrics) — persist or every consumer re-runs the mapInPandas scan
         # NOTE deliberately NOT keep_shingles=True: persisting every doc's
         # shingle set multiplies the cached signature footprint by ~100x
         # (measured: GC/paging collapse at 330k docs on an 8g driver).
@@ -187,41 +193,40 @@ class DedupPipeline:
         sigs = self._stage(
             "minhash_sigs", lambda: minhash.minhash_signatures(docs, self.config)
         )
-        # consumers: the band chain (always), the truncated-signature frame
-        # (auto mode only), the skew metrics (collect_metrics only).  In
-        # always-mode-without-metrics the band chain is the lone reader and
-        # the Python signature stage should fuse straight into it.
-        if self.config.verify_mode != "always" or self.collect_metrics:
-            sigs = sigs.persist()
-            self._temp_persists.append(sigs)
+        auto = self.config.verify_mode != "always"
+        n_sigs = None
+        if auto:
+            # the band chain and BOTH sides of the estimate join read sigs:
+            # persist and fill it once (this count also fills `tagged`)
+            sigs, n_sigs = self._materialize(sigs, "minhash", "signatures")
         bands = minhash.band_table(sigs)
         if self.collect_metrics:
             # the bucket-skew metrics re-read the band table; without them
             # the candidate window is the only consumer and a persist just
             # adds cache-write traffic + an extra materialization barrier
-            bands = bands.persist()
-            self._temp_persists.append(bands)
+            bands, _ = self._materialize(bands, "minhash", "bands", barrier=False)
         pairs, bucket_metrics = minhash.candidate_pairs(bands, self.config)
         if self.collect_metrics:
-            skew = bucket_metrics.filter(F.col("skipped")).agg(
-                F.count("*").alias("n"), F.coalesce(F.sum("size"), F.lit(0)).alias("rows")
-            ).collect()[0]
+            with self._phase("minhash.buckets"):
+                skew = bucket_metrics.filter(F.col("skipped")).agg(
+                    F.count("*").alias("n"),
+                    F.coalesce(F.sum("size"), F.lit(0)).alias("rows"),
+                ).collect()[0]
             self._metrics.append(("minhash", "buckets_dropped", float(skew["n"])))
             self._metrics.append(("minhash", "rows_in_dropped_buckets", float(skew["rows"])))
         t = self.config.verify_threshold
         # In "always" mode pairs has three consumers (both sides of `ids` +
         # the verify join); in "auto" mode the estimate join is the only one.
-        pairs = self._count_metric(
-            "minhash", "candidate_pairs", pairs,
-            force_persist=self.config.verify_mode == "always",
+        pairs, _ = self._materialize(
+            pairs, "minhash", "candidate_pairs",
+            persist=not auto or self.collect_metrics, barrier=not auto, metric=True,
         )
-        if self.config.verify_mode == "always":
+        if not auto:
             # correctness mode: every candidate pair gets the exact
             # shingle-Jaccard; surviving edges are provably >= t
-            verified = minhash.verify_pairs_exact(pairs, docs, self.config).filter(
-                F.col("sim") >= t
-            )
-            return verified.select(
+            with self._phase("minhash.verify"):
+                verified = minhash.verify_pairs_exact(pairs, docs, self.config)
+            return verified.filter(F.col("sim") >= t).select(
                 "id_a",
                 "id_b",
                 F.lit("minhash").alias("detector"),
@@ -250,31 +255,17 @@ class DedupPipeline:
         dense = (F.col("ns_a") >= self.config.num_perm) & (
             F.col("ns_b") >= self.config.num_perm
         )
-        # pre-truncated signature frame: ~8x smaller than the sig cache, so
-        # both estimate join sides read (and at small scale BROADCAST) 125
-        # bytes/doc instead of shuffling 1 KB/doc arrays; at corpus scale it
-        # exceeds the broadcast threshold and AQE keeps the shuffle join
-        # barrier BEFORE the estimate join: est reads sig8 on BOTH sides, so
-        # an unfilled sig8 cache would be computed twice concurrently — and
-        # each computation drags the whole Python signature stage with it
-        # (sigs is persisted but equally unfilled).  One count materializes
-        # sigs -> sig8 exactly once; the band chain then reads the sigs
-        # cache.  (see _barrier for the measured cost of skipping this)
-        # register each persist BEFORE its barrier count: if the count job
-        # throws, run()'s finally block must still unpersist (ADVICE r4)
-        sig8 = minhash.truncated_signatures(sigs).persist()
-        self._temp_persists.append(sig8)
-        n_sig8 = self._barrier(sig8, label="minhash.sig8")
-        # Explicit broadcast when the (already-counted) truncated frame is
-        # small: the default autoBroadcastJoinThreshold (10 MB) is below the
-        # frame's size well before the corpus stops being
-        # broadcast-friendly, and the shuffle plan moves the O(pairs)
-        # candidate stream through two full exchanges instead (measured on
-        # the 264k bench corpus: est joins 5.1 s -> 1.3 s at 2 fenced
-        # cores, 2.4 s -> 0.5 s at 8).  Size-gated, so at corpus scale the
-        # plan degrades to AQE's shuffle join instead of OOMing executors.
-        cap = self.config.sig8_broadcast_max_rows
-        bcast = 0 < n_sig8 <= cap
+        # Explicit broadcast of the (doc_id, s8, n_shingles) projection when
+        # the (already-counted) signature frame is small: the default
+        # autoBroadcastJoinThreshold (10 MB) is below the projection's size
+        # well before the corpus stops being broadcast-friendly, and the
+        # shuffle plan moves the O(pairs) candidate stream through two full
+        # exchanges instead (measured on the 264k bench corpus: est joins
+        # 5.1 s -> 1.3 s at 2 fenced cores, 2.4 s -> 0.5 s at 8).
+        # Size-gated, so at corpus scale the plan degrades to AQE's shuffle
+        # join instead of OOMing executors.
+        s8 = minhash.truncated_signatures(sigs)
+        bcast = 0 < n_sigs <= self.config.sig8_broadcast_max_rows
         # barrier AFTER est: accepted (union branch) and ambiguous (verify
         # branch) consume it from independent stages.  An un-persisted est
         # was tried in r5 and REVERTED: each consumer then re-runs the
@@ -286,9 +277,7 @@ class DedupPipeline:
         # the persist so the cache holds (id_a, id_b, sim, cls) — the ns_*
         # density columns exist only to derive cls and never earn cache
         # residency; downstream consumers are pure class filters.
-        est_raw = minhash.estimate_similarity(
-            pairs, F.broadcast(sig8) if bcast else sig8
-        )
+        est_raw = minhash.estimate_similarity(pairs, F.broadcast(s8) if bcast else s8)
         cls = (
             F.when(dense & (F.col("sim") >= t + margin), F.lit(1))  # accept
             .when(
@@ -299,20 +288,27 @@ class DedupPipeline:
             .otherwise(F.lit(0))  # drop
             .cast("tinyint")
         )
-        est = est_raw.select("id_a", "id_b", "sim", cls.alias("cls")).persist()
-        self._temp_persists.append(est)
-        self._barrier(est, label="minhash.estimate")
+        est, _ = self._materialize(
+            est_raw.select("id_a", "id_b", "sim", cls.alias("cls")), "minhash", "estimate"
+        )
+        # accepted and ambiguous are class filters over the filled est
+        # cache: each re-read is a columnar scan, not a recompute, so
+        # neither earns a persist of its own
         accepted = est.filter(F.col("cls") == 1)
-        accepted = self._count_metric("minhash", "accepted_by_estimate", accepted)
+        self._materialize(
+            accepted, "minhash", "accepted_by_estimate",
+            persist=False, barrier=False, metric=True,
+        )
         ambiguous = est.filter(F.col("cls") == 2).select("id_a", "id_b")
-        # ambiguous feeds the verify join three ways (both sides of `ids` +
-        # the pair join itself)
-        ambiguous = self._count_metric(
-            "minhash", "ambiguous_pairs", ambiguous, force_persist=True
+        self._materialize(
+            ambiguous, "minhash", "ambiguous_pairs",
+            persist=False, barrier=False, metric=True,
         )
-        verified = minhash.verify_pairs_exact(ambiguous, docs, self.config).filter(
-            F.col("sim") >= t
-        )
+        # the verifier's local checkpoint plans (and so runs the shuffle
+        # stages of) its shingle input at call time: tag those jobs too
+        with self._phase("minhash.verify"):
+            verified = minhash.verify_pairs_exact(ambiguous, docs, self.config)
+        verified = verified.filter(F.col("sim") >= t)
         # score semantics marker (ADVICE r2): estimate-accepted edges carry
         # the byte-truncated signature-agreement estimate (quantized to
         # 1/num_perm steps, up to ~3 sigma off the true Jaccard), while
@@ -323,10 +319,10 @@ class DedupPipeline:
         ).unionByName(
             verified.select("id_a", "id_b", "sim", F.lit("exact").alias("score_kind"))
         )
-        # all persists (sigs/pairs/ambiguous/bands/sig8/est) are registered
-        # where persisted and released at the end of run(): connected
-        # components is what first materializes the edge union, so dropping
-        # caches here would silently recompute the candidate join
+        # all persists (sigs/pairs/bands/est) are registered where
+        # persisted and released at the end of run(): connected components
+        # is what first materializes the edge union, so dropping caches
+        # here would silently recompute the candidate join
         return edges.select(
             "id_a",
             "id_b",
@@ -380,8 +376,7 @@ class DedupPipeline:
         # resident object (the corpus text) for one extra scan, and cache
         # memory pressure is what degrades high-core-count runs first.
         docs = self._stage("ingest", lambda: self.ingest(corpus))
-        if self.collect_metrics:
-            self._metrics.append(("ingest", "docs", float(docs.count())))
+        self._materialize(docs, "ingest", "docs", persist=False, barrier=False, metric=True)
 
         # Near-dup detectors see one representative per distinct content
         # (min doc_id of each sha256 class): byte-identical copies already
@@ -394,19 +389,20 @@ class DedupPipeline:
         from pyspark.sql.window import Window
 
         w_sha = Window.partitionBy("content_sha256").orderBy("doc_id")
-        tagged = (
-            docs.withColumn("_rn", F.row_number().over(w_sha))
-            .withColumn("_min", F.first("doc_id").over(w_sha))
-            .persist()
+        tagged = docs.withColumn("_rn", F.row_number().over(w_sha)).withColumn(
+            "_min", F.first("doc_id").over(w_sha)
         )
-        self._temp_persists.append(tagged)
-        # barrier: the exact-edges branch and the detector branch (rep_docs)
-        # consume tagged from independent stages; filling it here also
-        # materializes the docs cache underneath it (see _barrier)
-        self._barrier(tagged, label="ingest.tag")
+        # The MinHash detector's first barrier (signatures in auto mode,
+        # candidate pairs in always mode) is tagged's only reader and fills
+        # it before the exact-edges branch reads it.  The other detectors
+        # have no barrier of their own, so without MinHash count it here.
+        tagged, _ = self._materialize(
+            tagged, "ingest", "tag", barrier="minhash" not in self.detectors
+        )
         rep_docs = tagged.filter(F.col("_rn") == 1).drop("_rn", "_min")
-        if self.collect_metrics:
-            self._metrics.append(("ingest", "distinct_contents", float(rep_docs.count())))
+        self._materialize(
+            rep_docs, "ingest", "distinct_contents", persist=False, barrier=False, metric=True
+        )
 
         exact = tagged.filter(F.col("doc_id") != F.col("_min")).select(
             F.col("_min").alias("id_a"),
@@ -429,22 +425,20 @@ class DedupPipeline:
         edges = self._stage("edges", lambda: edges)
         # edges always persists: connected_components reads it at least twice
         # (size probe + either collect or the superstep loop), and it is
-        # handed to the caller in the DedupResult
-        edges = self._count_metric("edges", "total_edges", edges, keep=True, force_persist=True)
+        # handed to the caller in the DedupResult.  No barrier: the size
+        # probe is its first reader and fills it.
+        edges, _ = self._materialize(
+            edges, "edges", "total_edges", barrier=False, metric=True, keep=True
+        )
 
         # no distinct here: connected_components tolerates duplicate edges
         # (union-find ignores them; the distributed path dedups in `sym`)
-        pair_edges = edges.select("id_a", "id_b")
-        import time as _time
-
-        t0 = _time.time()
-        labels = connected_components(pair_edges)
-        # the small-graph path is driver-blocking (toPandas + union-find +
-        # createDataFrame all complete inside the call), so this wall is the
-        # pipeline's main SERIAL section; the distributed path returns a
-        # lazy frame and the wall lands in the caller's first action instead
-        self.phase_walls["cluster.components"] = round(_time.time() - t0, 3)
-        ids = tagged.select("doc_id")
+        with self._phase("cluster.components"):
+            labels = connected_components(edges.select("id_a", "id_b"))
+        # ids from a plain scan of the ingested rows, not from `tagged`:
+        # the clusters frame is consumed after run() has released tagged's
+        # cache, and re-deriving tagged would replay the content shuffle
+        ids = docs.select("doc_id")
         clusters = (
             ids.join(labels, ids.doc_id == labels.id, "left")
             .select(
@@ -454,8 +448,6 @@ class DedupPipeline:
         )
         clusters = self._stage("clusters", lambda: clusters)
 
-        for k, v in self.phase_walls.items():
-            self._metrics.append((k, "wall_sec", v))
         metrics = self.spark.createDataFrame(
             [(s, m, v) for s, m, v in self._metrics],
             schema="stage string, metric string, value double",

@@ -6,7 +6,10 @@ config: ground truth here is brute-force exact shingle Jaccard over all
 pairs (the "oracle" for corpus dedup — same kernel, no LSH approximation).
 """
 
+import hashlib
 import itertools
+import json
+from dataclasses import asdict
 
 import numpy as np
 import pytest
@@ -194,6 +197,40 @@ def test_checkpoint_resume(spark, corpus_df, tmp_path):
     assert c1 == c2
     resumed = [m for m in p2._metrics if m[1] == "resumed_from_checkpoint"]
     assert resumed, "second run must resume from stage checkpoints"
+
+    # A `minhash_sigs` checkpoint in the older `sig array<long>` layout,
+    # keyed as that layout's code keyed it (no format tag), must not be
+    # resumed into code that reads `s8`.
+    legacy_key = hashlib.sha256(
+        (json.dumps(asdict(config), sort_keys=True) + repr(["minhash"])).encode()
+    ).hexdigest()[:16]
+    legacy = str(tmp_path / "legacy")
+    spark.createDataFrame(
+        [(1, [7] * config.num_perm, [9] * config.bands, 500)],
+        schema="doc_id long, sig array<long>, bands array<long>, n_shingles int",
+    ).write.parquet(f"{legacy}/minhash_sigs_{legacy_key}")
+    p3 = DedupPipeline(spark, config, detectors=("minhash",), checkpoint_dir=legacy)
+    r3 = p3.run(corpus_df)
+    assert sorted((r["doc_id"], r["component"]) for r in r3.clusters.collect()) == c1
+    assert not [m for m in p3._metrics if m[1] == "resumed_from_checkpoint"]
+
+
+@pytest.mark.parametrize("collect_metrics", [True, False])
+@pytest.mark.parametrize("verify_mode", ["auto", "always"])
+def test_run_releases_every_cached_frame(spark, corpus_df, tmp_path, verify_mode, collect_metrics):
+    """After run(), both writes and unpersisting the handed-over edges, no
+    cached Dataset is left: every persist the pipeline made is released."""
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    config = DedupConfig(verify_mode=verify_mode)
+    result = DedupPipeline(
+        spark, config, detectors=("minhash",), collect_metrics=collect_metrics
+    ).run(corpus_df)
+    result.clusters.write.parquet(str(tmp_path / "clusters"))
+    result.edges.write.parquet(str(tmp_path / "edges"))
+    assert not cache_manager.isEmpty()  # edges reach the caller cached
+    result.edges.unpersist(blocking=True)
+    assert cache_manager.isEmpty()
 
 
 @pytest.mark.parametrize("driver_threshold", [2_000_000, 0])

@@ -70,3 +70,13 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(df.columns) == {"cluster_size", "n_clusters"}
+
+
+def test_streaming_lsh_dedup_removes_its_scratch_dir(spark):
+    """The streaming query lands its input, band index, pairs and stream
+    checkpoint in a scratch directory; the returned frame must not depend
+    on it, and the directory must be gone once the query returns."""
+    before = set(glob.glob("/tmp/fms_stream_lsh_*"))
+    df = entry_mod.queries()["streaming_lsh_dedup"](spark, SF_SMOKE)
+    assert set(glob.glob("/tmp/fms_stream_lsh_*")) <= before
+    assert df.count() >= 0
