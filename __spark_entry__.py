@@ -58,6 +58,8 @@ def entry(spark: SparkSession) -> DataFrame:
         "text as content",
     )
     result = DedupPipeline(spark, DOC_DEDUP_CONFIG, detectors=("minhash",)).run(docs)
+    # the histogram reads only the ids and the eager component labels
+    result.edges.unpersist()
     return (
         result.clusters.groupBy("component")
         .agg(F.count("*").alias("cluster_size"))
@@ -598,6 +600,8 @@ def q_dedup_cluster_sizes(spark, sf_dir):
     result = DedupPipeline(
         spark, DOC_CLUSTER_CONFIG, detectors=("minhash",), collect_metrics=False
     ).run(docs)
+    # the histogram reads only the ids and the eager component labels
+    result.edges.unpersist()
     return (
         result.clusters.groupBy("component")
         .agg(F.count("*").alias("cluster_size"))

@@ -6,7 +6,7 @@ maps every operator), extended with the distributed detectors the north
 rule requires: MinHash/LSH, SimHash, fingerprint long-substring dedup,
 connected-components clustering, plus training-data-pipeline operators
 (language ID, quality scoring, token stats, token-set Jaccard joins,
-embedding similarity search, multimodal column plumbing).
+embedding similarity search).
 """
 
 from fuzzy_matching_spark.config import (

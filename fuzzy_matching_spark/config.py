@@ -70,13 +70,14 @@ class DedupConfig:
 
     Drives corpus-level dedup over ``(repo, path, commit, lang, content)``:
 
-    * MinHash over ``shingle_size``-gram shingles, ``num_perm`` permutations,
-      LSH with ``bands`` x ``rows_per_band`` (``bands*rows_per_band`` must be
-      ``num_perm``).  Defaults 25x5 put the S-curve threshold at
-      ``(1/25)^(1/5) = 0.52`` with collision probability 0.990 at Jaccard
-      0.70 — the steepest curve that still meets the >=0.99 recall gate at
-      the default ``verify_threshold``; the flatter 32x4 curve admits
-      everything above ~0.42 and floods verification with candidates.
+    * MinHash over ``shingle_size``-gram shingles (one-permutation hashing
+      into ``num_perm`` buckets), LSH with ``bands`` x ``rows_per_band``
+      (``bands*rows_per_band`` must be ``num_perm``).  Defaults 25x5 put
+      the S-curve threshold at ``(1/25)^(1/5) = 0.52`` with collision
+      probability 0.990 at Jaccard 0.70 — the steepest curve that still
+      meets the >=0.99 recall gate at the default ``verify_threshold``;
+      the flatter 32x4 curve admits everything above ~0.42 and floods
+      verification with candidates.
     * SimHash 64-bit with ``simhash_bands`` Hamming bands and
       ``simhash_max_hamming`` verification threshold.
     * Fingerprint (0-mod-q winnowing) long-substring detector with windows of
@@ -92,10 +93,6 @@ class DedupConfig:
     bands: int = 25
     rows_per_band: int = 5
     tokenize: str = "char"  # "char" | "word"
-    # "oph": one-permutation hashing + densification — O(shingles) per doc,
-    # the scale default.  "classic": 125 independent minwise permutations —
-    # O(shingles x num_perm), kept for cross-validation of the OPH path.
-    minhash_mode: str = "oph"
     verify_threshold: float = 0.7
     # "auto": settle dense-signature pairs from the byte-truncated estimate
     # (3-sigma accept/drop band) and exact-verify the rest — the scale
@@ -105,15 +102,6 @@ class DedupConfig:
     # every candidate pair — the correctness/audit mode (and what the
     # SQL-checkable driver queries run, so results are oracle-reproducible).
     verify_mode: str = "auto"
-    # Broadcast the (doc_id, s8, n_shingles) projection of the signature
-    # frame into the estimate join when the frame has at most this many
-    # rows (~160 B/row serialized, so the default caps the broadcast at
-    # ~80 MB — one torrent ship per executor instead of shuffling
-    # O(candidate_pairs) rows twice).  The row count is free: the
-    # pipeline's signature barrier already counts the frame.  Above the cap the join degrades to AQE's shuffle plan —
-    # the 10^12-file regime where a per-executor signature copy stops
-    # fitting.  Set to 0 to always let AQE choose.
-    sig8_broadcast_max_rows: int = 500_000
     max_bucket_size: int = 200
     simhash_bands: int = 4
     simhash_max_hamming: int = 3
@@ -125,6 +113,7 @@ class DedupConfig:
     # ANSI SQL, so the driver's DuckDB oracle can recompute the exact anchor
     # set; both modes implement the same 0-mod-q sampling semantics.
     anchor_hash: str = "rolling"
+    # SimHash token-hash seed; MinHash's shingle and bucket hashes are fixed
     seed: int = 42
 
     def __post_init__(self):

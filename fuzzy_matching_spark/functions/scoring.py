@@ -10,8 +10,9 @@ Spark engine's hot paths instead go through this module:
   of them on executors, and both then run the sequential argmax
   assignment the reference semantics demand);
 * :func:`score_pairs`    — aligned pairwise scores for Arrow batches;
-* :func:`scorer_udf`     — pandas UDF twin of ``pairscore.get_similarity``
-  (lowercase, empty->0, result in [0, 1]) for DataFrame pipelines.
+* :func:`make_general_pair_scorer` — the weighted-field pandas UDF that
+  scores the matcher's LSH candidate pairs, one Arrow row per pair, with
+  the full per-field semantics (any scorer, transliteration).
 
 ``ratio`` and ``token_sort_ratio`` run on the numpy bit-parallel LCS
 kernel (:mod:`kernel.batchlcs`); the remaining scorers (partial / token-set
@@ -33,21 +34,9 @@ from fuzzy_matching_spark.kernel import batchfuzz, batchlcs
 __all__ = [
     "score_matrix",
     "score_pairs",
-    "scorer_udf",
     "config_score_matrix",
-    "transform_value_udf",
-    "make_simple_pair_scorer",
     "make_general_pair_scorer",
-    "VECTORIZED",
 ]
-
-# All five scorers now have batched paths (round 3: partial / token-set /
-# WRatio moved onto kernel/batchfuzz, VERDICT r2 task #3); the scalar
-# kernel remains as the parity oracle and the long-string fallback inside
-# batchfuzz.partial_ratio_pairs.
-VECTORIZED = frozenset(
-    {"ratio", "token_sort_ratio", "partial_ratio", "token_set_ratio", "wratio"}
-)
 
 _BATCH_PAIRS = {
     "token_sort_ratio": batchfuzz.token_sort_ratio_pairs,
@@ -94,66 +83,15 @@ def score_pairs(algorithm: str, left_vals, right_vals) -> np.ndarray:
     return batchlcs.ratio_pairs(left_vals, right_vals)
 
 
-def scorer_udf(algorithm: str):
-    """Pandas UDF (double) with ``pairscore.get_similarity`` semantics:
-    lowercase both sides, empty/None -> 0.0, result in [0, 1]."""
-    from pyspark.sql.functions import pandas_udf
-
-    algo = algorithm
-
-    @pandas_udf("double")
-    def _score(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        a = s1.fillna("").astype(str).str.lower()
-        b = s2.fillna("").astype(str).str.lower()
-        res = score_pairs(algo, a.tolist(), b.tolist()) / 100.0
-        res[(a == "").to_numpy() | (b == "").to_numpy()] = 0.0
-        return pd.Series(res)
-
-    return _score
-
-
 # ---------------------------------------------------------------------------
-# pair-stream scorers (the matcher's LSH candidate mode)
+# pair-stream scorer (the matcher's LSH candidate mode)
 # ---------------------------------------------------------------------------
 
 
-def transform_value_udf(algorithm: str):
-    """Pandas UDF: per-record scorer *pre-transform* so pair scoring reduces
-    to plain ``ratio`` on transformed values.
-
-    ``ratio`` -> lowercase; ``token_sort_ratio`` -> lowercase, whitespace
-    tokenize, sort, single-space join — exactly the scalar kernel's
-    ``fn(s.lower())`` preprocessing, done once per record instead of once
-    per pair (and its length gives the exact pruning bound)."""
-    from pyspark.sql.functions import pandas_udf
-
-    token_sort = algorithm == "token_sort_ratio"
-
-    @pandas_udf("string")
-    def _transform(v: pd.Series) -> pd.Series:
-        vals = v.fillna("").astype(str)
-        if token_sort:
-            return vals.map(lambda s: " ".join(sorted(s.lower().split())))
-        return vals.str.lower()
-
-    return _transform
-
-
-def _dedup_pair_scores(a_vals, b_vals, pairs_fn, matrix_fn=None) -> np.ndarray:
-    """Score aligned value pairs, collapsing duplicate values/combinations.
-
-    When the batch is near-rectangular (|uniq_a| * |uniq_b| comparable to
-    the row count — the normal case for sort-merge-join output, which
-    emits each left against consecutive rights), the all-pairs *matrix*
-    kernel is used: it amortizes the pattern tables across every right,
-    ~10-40x cheaper per score than pairwise mode.  Sparse batches fall
-    back to scoring distinct (a, b) combinations pairwise."""
-    n = len(a_vals)
+def _dedup_pair_scores(a_vals, b_vals, pairs_fn) -> np.ndarray:
+    """Score aligned value pairs, each distinct (a, b) combination once."""
     ca, ua = pd.factorize(pd.Series(a_vals, dtype=object))
     cb, ub = pd.factorize(pd.Series(b_vals, dtype=object))
-    if matrix_fn is not None and len(ua) * len(ub) <= max(4 * n, 65536):
-        m = np.asarray(matrix_fn(list(ua), list(ub)), dtype=np.float64)
-        return m[ca, cb]
     nb = len(ub)
     key = ca.astype(np.int64) * nb + cb
     kcodes, kuniq = pd.factorize(key)
@@ -164,45 +102,15 @@ def _dedup_pair_scores(a_vals, b_vals, pairs_fn, matrix_fn=None) -> np.ndarray:
     return np.asarray(scored, dtype=np.float64)[kcodes]
 
 
-def make_simple_pair_scorer(weights: list):
-    """Pandas UDF scoring PRE-TRANSFORMED value pairs with plain ``ratio``.
-
-    Argument order: (a_f1, b_f1, a_f2, b_f2, ...) matching ``weights``.
-    Float-identical to the scalar weighted mean: per-field
-    ``(200*lcs/total)/100`` (empty operands 0), accumulated in field order,
-    divided by the weight sum."""
-    from pyspark.sql.functions import pandas_udf
-
-    total_w = sum(weights)
-
-    @pandas_udf("double")
-    def _score(*cols: pd.Series) -> pd.Series:
-        n = len(cols[0])
-        acc = np.zeros(n, dtype=np.float64)
-        for i, w in enumerate(weights):
-            a = cols[2 * i].fillna("").astype(str).tolist()
-            b = cols[2 * i + 1].fillna("").astype(str).tolist()
-            s = _dedup_pair_scores(a, b, batchlcs.ratio_pairs, batchlcs.ratio_matrix) / 100.0
-            empty = np.array([not x for x in a]) | np.array([not x for x in b])
-            s[empty] = 0.0
-            acc += s * w
-        if total_w <= 0:
-            return pd.Series(np.zeros(n))
-        return pd.Series(acc / total_w)
-
-    # asNondeterministic: the score IS deterministic, but without this the
-    # optimizer pushes the >= threshold filter (which references the UDF
-    # column) below the load-balancing repartition exchange and DUPLICATES
-    # the UDF — the expensive pass then runs inside the skewed join stage,
-    # defeating the rebalance (observed: 2x Python work, 1 hot task)
-    return _score.asNondeterministic()
-
-
 def make_general_pair_scorer(config):
-    """Pandas UDF with the full per-field semantics (any algorithm,
-    transliteration) over ORIGINAL value pairs — the fallback when the
-    pre-transform fast path doesn't apply.  Unique (a, b) combinations are
-    scored once."""
+    """Pandas UDF: weighted-mean similarity in [0, 1] of aligned value pairs.
+
+    Argument order: (a_f1, b_f1, a_f2, b_f2, ...) matching ``config.fields``.
+    Full per-field semantics (any algorithm, transliteration) over the
+    original values, float-identical to :func:`config_score_matrix`:
+    per-field ``fn(lower, lower)/100`` (empty operands 0), accumulated in
+    field order, divided by the weight sum.  Unique (a, b) combinations
+    are scored once per batch."""
     from pyspark.sql.functions import pandas_udf
 
     from fuzzy_matching_spark.kernel import pairscore
@@ -224,13 +132,12 @@ def make_general_pair_scorer(config):
                     for v1, v2 in zip(ua, ub):
                         t1, t2, _ = pairscore.process_transliteration(v1, v2, config)
                         out.append(
-                            100.0
-                            * pairscore.get_similarity(
+                            pairscore.get_similarity(
                                 t1, t2, fc.fuzzy_algorithm, config.fuzzy_algorithm
                             )
                         )
                     return out
-                s = _dedup_pair_scores(a, b, field_fn) / 100.0
+                s = _dedup_pair_scores(a, b, field_fn)
             else:
                 algo = (
                     fc.fuzzy_algorithm
@@ -250,7 +157,12 @@ def make_general_pair_scorer(config):
             return pd.Series(np.zeros(n))
         return pd.Series(acc / total_w)
 
-    return _score.asNondeterministic()  # see make_simple_pair_scorer
+    # asNondeterministic: the score IS deterministic, but without this the
+    # optimizer pushes the >= threshold filter (which references the UDF
+    # column) below the load-balancing repartition exchange and DUPLICATES
+    # the UDF — the expensive pass then runs inside the skewed join stage,
+    # defeating the rebalance (observed: 2x Python work, 1 hot task)
+    return _score.asNondeterministic()
 
 
 # ---------------------------------------------------------------------------

@@ -404,29 +404,10 @@ class SparkMatcher:
         )
         return d.groupBy(F.col(BK), tile).agg(F.collect_list(rec).alias(list_col))
 
-    def _is_simple(self) -> bool:
-        """Fast-path eligibility: every field scores RATIO/TOKEN_SORT and no
-        transliteration — values can be pre-transformed once per record."""
-        from fuzzy_matching_spark.config import FuzzyAlgorithm
-
-        config = self.config
-        translit_on = config.transliteration.enabled
-        return all(
-            not (fc.transliterate and translit_on)
-            and (fc.fuzzy_algorithm or config.fuzzy_algorithm)
-            in (FuzzyAlgorithm.RATIO, FuzzyAlgorithm.TOKEN_SORT)
-            for fc in config.fields
-        )
-
-    def _side_cols(self, d: DataFrame, prefix: str, simple: bool) -> list:
-        from fuzzy_matching_spark.functions import scoring
-
+    def _side_cols(self, d: DataFrame, prefix: str) -> list:
         cols = []
         for i, fc in enumerate(self.config.fields):
             src = F.col(fc.field) if fc.field in d.columns else F.lit("")
-            if simple:
-                algo = fc.fuzzy_algorithm or self.config.fuzzy_algorithm
-                src = scoring.transform_value_udf(algo.value)(src)
             cols.append(src.alias(f"{prefix}{i}"))
         return cols
 
@@ -533,10 +514,12 @@ class SparkMatcher:
         """Candidate-driven scoring + component-wise order-exact greedy.
 
         Scale shape: the candidate frame (left_seq, right_seq) is joined to
-        both sides' pre-transformed values, scored one Arrow row per pair by
-        the batched pair scorers (candidate pairs are sparse, so there is no
+        both sides' match-field values as they are, every pair is scored
+        one Arrow row per pair by ``scoring.make_general_pair_scorer`` (any
+        scorer, transliteration; candidate pairs are sparse, so there is no
         tile structure to score as matrix blocks), and only the >=
-        threshold edges survive.
+        threshold edges survive.  There is no per-record pre-transform and
+        no JVM-side prune: every candidate pair reaches the scorer.
         The greedy then runs per *connected component* of the thresholded
         bipartite edge graph instead of per block: a right can only be
         contended by lefts inside its own component, and the reference's
@@ -556,49 +539,29 @@ class SparkMatcher:
         cand = candidates(d1, d2, self.match_fields)
 
         nf = len(config.fields)
-        weights = [fc.weight for fc in config.fields]
-        total_w = sum(weights)
-        simple = self._is_simple()
         lkeys = self._order_cols(d1)
         rkeys = self._order_cols(d2)
 
         asel = d1.select(
             F.col(SEQ).alias("left_seq"),
             *[F.col(c).alias(f"_lk{i}") for i, c in enumerate(lkeys)],
-            *self._side_cols(d1, "_fa", simple),
+            *self._side_cols(d1, "_fa"),
         )
         bsel = d2.select(
             F.col(SEQ).alias("right_seq"),
             *[F.col(c).alias(f"_rk{i}") for i, c in enumerate(rkeys)],
-            *self._side_cols(d2, "_fb", simple),
+            *self._side_cols(d2, "_fb"),
         )
         joined = cand.join(asel, "left_seq").join(bsel, "right_seq")
 
-        if simple and config.threshold > 0 and total_w > 0:
-            # lossless prune: per-field ratio upper bound from exact
-            # transformed lengths, weighted like the real score
-            ub = F.lit(0.0)
-            for i, w in enumerate(weights):
-                la = F.length(f"_fa{i}")
-                lb = F.length(f"_fb{i}")
-                fub = F.when(
-                    la + lb > 0, 2.0 * F.least(la, lb) / (la + lb)
-                ).otherwise(F.lit(0.0))
-                ub = ub + fub * F.lit(w)
-            joined = joined.filter(ub / F.lit(total_w) >= F.lit(config.threshold))
-
-        # rectangular batches for the matrix kernel: keep each left's
-        # candidate run together while spreading lefts across the cluster
-        # (skipped for small inputs — see SMALL_ROWS)
+        # spread the lefts across the cluster, each left's candidates in one
+        # partition so its repeated values collapse in the scorer's
+        # unique-pair pass (skipped for small inputs — see SMALL_ROWS)
         if d1.count() + d2.count() > SMALL_ROWS:
             par = joined.sparkSession.sparkContext.defaultParallelism
             joined = joined.repartition(max(32, par * 2), F.col("left_seq"))
 
-        scorer = (
-            scoring.make_simple_pair_scorer(weights)
-            if simple
-            else scoring.make_general_pair_scorer(config)
-        )
+        scorer = scoring.make_general_pair_scorer(config)
         scored = joined.withColumn(
             "sim",
             scorer(*[F.col(f"_f{s}{i}") for i in range(nf) for s in ("a", "b")]),

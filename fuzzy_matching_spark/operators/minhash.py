@@ -9,7 +9,7 @@ Dataflow (all Arrow-batched, no per-row Python):
 
 1. ``minhash_signatures`` — mapInPandas: content -> k-shingle set -> 64-bit
    shingle hashes (vectorized polynomial rolling hash over codepoints) ->
-   ``num_perm`` multiply-shift permutations -> per-band fold hashes
+   one-permutation hashing into ``num_perm`` buckets -> per-band fold hashes
    (array<long>) + the signature's low bytes (``s8`` array<tinyint>).  The
    full 64-bit signature never leaves the Python worker: banding needs only
    the folds and the estimate only the low byte of each component.
@@ -23,8 +23,9 @@ Dataflow (all Arrow-batched, no per-row Python):
    join contents back and compute the exact shingle Jaccard per pair in a
    pandas UDF (correctness mode, and the estimate's ambiguous band).
 
-Determinism: all hash seeds derive from ``DedupConfig.seed``; output is
-independent of partitioning.
+Determinism: the shingle and bucket hashes are fixed functions (no seed;
+``DedupConfig.seed`` does not reach them); output is independent of
+partitioning.
 """
 
 from __future__ import annotations
@@ -62,7 +63,8 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
 
 
 def _perm_params(num_perm: int, seed: int):
-    """(a, b) multiply-add parameters; a forced odd for bijectivity mod 2^64."""
+    """(a, b) multiply-add parameters for :func:`_minhash_one`; a forced odd
+    for bijectivity mod 2^64."""
     base = _splitmix64(np.arange(seed, seed + 2 * num_perm, dtype=np.uint64))
     a = base[:num_perm] | np.uint64(1)
     b = base[num_perm:]
@@ -109,11 +111,11 @@ def _fold_bytes(b: bytes) -> np.uint64:
 def _minhash_one(shingles: np.ndarray, a: np.ndarray, b: np.ndarray, chunk: int = 512) -> np.ndarray:
     """Classic minwise: min over shingles of (a*x + b) mod 2^64.
 
-    O(S * P) work and memory traffic — chunked so the (P, chunk) grid stays
-    cache-resident (4096-wide grids thrash the shared L3 when 32 workers run
-    concurrently; measured ~4x aggregate slowdown).  Kept as the
-    ``minhash_mode="classic"`` compatibility path; the default scale path is
-    :func:`_oph_batch` (O(S) per doc).
+    O(S * P) work — chunked so the (P, chunk) grid stays cache-resident.
+    No pipeline runs it: it is the reference that
+    ``tests/test_minhash_kernel.py`` checks the Jaccard estimates of
+    :func:`_oph_batch` (O(S) per doc, the signature every path uses)
+    against.
     """
     num_perm = a.size
     sig = np.full(num_perm, _MASK64, dtype=np.uint64)
@@ -185,7 +187,6 @@ def minhash_signatures(
     config: DedupConfig,
     content_col: str = "content",
     id_col: str = "doc_id",
-    keep_shingles: bool = False,
 ) -> DataFrame:
     """-> (doc_id, s8 array<tinyint>, bands array<long>, n_shingles int).
 
@@ -193,50 +194,32 @@ def minhash_signatures(
     range: ``(sig & 255) - 128``.  It is all :func:`estimate_similarity`
     reads, so it is computed here in numpy and the 8-byte components never
     cross the Arrow boundary (1 byte per component instead of 8).
-
-    ``keep_shingles=True`` additionally returns the sorted unique shingle
-    hashes (``sh array<long>``) so the exact verifier can reuse them —
-    shingling is the dominant Python cost of the pipeline, and without
-    this the verifier re-shingles every participating doc (plus pays a
-    semi-join stage to find them).
     """
     k = config.shingle_size
     tokenize = config.tokenize
     num_perm = config.num_perm
     n_bands, rows = config.bands, config.rows_per_band
-    seed = config.seed
-    mode = getattr(config, "minhash_mode", "oph")
 
     out_schema = f"`{id_col}` long, s8 array<tinyint>, bands array<long>, n_shingles int"
-    if keep_shingles:
-        out_schema += ", sh array<long>"
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        a, b = _perm_params(num_perm, seed) if mode == "classic" else (None, None)
         for pdf in batches:
             n = len(pdf)
             shlists = [
                 shingle_hashes(text or "", k, tokenize) for text in pdf[content_col]
             ]
             counts = np.array([s.size for s in shlists], dtype=np.int64)
-            if mode == "classic":
-                sig_mat = np.stack([_minhash_one(sh, a, b) for sh in shlists]) if n else \
-                    np.empty((0, num_perm), dtype=np.uint64)
-            else:
-                all_sh = np.concatenate(shlists) if n else np.array([], dtype=np.uint64)
-                doc_idx = np.repeat(np.arange(n, dtype=np.uint64), counts)
-                sig_mat = _oph_batch(all_sh, doc_idx, n, num_perm)
+            all_sh = np.concatenate(shlists) if n else np.array([], dtype=np.uint64)
+            doc_idx = np.repeat(np.arange(n, dtype=np.uint64), counts)
+            sig_mat = _oph_batch(all_sh, doc_idx, n, num_perm)
             bands_mat = _band_fold_batch(sig_mat, n_bands, rows)
             s8 = ((sig_mat & np.uint64(255)).astype(np.int16) - 128).astype(np.int8)
-            out = {
+            yield pd.DataFrame({
                 id_col: pdf[id_col],
                 "s8": list(s8),
                 "bands": list(bands_mat.view(np.int64)),
                 "n_shingles": counts,
-            }
-            if keep_shingles:
-                out["sh"] = [s.view(np.int64) for s in shlists]
-            yield pd.DataFrame(out)
+            })
 
     return df.select(id_col, content_col).mapInPandas(compute, schema=out_schema)
 
@@ -376,18 +359,14 @@ def verify_pairs_exact(
     config: DedupConfig,
     content_col: str = "content",
     id_col: str = "doc_id",
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard per candidate pair.
 
-    ``shingles_df`` (doc_id + ``sh array<long>``, e.g. from
-    ``minhash_signatures(..., keep_shingles=True)``) lets the verifier
-    reuse already-computed shingle sets.  Without it, each *participating*
-    doc is shingled exactly once (semi-join of the corpus against the pair
-    ids — the re-shingle-per-pair alternative costs O(pairs x doc_len)
-    Python work and dominated the stage).  The sorted unique hash arrays
-    are joined to the pairs and intersected with a linear merge
-    (``np.intersect1d`` on pre-sorted arrays, Arrow-batched).
+    Each *participating* doc is shingled exactly once (semi-join of the
+    corpus against the pair ids — the re-shingle-per-pair alternative
+    costs O(pairs x doc_len) Python work and dominated the stage).  The
+    sorted unique hash arrays are joined to the pairs and intersected with
+    a linear merge (``np.intersect1d`` on pre-sorted arrays, Arrow-batched).
 
     A JVM-side alternative (``size(array_intersect)`` + inclusion-
     exclusion union — bit-identical output) was tried in r4 and REVERTED:
@@ -399,31 +378,27 @@ def verify_pairs_exact(
     saved mapInPandas stage does not pay for that.  Exactness here is
     what makes the >=0.99-recall-vs-oracle guarantee testable.
     """
-    if shingles_df is not None:
-        sh_df = shingles_df.select(id_col, "sh")
-    else:
-        # no .distinct() on ids: left-semi join already deduplicates the
-        # probe side, and the distinct costs a full exchange + aggregate
-        ids = pairs.select(F.col("id_a").alias(id_col)).union(
-            pairs.select(F.col("id_b").alias(id_col))
-        )
-        participating = corpus.select(id_col, content_col).join(ids, id_col, "left_semi")
-        # sh_df feeds BOTH sides of the pair join below; without a persist
-        # Spark recomputes the whole semi-join + Python shingling subtree
-        # once per side (measured: the verify stage's wall doubled).
-        # Callers that manage cache lifecycles themselves should pass
-        # ``shingles_df``; this localCheckpoint keeps the standalone path
-        # single-compute without leaking a persist the caller can't release.
-        # LAZY, deliberately: Spark executes the join's build sides as
-        # concurrent subqueries, and a lazy checkpoint IS raced — the sides
-        # briefly materialize the subtree redundantly (event-log: 2-3
-        # overlapping jobs).  Measured at 8 fenced cores, that overlap
-        # still beats eager by ~35% wall (21 s vs 32 s): eager materializes
-        # the checkpoint — and its whole upstream — as a serial stage
-        # before the main action, forfeiting all pipeline overlap.
-        sh_df = shingle_table(
-            participating, config, id_col=id_col, content_col=content_col
-        ).localCheckpoint(eager=False)
+    # no .distinct() on ids: left-semi join already deduplicates the
+    # probe side, and the distinct costs a full exchange + aggregate
+    ids = pairs.select(F.col("id_a").alias(id_col)).union(
+        pairs.select(F.col("id_b").alias(id_col))
+    )
+    participating = corpus.select(id_col, content_col).join(ids, id_col, "left_semi")
+    # sh_df feeds BOTH sides of the pair join below; without a persist
+    # Spark recomputes the whole semi-join + Python shingling subtree
+    # once per side (measured: the verify stage's wall doubled).
+    # This localCheckpoint keeps the path single-compute without leaking
+    # a persist the caller can't release.
+    # LAZY, deliberately: Spark executes the join's build sides as
+    # concurrent subqueries, and a lazy checkpoint IS raced — the sides
+    # briefly materialize the subtree redundantly (event-log: 2-3
+    # overlapping jobs).  Measured at 8 fenced cores, that overlap
+    # still beats eager by ~35% wall (21 s vs 32 s): eager materializes
+    # the checkpoint — and its whole upstream — as a serial stage
+    # before the main action, forfeiting all pipeline overlap.
+    sh_df = shingle_table(
+        participating, config, id_col=id_col, content_col=content_col
+    ).localCheckpoint(eager=False)
     a = sh_df.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh_df.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     joined = pairs.join(a, "id_a").join(b, "id_b")

@@ -46,6 +46,10 @@ __all__ = ["DedupPipeline", "DedupResult"]
 # layout (2: ``minhash_sigs`` carries ``s8 array<tinyint>``, not
 # ``sig array<long>``).
 CHECKPOINT_FORMAT = 2
+# Row cap for broadcasting the (doc_id, s8, n_shingles) signature projection
+# into the estimate join (~160 B/row serialized, so ~80 MB at the cap); above
+# it the join is left to AQE's shuffle plan (see ``minhash_edges``).
+SIG8_BROADCAST_MAX_ROWS = 500_000
 _DESCRIPTION = "spark.job.description"
 
 
@@ -185,8 +189,8 @@ class DedupPipeline:
         ).withColumn("content_sha256", F.sha2("content", 256))
 
     def minhash_edges(self, docs: DataFrame) -> DataFrame:
-        # NOTE deliberately NOT keep_shingles=True: persisting every doc's
-        # shingle set multiplies the cached signature footprint by ~100x
+        # The signatures do not carry the shingle sets: persisting every
+        # doc's set multiplies the cached signature footprint by ~100x
         # (measured: GC/paging collapse at 330k docs on an 8g driver).
         # The verifier instead re-shingles only the *participating* docs —
         # a small fraction of the corpus — behind a semi-join.
@@ -265,7 +269,7 @@ class DedupPipeline:
         # Size-gated, so at corpus scale the plan degrades to AQE's shuffle
         # join instead of OOMing executors.
         s8 = minhash.truncated_signatures(sigs)
-        bcast = 0 < n_sigs <= self.config.sig8_broadcast_max_rows
+        bcast = 0 < n_sigs <= SIG8_BROADCAST_MAX_ROWS
         # barrier AFTER est: accepted (union branch) and ambiguous (verify
         # branch) consume it from independent stages.  An un-persisted est
         # was tried in r5 and REVERTED: each consumer then re-runs the

@@ -56,7 +56,6 @@ def main() -> None:
     ap.add_argument("--tokenize", default="char", choices=["char", "word"])
     ap.add_argument("--verify-threshold", type=float, default=0.7)
     ap.add_argument("--verify-mode", default="auto", choices=["auto", "always"])
-    ap.add_argument("--minhash-mode", default="oph", choices=["oph", "classic"])
     ap.add_argument("--anchor-hash", default="rolling", choices=["rolling", "md5"])
     ap.add_argument("--max-bucket-size", type=int, default=200)
     ap.add_argument("--seed", type=int, default=42)
@@ -91,7 +90,6 @@ def main() -> None:
         tokenize=args.tokenize,
         verify_threshold=args.verify_threshold,
         verify_mode=args.verify_mode,
-        minhash_mode=args.minhash_mode,
         anchor_hash=args.anchor_hash,
         max_bucket_size=args.max_bucket_size,
         seed=args.seed,

@@ -65,11 +65,28 @@ def test_rows_only_queries_run(spark, name):
     assert len(df.columns) >= 2
 
 
+def _cache_manager(spark):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
 def test_entry_smoke(spark):
+    spark.catalog.clearCache()
     df = entry_mod.entry(spark)
     rows = df.collect()
     assert len(rows) > 0
     assert set(df.columns) == {"cluster_size", "n_clusters"}
+    assert _cache_manager(spark).isEmpty()
+
+
+def test_dedup_cluster_sizes_releases_its_cache(spark):
+    """The pipeline hands its edges over persisted; the histogram does not
+    read them, so the query releases them and leaves no cached frame."""
+    spark.catalog.clearCache()
+    df = entry_mod.queries()["dedup_cluster_sizes"](spark, SF_SMOKE)
+    rows = sorted(tuple(r) for r in df.collect())
+    assert rows
+    assert _cache_manager(spark).isEmpty()
+    assert sorted(tuple(r) for r in df.collect()) == rows
 
 
 def test_streaming_lsh_dedup_removes_its_scratch_dir(spark):

@@ -1,14 +1,12 @@
-"""io readers/writers, public API, transliterate op, multimodal plumbing."""
+"""io readers/writers, public API, transliterate op."""
 
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from fuzzy_matching_spark import api
 from fuzzy_matching_spark.config import FuzzyAlgorithm, MatchConfig, MatchFieldConfig, TransliterationConfig
 from fuzzy_matching_spark.io import readers
-from fuzzy_matching_spark.operators import multimodal
 from fuzzy_matching_spark.operators.transliterate import transliterate_dataset
 
 
@@ -117,522 +115,3 @@ def test_transliterate_disabled_noop(spark):
     cfg = MatchConfig(fields=[MatchFieldConfig("name", 1.0)])
     df = spark.createDataFrame([("Щедрин",)], schema="name string")
     assert transliterate_dataset(df, cfg).collect()[0]["name"] == "Щедрин"
-
-
-# --- multimodal plumbing --------------------------------------------------------
-
-def test_media_metadata_and_decode_stub(spark):
-    rows = [
-        (1, b"\x89PNG\r\n" + b"x" * 40),
-        (2, b"\xff\xd8\xff\xe0" + b"y" * 10),
-        (3, b"plain bytes"),
-    ]
-    df = spark.createDataFrame(rows, schema="media_id long, payload binary")
-    meta = multimodal.with_media_metadata(df)
-    kinds = {r["media_id"]: r["media_kind"] for r in meta.collect()}
-    assert kinds == {1: "png", 2: "jpeg", 3: "unknown"}
-    sizes = {r["media_id"]: r["media_size"] for r in meta.collect()}
-    assert sizes[3] == len(b"plain bytes")
-
-    feats = multimodal.decode_image_features(df, dim=16)
-    got = {r["media_id"]: r["features"] for r in feats.collect()}
-    assert all(len(v) == 16 for v in got.values())
-    # deterministic: same payload -> same features
-    feats2 = {r["media_id"]: r["features"] for r in multimodal.decode_image_features(df, dim=16).collect()}
-    assert got == feats2
-
-
-def test_decode_strict_raises(spark):
-    df = spark.createDataFrame([(1, b"x")], schema="media_id long, payload binary")
-    with pytest.raises(Exception):  # NotImplementedError surfaces as PythonException
-        multimodal.decode_image_features(df, strict=True).collect()
-
-
-def test_video_frame_plan(spark):
-    df = spark.createDataFrame([(1, 100), (2, 10)], schema="media_id long, n_frames int")
-    plan = multimodal.sample_video_frames(df, stride=30, max_frames=8)
-    got = sorted((r["media_id"], r["frame_index"]) for r in plan.collect())
-    assert got == [(1, 0), (1, 30), (1, 60), (1, 90), (2, 0)]
-
-
-# --- native image decode (PPM/PGM/BMP, pure numpy) ---------------------------
-
-def _bmp_bytes(pixels):
-    """Build an uncompressed 24-bit BMP from an RGB array (H, W, 3)."""
-    import struct
-
-    import numpy as np
-
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w, _ = px.shape
-    row_bytes = (w * 3 + 3) & ~3
-    raster = bytearray()
-    for row in px[::-1]:  # bottom-up
-        line = bytes(int(v) for p in row for v in p[::-1])  # RGB -> BGR
-        raster += line + b"\x00" * (row_bytes - len(line))
-    pix_off = 14 + 40
-    size = pix_off + len(raster)
-    header = struct.pack("<2sIHHI", b"BM", size, 0, 0, pix_off)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(raster), 2835, 2835, 0, 0)
-    return header + dib + bytes(raster)
-
-
-def test_decode_ppm_golden():
-    import numpy as np
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    px = np.array(
-        [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [10, 20, 30]]], dtype=np.uint8
-    )
-    payload = b"P6\n# a comment\n2 2\n255\n" + px.tobytes()
-    got = multimodal.decode_ppm(payload)
-    assert (got == px).all()
-    # grayscale P5
-    gray = np.array([[0, 128], [255, 7]], dtype=np.uint8)
-    got5 = multimodal.decode_ppm(b"P5 2 2 255 " + gray.tobytes())
-    assert (got5 == gray).all()
-
-
-def test_decode_bmp_golden():
-    import numpy as np
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    px = np.arange(3 * 5 * 3, dtype=np.uint8).reshape(3, 5, 3)  # odd width -> padding
-    got = multimodal.decode_bmp(_bmp_bytes(px))
-    assert got.shape == (3, 5, 3)
-    assert (got == px).all()
-
-
-def _png_bytes(img, filter_type=0):
-    """Minimal PNG encoder for tests: real chunks + CRCs, chosen per-row
-    filter (``filter_type=None`` cycles all five filters row by row).
-
-    Filters predict from the RECONSTRUCTED neighbor bytes, which during
-    encoding are just the original pixels — so the forward transform uses
-    the raw previous row/pixel directly (RFC 2083 §6).
-    """
-    import struct
-    import zlib
-
-    import numpy as np
-
-    arr = np.asarray(img, dtype=np.uint8)
-    if arr.ndim == 2:
-        ctype, arr = 0, arr[:, :, None]
-    else:
-        ctype = {2: 4, 3: 2, 4: 6}[arr.shape[2]]
-    h, w, c = arr.shape
-    raw = bytearray()
-    prev = np.zeros(w * c, dtype=np.int16)
-    for y in range(h):
-        row = arr[y].reshape(-1).astype(np.int16)
-        f = (y % 5) if filter_type is None else filter_type
-        left = np.concatenate([np.zeros(c, np.int16), row[:-c]]) if w * c > c else np.zeros_like(row)
-        upleft = np.concatenate([np.zeros(c, np.int16), prev[:-c]]) if w * c > c else np.zeros_like(row)
-        if f == 0:
-            enc = row
-        elif f == 1:
-            enc = (row - left) & 255
-        elif f == 2:
-            enc = (row - prev) & 255
-        elif f == 3:
-            enc = (row - ((left + prev) >> 1)) & 255
-        else:  # Paeth
-            pa = np.abs(prev - upleft)
-            pb = np.abs(left - upleft)
-            pc = np.abs(left + prev - 2 * upleft)
-            pred = np.where(
-                (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, upleft)
-            )
-            enc = (row - pred) & 255
-        raw.append(f)
-        raw.extend(enc.astype(np.uint8).tobytes())
-        prev = row
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_decode_png_roundtrip_all_filters_and_colortypes():
-    import numpy as np
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    rng = np.random.default_rng(123)
-    for shape in [(5, 7), (5, 7, 2), (5, 7, 3), (5, 7, 4), (1, 1, 3), (3, 1)]:
-        img = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        for f in [0, 1, 2, 3, 4, None]:  # None = cycle filters per row
-            got = multimodal.decode_png(_png_bytes(img, filter_type=f))
-            assert np.array_equal(got, img), (shape, f)
-
-
-def test_decode_png_unsupported_variants_follow_stub_contract(spark):
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    # palette color type (3) is out of native scope -> ValueError
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0)
-    pal = (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(b"\x00\x00\x00\x00\x00\x00"))
-        + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError):
-        multimodal.decode_png(pal)
-
-    # through the operator: unsupported variant stubs (lenient) / raises (strict)
-    good = _png_bytes(np.arange(12, dtype=np.uint8).reshape(2, 2, 3), filter_type=4)
-    df = spark.createDataFrame([(1, bytearray(good)), (2, bytearray(pal))],
-                               "media_id long, payload binary")
-    rows = {r["media_id"]: r["features"]
-            for r in multimodal.decode_image_features(df, dim=4).collect()}
-    expected = multimodal.image_grid_features(
-        np.arange(12, dtype=np.uint8).reshape(2, 2, 3), dim=4
-    )
-    assert np.allclose(rows[1], expected)
-    assert len(rows[2]) == 4  # deterministic stub, full width
-    with pytest.raises(Exception, match="NotImplementedError|no native decoder"):
-        multimodal.decode_image_features(df, dim=4, strict=True).collect()
-
-
-def test_image_grid_features_exact():
-    import numpy as np
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    # 4x4 grayscale, dim=4 -> 2x2 grid of exact quadrant means
-    img = np.array(
-        [[0, 0, 100, 100], [0, 0, 100, 100], [200, 200, 50, 50], [200, 200, 50, 50]],
-        dtype=np.uint8,
-    )
-    got = multimodal.image_grid_features(img, dim=4)
-    want = np.array([0, 100, 200, 50], dtype=np.float64) / 255.0
-    assert np.allclose(got, want.astype(np.float32))
-    with pytest.raises(ValueError, match="perfect square"):
-        multimodal.image_grid_features(img, dim=5)
-
-
-def test_decode_image_features_native_vs_stub(spark):
-    """PPM/BMP payloads decode for real inside the Spark UDF (and strict
-    mode accepts them); non-raster payloads keep the stub/strict contract."""
-    import numpy as np
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    px = np.full((8, 8, 3), 60, dtype=np.uint8)
-    px[:4, :, :] = 240  # top half bright
-    ppm = b"P6\n8 8\n255\n" + px.tobytes()
-    bmp = _bmp_bytes(px)
-    rows = [(1, ppm), (2, bmp), (3, b"not an image")]
-    df = spark.createDataFrame(rows, schema="media_id long, payload binary")
-    got = {
-        r["media_id"]: np.array(r["features"])
-        for r in multimodal.decode_image_features(df, dim=4).collect()
-    }
-    want = np.array([240, 240, 60, 60]) / 255.0
-    assert np.allclose(got[1], want.astype(np.float32))
-    assert np.allclose(got[2], got[1])  # same pixels, either container
-    assert got[3].shape == (4,)  # stub path still yields the fixed width
-
-    # strict mode: native formats pass, the non-image row raises
-    native = spark.createDataFrame(rows[:2], schema="media_id long, payload binary")
-    assert multimodal.decode_image_features(native, dim=4, strict=True).count() == 2
-    with pytest.raises(Exception):
-        multimodal.decode_image_features(df, dim=4, strict=True).collect()
-
-
-def test_media_magic_detects_native_formats(spark):
-    from fuzzy_matching_spark.operators import multimodal
-
-    rows = [(1, b"P6 1 1 255 abc"), (2, b"P5 1 1 255 a"), (3, b"BM" + b"\x00" * 60)]
-    df = spark.createDataFrame(rows, schema="media_id long, payload binary")
-    kinds = {r["media_id"]: r["media_kind"] for r in multimodal.with_media_metadata(df).collect()}
-    assert kinds == {1: "ppm", 2: "pgm", 3: "bmp"}
-
-
-# --- native audio decode (RIFF/WAVE PCM, pure numpy) -------------------------
-
-def _wav_bytes(samples, rate=8000, bits=16, channels=1, fmt_tag=1):
-    """Build a RIFF/WAVE payload from a float array in [-1, 1]."""
-    import struct
-
-    import numpy as np
-
-    x = np.asarray(samples, dtype=np.float64)
-    if fmt_tag == 3:
-        bits = 32
-        raw = x.astype("<f4").tobytes()
-    elif bits == 8:
-        raw = (np.round(x * 127) + 128).astype(np.uint8).tobytes()
-    elif bits == 16:
-        raw = np.round(x * 32767).astype("<i2").tobytes()
-    else:
-        raw = np.round(x * 2147483647).astype("<i4").tobytes()
-    block = channels * bits // 8
-    fmt = struct.pack(
-        "<HHIIHH", fmt_tag, channels, rate, rate * block, block, bits
-    )
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(raw)) + raw + b"\x00" * (len(raw) & 1)
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_decode_wav_golden():
-    import numpy as np
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    x = np.array([0.0, 0.5, -0.5, 1.0, -1.0, 0.25])
-    got, rate = multimodal.decode_wav(_wav_bytes(x, rate=44100, bits=16))
-    assert rate == 44100
-    assert np.allclose(got, x, atol=1.5 / 32768)
-    # 8-bit unsigned and float32 encodings
-    got8, _ = multimodal.decode_wav(_wav_bytes(x, bits=8))
-    assert np.allclose(got8, x, atol=1.5 / 128)
-    gotf, _ = multimodal.decode_wav(_wav_bytes(x, fmt_tag=3))
-    assert np.allclose(gotf, x)
-    # stereo mixes down by mean: interleaved [L0 R0 L1 R1 ...]
-    st = np.array([0.5, -0.5, 1.0, 0.0])
-    got2, _ = multimodal.decode_wav(_wav_bytes(st, channels=2))
-    assert np.allclose(got2, [0.0, 0.5], atol=1.5 / 32768)
-    with pytest.raises(ValueError, match="not a RIFF/WAVE"):
-        multimodal.decode_wav(b"RIFFxxxxAVI " + b"\x00" * 16)
-
-
-def test_audio_band_features_exact():
-    import numpy as np
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    # 4 constant-amplitude blocks -> RMS == |amplitude| per window
-    x = np.repeat([0.0, 0.5, -1.0, 0.25], 100)
-    got = multimodal.audio_band_features(x, dim=4)
-    assert np.allclose(got, np.float32([0.0, 0.5, 1.0, 0.25]))
-    assert multimodal.audio_band_features(np.array([]), dim=4).tolist() == [0] * 4
-
-
-def test_decode_audio_features_native_vs_stub(spark):
-    """WAV payloads decode for real inside the Spark UDF (strict accepts
-    them, sample_rate surfaced); other payloads keep the stub contract."""
-    import numpy as np
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    x = np.repeat([0.5, -0.25], 200)
-    rows = [(1, _wav_bytes(x, rate=16000)), (2, b"not audio")]
-    df = spark.createDataFrame(rows, schema="media_id long, payload binary")
-    got = {r["media_id"]: r for r in multimodal.decode_audio_features(df, dim=2).collect()}
-    assert np.allclose(np.array(got[1]["features"]), [0.5, 0.25], atol=1e-4)
-    assert got[1]["sample_rate"] == 16000
-    assert len(got[2]["features"]) == 2 and got[2]["sample_rate"] is None
-
-    native = spark.createDataFrame(rows[:1], schema="media_id long, payload binary")
-    assert multimodal.decode_audio_features(native, strict=True).count() == 1
-    with pytest.raises(Exception):
-        multimodal.decode_audio_features(df, strict=True).collect()
-
-    kinds = {
-        r["media_id"]: r["media_kind"]
-        for r in multimodal.with_media_metadata(df).collect()
-    }
-    assert kinds == {1: "wav", 2: "unknown"}
-
-
-# --- native video decode (uncompressed 24-bit AVI, pure numpy) ----------------
-
-def _avi_bytes(frames, compressed=False):
-    """Build a minimal RIFF/AVI payload from an RGB frame stack (N, H, W, 3).
-
-    Frames are stored the DIB way: bottom-up, BGR, rows 4-byte padded;
-    ``compressed=True`` writes '00dc' chunks + a non-BI_RGB strf so the
-    codec-required branch can be exercised."""
-    import struct
-
-    import numpy as np
-
-    px = np.asarray(frames, dtype=np.uint8)
-    n, h, w, _ = px.shape
-    row_bytes = (w * 3 + 3) & ~3
-
-    def chunk(cid, body):
-        return cid + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) & 1)
-
-    def list_chunk(form, body):
-        return chunk(b"LIST", form + body)
-
-    def raster(f):
-        out = bytearray()
-        for row in f[::-1]:
-            line = bytes(int(v) for p in row for v in p[::-1])
-            out += line + b"\x00" * (row_bytes - len(line))
-        return bytes(out)
-
-    avih = struct.pack("<14I", 33333, 0, 0, 0, n, 0, 1, row_bytes * h, w, h, 0, 0, 0, 0)
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIII4h",
-        b"vids", b"\x00" * 4 if compressed else b"DIB ",
-        0, 0, 0, 0, 1, 30, 0, n, row_bytes * h, 0, 0, 0, 0, int(w), int(h),
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII",
-        40, w, h, 1, 24, 1 if compressed else 0, row_bytes * h, 0, 0, 0, 0,
-    )
-    hdrl = list_chunk(
-        b"hdrl",
-        chunk(b"avih", avih) + list_chunk(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    fid = b"00dc" if compressed else b"00db"
-    movi = list_chunk(b"movi", b"".join(chunk(fid, raster(f)) for f in px))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_decode_avi_golden():
-    import numpy as np
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    # 3 frames of 2x1 (odd row width -> 2 padding bytes per row)
-    frames = np.array(
-        [
-            [[[255, 0, 0], [0, 255, 0]]],
-            [[[0, 0, 255], [10, 20, 30]]],
-            [[[1, 2, 3], [4, 5, 6]]],
-        ],
-        dtype=np.uint8,
-    )
-    payload = _avi_bytes(frames)
-    got = multimodal.decode_avi_frames(payload)
-    assert [i for i, _ in got] == [0, 1, 2]
-    for (_, g), want in zip(got, frames):
-        assert (g == want).all()
-    # index selection (out-of-range indices are dropped, not errors)
-    sel = multimodal.decode_avi_frames(payload, indices=[2, 0, 9])
-    assert [i for i, _ in sel] == [2, 0]
-    assert (sel[0][1] == frames[2]).all()
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not a RIFF/AVI"):
-        multimodal.decode_avi_frames(b"RIFF\x00\x00\x00\x00WAVE")
-    with _pytest.raises(ValueError, match="uncompressed"):
-        multimodal.decode_avi_frames(_avi_bytes(frames, compressed=True))
-
-
-def test_decode_video_features_native_vs_stub(spark):
-    """AVI payloads decode frame-by-frame inside the Spark UDF with the
-    sample_video_frames stride/cap plan; other payloads keep the stub
-    contract (max_frames digest-seeded rows)."""
-    import numpy as np
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    # 5 uniform-color frames, 2x2: grid features == luma/255 per cell
-    lumas = [0, 51, 102, 153, 204]
-    frames = np.stack(
-        [np.full((2, 2, 3), v, dtype=np.uint8) for v in lumas]
-    )
-    rows = [(1, _avi_bytes(frames)), (2, b"not video")]
-    df = spark.createDataFrame(rows, schema="media_id long, payload binary")
-    out = multimodal.decode_video_features(df, dim=4, stride=2, max_frames=2).collect()
-    native = sorted(
-        (r["frame_index"], r["features"]) for r in out if r["media_id"] == 1
-    )
-    # stride 2, cap 2 over 5 frames -> frames 0 and 2
-    assert [i for i, _ in native] == [0, 2]
-    assert np.allclose(native[0][1], [0.0] * 4)
-    assert np.allclose(native[1][1], [102 / 255.0] * 4)
-    stub = [r for r in out if r["media_id"] == 2]
-    assert sorted(r["frame_index"] for r in stub) == [0, 2]
-    assert all(len(r["features"]) == 4 for r in stub)
-
-    # strict: AVI accepted, anything else raises through the UDF
-    only_avi = spark.createDataFrame(rows[:1], schema="media_id long, payload binary")
-    assert multimodal.decode_video_features(only_avi, strict=True, stride=1).count() == 5
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        multimodal.decode_video_features(df, strict=True).collect()
-
-    kinds = {
-        r["media_id"]: r["media_kind"]
-        for r in multimodal.with_media_metadata(df).collect()
-    }
-    assert kinds[1] == "avi"
-
-
-def test_avi_roundtrip_property():
-    """Property: any frame stack survives _avi_bytes -> decode_avi_frames
-    bit-exactly (random sizes exercise row padding and frame counts)."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        n=st.integers(1, 4),
-        h=st.integers(1, 7),
-        w=st.integers(1, 7),
-        seed=st.integers(0, 2**31 - 1),
-    )
-    def check(n, h, w, seed):
-        rng = np.random.default_rng(seed)
-        frames = rng.integers(0, 256, size=(n, h, w, 3), dtype=np.uint8)
-        got = multimodal.decode_avi_frames(_avi_bytes(frames))
-        assert len(got) == n
-        for (i, g), want in zip(got, frames):
-            assert (g == want).all()
-
-    check()
-
-
-def test_wav_roundtrip_property():
-    """Property: float32 samples survive _wav_bytes(fmt_tag=3) -> decode_wav
-    exactly; 16-bit PCM within quantization error."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from fuzzy_matching_spark.operators import multimodal
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        n=st.integers(1, 200),
-        rate=st.sampled_from([8000, 16000, 44100]),
-        seed=st.integers(0, 2**31 - 1),
-    )
-    def check(n, rate, seed):
-        rng = np.random.default_rng(seed)
-        x = rng.uniform(-1, 1, size=n)
-        got_f, r1 = multimodal.decode_wav(_wav_bytes(x, rate=rate, fmt_tag=3))
-        assert r1 == rate and np.array_equal(got_f, x.astype(np.float32))
-        got_i, _ = multimodal.decode_wav(_wav_bytes(x, rate=rate, bits=16))
-        assert np.allclose(got_i, x, atol=1.5 / 32768)
-
-    check()

@@ -13,7 +13,12 @@ Three gates:
 import pytest
 from pyspark.sql import functions as F
 
-from fuzzy_matching_spark.config import FuzzyAlgorithm, MatchConfig, MatchFieldConfig
+from fuzzy_matching_spark.config import (
+    FuzzyAlgorithm,
+    MatchConfig,
+    MatchFieldConfig,
+    TransliterationConfig,
+)
 from fuzzy_matching_spark.fixtures.persons import generate_person_pair
 from fuzzy_matching_spark.operators.greedy_match import (
     SEQ,
@@ -27,6 +32,22 @@ FIELDS = [
     MatchFieldConfig("Отчество", 0.2),
     MatchFieldConfig("email", 0.1),
 ]
+# perfbench match_persons' per-field scorers
+MIXED_FIELDS = [
+    MatchFieldConfig("Фамилия", 0.4, fuzzy_algorithm=FuzzyAlgorithm.WRatio),
+    MatchFieldConfig("Имя", 0.3, fuzzy_algorithm=FuzzyAlgorithm.TOKEN_SORT),
+    MatchFieldConfig("Отчество", 0.2, fuzzy_algorithm=FuzzyAlgorithm.PARTIAL_RATIO),
+    MatchFieldConfig("email", 0.1, fuzzy_algorithm=FuzzyAlgorithm.RATIO),
+]
+TRANSLIT_KW = dict(
+    fields=[
+        MatchFieldConfig("Фамилия", 0.4, transliterate=True),
+        MatchFieldConfig("Имя", 0.3, transliterate=True),
+        MatchFieldConfig("Отчество", 0.2, transliterate=True),
+        MatchFieldConfig("email", 0.1),
+    ],
+    transliteration=TransliterationConfig(enabled=True, standard="Passport"),
+)
 
 
 def _all_pairs_gen(d1, d2, match_fields):
@@ -43,24 +64,41 @@ def _spark_df(spark, records):
     return spark.createDataFrame(records)
 
 
-@pytest.mark.parametrize("sort_before", [True, False])
-def test_component_greedy_equals_global_greedy(spark, sort_before):
-    """All-pairs candidates + component greedy == single-block global greedy."""
-    orig, var = generate_person_pair(80, seed=7)
+@pytest.mark.parametrize(
+    "sort_before,config_kw,n",
+    [
+        pytest.param(True, {}, 80, id="True"),
+        pytest.param(False, {}, 80, id="False"),
+        pytest.param(True, {"fields": MIXED_FIELDS}, 80, id="mixed-True"),
+        pytest.param(False, {"fields": MIXED_FIELDS}, 80, id="mixed-False"),
+        pytest.param(True, TRANSLIT_KW, 40, id="translit-True"),
+        pytest.param(False, TRANSLIT_KW, 40, id="translit-False"),
+    ],
+)
+def test_component_greedy_equals_global_greedy(spark, sort_before, config_kw, n):
+    """All-pairs candidates + component greedy == single-block global greedy,
+    with the exact same sims: the candidate mode's pair scorer and the
+    blocked mode's score-matrix kernel agree to the last bit for the RATIO
+    config, the mixed-scorer config and a transliterating config."""
+    orig, var = generate_person_pair(n, seed=7)
     cfg = MatchConfig(
-        fields=FIELDS,
-        threshold=0.6,
-        block_field=None,  # blocked mode degenerates to one "ALL" block
-        sort_before_match=sort_before,
-        fuzzy_algorithm=FuzzyAlgorithm.RATIO,
+        **{
+            "fields": FIELDS,
+            "threshold": 0.6,
+            "block_field": None,  # blocked mode degenerates to one "ALL" block
+            "sort_before_match": sort_before,
+            "fuzzy_algorithm": FuzzyAlgorithm.RATIO,
+            **config_kw,
+        }
     )
     m = SparkMatcher(cfg)
     d1 = _spark_df(spark, orig)
     d2 = _spark_df(spark, var)
     blocked, _, _ = m.match_pairs(d1, d2)
     comp, _, _ = m.match_pairs(d1, d2, candidates=_all_pairs_gen)
-    assert _pair_set(blocked) == _pair_set(comp)
-    assert len(_pair_set(blocked)) > 0
+    want = {tuple(r) for r in blocked.collect()}
+    assert {tuple(r) for r in comp.collect()} == want
+    assert len(want) > 0
 
 
 def test_blocked_vs_lsh_parity_on_disjoint_blocks(spark):

@@ -135,20 +135,6 @@ def test_config_score_matrix_matches_weighted_similarity():
             assert got[i, j] == want  # exact float equality
 
 
-def test_scorer_udf_matches_get_similarity(spark):
-    df = spark.createDataFrame(
-        [("Ivan", "ivan"), ("hello world", "world hello"), ("", "x"), (None, "y")],
-        schema="a string, b string",
-    )
-    udf = scoring.scorer_udf("token_sort_ratio")
-    rows = df.select(udf("a", "b").alias("s")).collect()
-    want = [
-        pairscore.get_similarity(a, b, FuzzyAlgorithm.TOKEN_SORT, FuzzyAlgorithm.TOKEN_SORT)
-        for a, b in [("Ivan", "ivan"), ("hello world", "world hello"), ("", "x"), (None, "y")]
-    ]
-    assert [r["s"] for r in rows] == want
-
-
 def test_long_strings_multiword():
     s1 = "x" * 500 + "abc" + "y" * 500
     s2 = "z" * 300 + "abc" + "w" * 100
@@ -187,18 +173,14 @@ def test_partial_ratio_windows_property():
     check()
 
 
-@pytest.mark.parametrize("with_matrix", [False, True], ids=["sparse", "matrix"])
-def test_dedup_pair_scores_matches_rowwise(with_matrix):
+def test_dedup_pair_scores_matches_rowwise():
     """The unique-combination scorer returns exactly the row-by-row scores
-    on a batch with many repeated values and repeated (a, b) combinations,
-    in both its sparse (pairwise) and rectangular (matrix) branches."""
+    on a batch with many repeated values and repeated (a, b) combinations."""
     rng = random.Random(23)
     pool_a = _rand_strings(rng, 40, "abc d", 0, 12)
     pool_b = _rand_strings(rng, 40, "abd c", 0, 12)
     a = [rng.choice(pool_a) for _ in range(3000)]
     b = [rng.choice(pool_b) for _ in range(3000)]
-    got = scoring._dedup_pair_scores(
-        a, b, batchlcs.ratio_pairs, batchlcs.ratio_matrix if with_matrix else None
-    )
+    got = scoring._dedup_pair_scores(a, b, batchlcs.ratio_pairs)
     assert got.dtype == np.float64
     assert list(got) == [fuzz.ratio(x, y) for x, y in zip(a, b)]
