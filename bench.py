@@ -146,6 +146,7 @@ def run_matcher() -> None:
         FuzzyAlgorithm, MatchConfig, MatchFieldConfig,
     )
     from fuzzy_matching_spark.fixtures.persons import generate_person_pair
+    from fuzzy_matching_spark.operators import greedy_match
     from fuzzy_matching_spark.operators.greedy_match import SparkMatcher
     from fuzzy_matching_spark.pipeline.session import build_session
 
@@ -160,7 +161,7 @@ def run_matcher() -> None:
             MatchFieldConfig("email", 0.1),
         ]
 
-    def measure(n: int, algo: FuzzyAlgorithm, **matcher_kw) -> tuple[float, list[float], int, str]:
+    def measure(n: int, algo: FuzzyAlgorithm) -> tuple[float, list[float], int, str]:
         orig, var = generate_person_pair(n, seed=42)
         # pandas-built frames: Arrow local relations evaluate JVM-side like
         # the file-backed frames real flows read; list-built frames replay a
@@ -175,7 +176,7 @@ def run_matcher() -> None:
         )
         walls, n_matches, strategy = [], 0, "?"
         for _ in range(3):
-            m = SparkMatcher(cfg, **matcher_kw)
+            m = SparkMatcher(cfg)
             t0 = time.time()
             matches, cons = m.match_and_consolidate(d1, d2)
             n_matches = matches.count()
@@ -199,7 +200,13 @@ def run_matcher() -> None:
     rows = {}
     for algo in scorers:
         rows[algo.value] = measure(1000, algo)
-    dist = measure(1000, FuzzyAlgorithm.RATIO, driver_match_max_rows=0)
+    # the same RATIO n=1000 match with the driver-local gate off
+    gate = greedy_match.DRIVER_MAX_ROWS
+    greedy_match.DRIVER_MAX_ROWS = 0
+    try:
+        dist = measure(1000, FuzzyAlgorithm.RATIO)
+    finally:
+        greedy_match.DRIVER_MAX_ROWS = gate
     big = measure(10000, FuzzyAlgorithm.RATIO)
 
     ratio_w = rows["ratio"][0]
@@ -232,8 +239,7 @@ def run_matcher() -> None:
             "inputs are pure stage latency on the distributed plan),\n"
             "`distributed` = the executor-parallel plan that production\n"
             "sizes take (n=10000 exceeds the 4096-row gate; the second\n"
-            "RATIO n=1000 row turns the gate off with\n"
-            "`driver_match_max_rows=0`).\n\n"
+            "RATIO n=1000 row turns the gate off).\n\n"
             "| scorer | n | strategy | warm wall (s) | all walls (s) | matches |\n"
             "|---|---|---|---|---|---|\n"
             + "".join(
@@ -246,8 +252,7 @@ def run_matcher() -> None:
             "(r2 bar: <= 1.5x; the reference itself pays 1.33x — "
             "0.0991 / 0.0744 s, benchmark_results_table.txt:39-40).\n\n"
             "Sublinearity: the two `distributed` RATIO rows run the\n"
-            "distributed plan on 10x different data (n=1000 in its\n"
-            "small-input shape, `SMALL_ROWS`), so their ratio separates\n"
+            "distributed plan on 10x different data, so their ratio separates\n"
             "fixed per-job latency (which production-size inputs amortize)\n"
             "from scoring cost.  Absolute walls on a shared host swing 2-3x\n"
             "with contention; compare rows within one file, not across\n"

@@ -63,13 +63,32 @@ BK = "_fm_bk"
 # T=256 3.51 s, T=512 3.59 s — flat within noise, so the middle one.
 TILE = 256
 
-# At or below this many total input rows a match counts as *small*: the
-# blocked plan ranks each side in 8 block-key partitions instead of
-# ``spark.sql.shuffle.partitions``, and the greedy's pair table is broadcast
-# into the consolidation joins, so a latency-class input pays as few stage
-# barriers as possible.  Candidates (LSH) mode also skips its pair-stream
-# rebalance below it.
-SMALL_ROWS = 3_000
+# The driver-local strategy gate (``SparkMatcher._try_local``): a blocked
+# match runs on the driver when both inputs together hold at most
+# DRIVER_MAX_ROWS rows, DRIVER_CHAR_BUDGET characters of match-field and
+# block-field text and DRIVER_PAIR_BUDGET blocked pairs (the pair budget
+# divided by the scorer's kernel cost).  DRIVER_MAX_ROWS = 0 turns the gate
+# off.
+DRIVER_MAX_ROWS = 4_096
+DRIVER_CHAR_BUDGET = 2_000_000
+DRIVER_PAIR_BUDGET = 2_000_000
+
+
+def _as_strings(df: DataFrame) -> DataFrame:
+    """Every column but ``_fm_seq`` cast to string, NULL -> "" (the
+    reference loads every field as str).  One ``selectExpr``: building
+    the same projection from Column objects costs a py4j round-trip per
+    call, ~0.1 s per side on the driver path's 7-column inputs."""
+
+    def q(c: str) -> str:
+        return "`" + c.replace("`", "``") + "`"
+
+    return df.selectExpr(
+        *[
+            q(c) if c == SEQ else f"coalesce(cast({q(c)} as string), '') as {q(c)}"
+            for c in df.columns
+        ]
+    )
 
 
 def _tile_scorer(config: MatchConfig):
@@ -282,46 +301,25 @@ class SparkMatcher:
     consolidation join-backs, anti-joins) reads the same snapshot — the
     determinism guard for inputs downstream of a shuffle/aggregation,
     whose partition row order Spark does not promise to reproduce across
-    re-evaluations.  :meth:`unpersist` releases them.  Whether a match is
-    *small* (``SMALL_ROWS``) reads the exact input counts, which are free:
-    the pinned inputs must materialize anyway.
+    re-evaluations.  :meth:`unpersist` releases them.
 
-    ``driver_match_max_rows`` / ``driver_match_char_budget`` /
-    ``driver_match_pair_budget``: the driver-local strategy gate (see
-    :mod:`fuzzy_matching_spark.operators.local_match`).  When a blocked
-    match (no ``candidates``) has both inputs together fitting in
-    ``max_rows``, their match-field text in ``char_budget`` and the
-    blocked pair volume in ``pair_budget`` (scaled down 64x for
-    transliterate-enabled configs, whose scoring is scalar per unique
-    pair), the whole match — any scorer, transliteration included — runs
-    on the driver through the same batched LCS kernel the executors use;
-    at toy sizes the distributed plan is pure stage latency, ~6 scheduler
-    round-trips for sub-millisecond partitions.  All three budgets bound
-    the probe itself (``limit(cap+1)`` collects, never a full scan), so
-    the gate is safe to leave on at any input scale;
-    ``driver_match_max_rows=0`` disables it (tests that target the
-    distributed plan pin this).  The gate's pair budget is further scaled
-    down by a per-scorer cost factor (PARTIAL_RATIO expands each pair into
-    a window sweep, WRatio cascades into it): a single driver core should
-    only take on work it finishes faster than the cluster's fixed stage
-    latency.  ``last_strategy`` records which path ran.
-
-    The blocked scoring stage has one plan (see :meth:`match_pairs`):
-    tiles of the within-block rank order, joined on the block key,
-    hash-spread and scored as ``config_score_matrix`` blocks.
+    One strategy decision: a blocked match (no ``candidates``) whose
+    inputs fit the driver gate (``DRIVER_MAX_ROWS`` rows together,
+    ``DRIVER_CHAR_BUDGET`` characters, ``DRIVER_PAIR_BUDGET`` blocked pairs
+    scaled down by the scorer's kernel cost and 64x for
+    transliteration) runs on the driver through the same batched kernel
+    the executors use (:mod:`fuzzy_matching_spark.operators.local_match`);
+    at that size the distributed plan is pure stage latency.  The probe
+    reads at most ``DRIVER_MAX_ROWS + 1`` string-coerced rows per side in
+    one ``limit`` collect, never a full scan, so it is safe at any input
+    scale.  Everything else takes the one distributed plan (see
+    :meth:`match_pairs`): tiles of the within-block rank order, joined on
+    the block key, hash-spread and scored as ``config_score_matrix``
+    blocks.  ``last_strategy`` records which path ran.
     """
 
-    def __init__(
-        self,
-        config: MatchConfig,
-        driver_match_max_rows: int = 4_096,
-        driver_match_char_budget: int = 2_000_000,
-        driver_match_pair_budget: int = 2_000_000,
-    ):
+    def __init__(self, config: MatchConfig):
         self.config = config
-        self.driver_match_max_rows = driver_match_max_rows
-        self.driver_match_char_budget = driver_match_char_budget
-        self.driver_match_pair_budget = driver_match_pair_budget
         # observability: "driver" | "distributed", set per match call
         self.last_strategy: str | None = None
         self.match_fields = [fc.field for fc in config.fields]
@@ -331,9 +329,6 @@ class SparkMatcher:
         # match jobs call it once the results are consumed, otherwise
         # executor storage accumulates across invocations (ADVICE r3)
         self._persisted: list[DataFrame] = []
-        # set by match_pairs: True when the input was at or under
-        # SMALL_ROWS, enabling the latency-oriented consolidation plan
-        self._last_small = False
 
     def unpersist(self, blocking: bool = False) -> None:
         """Release every frame this matcher persisted.
@@ -351,12 +346,7 @@ class SparkMatcher:
     # ------------------------------------------------------------------
     def _prepare(self, df: DataFrame) -> DataFrame:
         """String-coerce record fields (reference loads everything as str)."""
-        out = df
-        for f in df.columns:
-            if f == SEQ:
-                continue
-            out = out.withColumn(f, F.coalesce(F.col(f).cast("string"), F.lit("")))
-        out = attach_seq(out)
+        out = attach_seq(_as_strings(df))
         if self.config.block_field:
             key = block_key(F.col(self.config.block_field))
             if self.config.group_fields:
@@ -370,22 +360,11 @@ class SparkMatcher:
         return out.withColumn(BK, key)
 
     # ------------------------------------------------------------------
-    def _ranked(self, d: DataFrame, rank_col: str, numparts: int | None = None) -> DataFrame:
+    def _ranked(self, d: DataFrame, rank_col: str) -> DataFrame:
         """Within-block processing rank = the reference's stable sort order
-        ((sort keys..., input seq) — unique SEQ makes it total).
-
-        ``numparts`` pre-partitions on the block key: the window, the tile
-        grouping and the block equi-join all accept clustering by ``BK``,
-        so one explicit k-partition exchange here satisfies them with a
-        single shuffle per side sized for the small-input path
-        (latency-bound, where per-stage scheduling dominates); large
-        inputs keep ``spark.sql.shuffle.partitions``.  Pure execution
-        hint — row content, ranks and greedy output are
-        partitioning-independent."""
+        ((sort keys..., input seq) — unique SEQ makes it total)."""
         from pyspark.sql.window import Window
 
-        if numparts:
-            d = d.repartition(numparts, F.col(BK))
         w = Window.partitionBy(BK).orderBy(
             *[F.col(c) for c in self._order_cols(d)], F.col(SEQ)
         )
@@ -461,35 +440,26 @@ class SparkMatcher:
         # partition row order (file scans, createDataFrame).  The prepared
         # frames feed BOTH the scoring join here and the consolidation
         # join-backs in match_and_consolidate, so pin them (ADVICE r2):
-        # persist + the eager size-gating counts below populate the cache
-        # BEFORE any downstream consumer runs, so every stage reads the
-        # same snapshot and the seqs cannot diverge even for shuffled
-        # inputs — short of cache eviction under memory pressure, the one
-        # residual (documented) hazard.  localCheckpoint would close that
-        # too but measured 3-5x slower end-to-end (its lazy materialization
-        # races concurrent consumers; eager forfeits pipeline overlap).
+        # persist + the pin count below populate the cache BEFORE any
+        # downstream consumer runs, so every stage reads the same snapshot
+        # and the seqs cannot diverge even for shuffled inputs — short of
+        # cache eviction under memory pressure, the one residual
+        # (documented) hazard.  localCheckpoint would close that too but
+        # measured 3-5x slower end-to-end (its lazy materialization races
+        # concurrent consumers; eager forfeits pipeline overlap).
         # The persist intentionally outlives this call: the returned
         # matches/consolidated plans keep referencing d1/d2.
         d1 = self._prepare(df1).persist()
         d2 = self._prepare(df2).persist()
         self._persisted.extend([d1, d2])
-        # reset BEFORE branching: a stale True from an earlier small blocked
-        # run must not leak a broadcast hint onto a (possibly huge)
-        # candidates-mode pair table in match_and_consolidate
-        self._last_small = False
+        # ONE pin job for both sides: the union scan materializes both
+        # persisted frames.  (InMemoryRelation caches whole rows on first
+        # scan, so the narrow projection still populates the full pin.)
+        d1.select(SEQ).unionAll(d2.select(SEQ)).count()
         if candidates is not None:
             return self._match_pairs_candidates(d1, d2, candidates)
-        # ONE pin/stats job for both sides (was two counts, VERDICT r3 #6):
-        # the union scan materializes both persisted frames and returns the
-        # total row count that decides ``small``.  (InMemoryRelation caches
-        # whole rows on first scan, so the narrow projection still
-        # populates the full pin.)
-        total_rows = d1.select(SEQ).unionAll(d2.select(SEQ)).count()
-        small = total_rows <= SMALL_ROWS
-        self._last_small = small  # consumed by match_and_consolidate
-        numparts = 8 if small else None
-        ta = self._tiles(self._ranked(d1, "_lr", numparts), "_lr", "_ti", "_ta")
-        tb = self._tiles(self._ranked(d2, "_rr", numparts), "_rr", "_tj", "_tb")
+        ta = self._tiles(self._ranked(d1, "_lr"), "_lr", "_ti", "_ta")
+        tb = self._tiles(self._ranked(d2, "_rr"), "_rr", "_tj", "_tb")
         # the block equi-join pairs every left tile with every right tile of
         # its block; spreading the tile pairs by hash turns a hot block into
         # ceil(n_a/T) * ceil(n_b/T) independent tasks
@@ -556,10 +526,11 @@ class SparkMatcher:
 
         # spread the lefts across the cluster, each left's candidates in one
         # partition so its repeated values collapse in the scorer's
-        # unique-pair pass (skipped for small inputs — see SMALL_ROWS)
-        if d1.count() + d2.count() > SMALL_ROWS:
-            par = joined.sparkSession.sparkContext.defaultParallelism
-            joined = joined.repartition(max(32, par * 2), F.col("left_seq"))
+        # unique-pair pass.  No partition count: AQE sizes the exchange.  A
+        # fixed max(32, 2 x cores) measured 16-19 s against 10-12 s on the
+        # 500-document greedy_match_lsh_oracle query and no faster on
+        # 2 x 2,100 persons (37.8 s vs 38.4 s warm, 820,394 candidates).
+        joined = joined.repartition(F.col("left_seq"))
 
         scorer = scoring.make_general_pair_scorer(config)
         scored = joined.withColumn(
@@ -598,74 +569,49 @@ class SparkMatcher:
         """Probe the driver-local strategy gate; run it if everything fits.
 
         Returns ``(matches, consolidated)`` DataFrames, or ``None`` to fall
-        back to the distributed plan.  Bounded by construction: reads at
-        most ``driver_match_max_rows + 1`` rows per side via ``limit`` —
-        on a 100 TB source that is a one-partition scan, and an oversize
-        probe costs two trivial jobs before the distributed plan proceeds.
-        String-typed columns are required (the engine's data model; the
-        distributed ``_prepare`` would stringify, but mixed-type frames
-        keep the fully-tested distributed path).
+        back to the distributed plan.  Bounded by construction: one job
+        collects at most ``DRIVER_MAX_ROWS + 1`` rows per side via
+        ``limit`` — on a 100 TB source that is a one-partition scan.  The
+        probe reads the columns through ``_prepare``'s string coercion, so
+        any column type takes the same path as on the executors.
         """
-        from pyspark.sql.types import StringType
-
-        cap = self.driver_match_max_rows
+        cap = DRIVER_MAX_ROWS
         if cap <= 0:
             return None
-        if any(
-            not isinstance(f.dataType, StringType)
-            for f in list(df1.schema.fields) + list(df2.schema.fields)
-        ):
-            return None
-        if df1.schema == df2.schema:
-            # one probe job, not two: tag-union both capped sides and split
-            # driver-side.  Each limit collapses to a single-partition
-            # GlobalLimit, so per-side row order in the collect matches the
-            # two-collect path.  Saves one full action round-trip — at this
-            # input size the wall is almost entirely action latency.
-            tagged = df1.limit(cap + 1).withColumn(
-                "_probe_side", F.lit(0)
-            ).unionByName(df2.limit(cap + 1).withColumn("_probe_side", F.lit(1)))
-            rows1, rows2 = [], []
-            for r in tagged.collect():
-                (rows1 if r["_probe_side"] == 0 else rows2).append(r)
-            drop = ("_probe_side",)
-        else:
-            rows1 = df1.limit(cap + 1).collect()
-            if len(rows1) > cap:
-                return None
-            rows2 = df2.limit(cap - len(rows1) + 1).collect()
-            drop = ()
-        if len(rows1) > cap or len(rows1) + len(rows2) > cap:
+        # tag-union both capped sides and split driver-side: each limit
+        # collapses to a single-partition GlobalLimit, so per-side row
+        # order in the collect is input order
+        side = "_probe_side"
+        probe = (
+            _as_strings(df1).limit(cap + 1).withColumn(side, F.lit(0))
+            .unionByName(
+                _as_strings(df2).limit(cap + 1).withColumn(side, F.lit(1)),
+                allowMissingColumns=True,
+            )
+        )
+        names = (df1.columns, df2.columns)
+        l1, l2 = sides = ([], [])
+        for r in probe.collect():
+            d = r.asDict()
+            k = d[side]
+            sides[k].append({c: d[c] for c in names[k]})
+        if len(l1) + len(l2) > cap:
             return None
 
         from fuzzy_matching_spark.operators import local_match
 
-        cols = [c for c in df1.columns if c not in (SEQ, BK)]
-        # the same string coercion _prepare applies (None -> "")
-        def coerce(rows):
-            return [
-                {
-                    c: (v if v is not None else "")
-                    for c, v in zip(r.__fields__, r)
-                    if c not in drop
-                }
-                for r in rows
-            ]
-
-        l1, l2 = coerce(rows1), coerce(rows2)
         probe_fields = set(self.match_fields)
         if self.config.block_field:
             probe_fields.add(self.config.block_field)
         chars = sum(
             len(r.get(f, "")) for rows in (l1, l2) for r in rows for f in probe_fields
         )
-        if chars > self.driver_match_char_budget:
+        if chars > DRIVER_CHAR_BUDGET:
             return None
         # block membership is order-independent, so the volume probe needs
         # no sort replay
         from fuzzy_matching_spark.config import FuzzyAlgorithm
 
-        pair_budget = self.driver_match_pair_budget
         # Per-scorer kernel cost relative to RATIO, measured on the n=1000
         # persons fixture (155k blocked pairs, one core): PARTIAL_RATIO
         # sweeps every alignment window, but through the vectorized
@@ -697,10 +643,10 @@ class SparkMatcher:
             # LCS kernel; a single driver core should only take that on at
             # a fraction of the batched budget
             divisor = max(divisor, 64)
-        pair_budget //= divisor
-        if local_match.pair_volume(l1, l2, self.config) > pair_budget:
+        if local_match.pair_volume(l1, l2, self.config) > DRIVER_PAIR_BUDGET // divisor:
             return None
         self.last_strategy = "driver"
+        cols = [c for c in df1.columns if c not in (SEQ, BK)]
         return local_match.run_local(df1.sparkSession, cols, l1, l2, self.config)
 
     def match_and_consolidate(
@@ -729,12 +675,6 @@ class SparkMatcher:
         # (id pairs + sim) so the plan runs it once, not three times.
         pairs = pairs.persist()
         self._persisted.append(pairs)
-        # small inputs: the pair table is tiny (<= SMALL_ROWS rows of
-        # three scalars), so broadcast it into the three consumers — the
-        # join-backs and anti-joins then read the pinned inputs in place
-        # with NO shuffle at all.  Large inputs keep shuffle joins: a
-        # corpus-scale match output can exceed any broadcast budget.
-        bpairs = F.broadcast(pairs) if self._last_small else pairs
         cols = [c for c in d1.columns if c not in (SEQ, BK)]
 
         clean = cleanliness_col(self.match_fields, self.weights)
@@ -746,7 +686,7 @@ class SparkMatcher:
         b = d2.withColumn("_clean", clean).withColumn("_flen", field_len).alias("b")
 
         joined = (
-            bpairs.alias("p")
+            pairs.alias("p")
             .join(a, F.col("p.left_seq") == F.col(f"a.{SEQ}"))
             .join(b, F.col("p.right_seq") == F.col(f"b.{SEQ}"))
         )
@@ -767,11 +707,11 @@ class SparkMatcher:
         winners = joined.select(winner.alias("w")).select("w.*")
 
         un1 = (
-            d1.join(bpairs.select("left_seq"), d1[SEQ] == F.col("left_seq"), "left_anti")
+            d1.join(pairs.select("left_seq"), d1[SEQ] == F.col("left_seq"), "left_anti")
             .select(*cols)
         )
         un2 = (
-            d2.join(bpairs.select("right_seq"), d2[SEQ] == F.col("right_seq"), "left_anti")
+            d2.join(pairs.select("right_seq"), d2[SEQ] == F.col("right_seq"), "left_anti")
             .select(*cols)
         )
         consolidated = winners.unionByName(un1).unionByName(un2)

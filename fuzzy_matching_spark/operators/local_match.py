@@ -14,8 +14,8 @@ second.  This is the same size-by-strategy reasoning the pipeline already
 applies elsewhere: connected components runs a driver union-find below
 2M edges, Spark itself swaps sort-merge joins for broadcasts below a size
 threshold.  Inputs above the budget never reach this module — the probe
-reads at most ``driver_match_max_rows + 1`` rows per side (``limit`` +
-``collect``), so the gate itself is 100 TB-safe.
+reads at most ``greedy_match.DRIVER_MAX_ROWS + 1`` rows per side (one
+tag-unioned ``limit`` + ``collect``), so the gate itself is 100 TB-safe.
 
 Semantics are bit-identical to :class:`~fuzzy_matching_spark.oracle.
 matcher.OracleMatcher`, the reference-parity ground truth

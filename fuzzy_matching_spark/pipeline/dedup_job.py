@@ -83,6 +83,8 @@ class DedupPipeline:
         self.collect_metrics = collect_metrics
         self._metrics: list[tuple[str, str, float]] = []
         self._temp_persists: list[DataFrame] = []
+        # JVM RDDs of the verifier's shingle checkpoints
+        self._temp_checkpoints: list = []
         cfg_json = (
             json.dumps(asdict(self.config), sort_keys=True)
             + repr(sorted(detectors))
@@ -229,7 +231,9 @@ class DedupPipeline:
             # correctness mode: every candidate pair gets the exact
             # shingle-Jaccard; surviving edges are provably >= t
             with self._phase("minhash.verify"):
-                verified = minhash.verify_pairs_exact(pairs, docs, self.config)
+                verified = minhash.verify_pairs_exact(
+                    pairs, docs, self.config, checkpoints=self._temp_checkpoints
+                )
             return verified.filter(F.col("sim") >= t).select(
                 "id_a",
                 "id_b",
@@ -311,7 +315,9 @@ class DedupPipeline:
         # the verifier's local checkpoint plans (and so runs the shuffle
         # stages of) its shingle input at call time: tag those jobs too
         with self._phase("minhash.verify"):
-            verified = minhash.verify_pairs_exact(ambiguous, docs, self.config)
+            verified = minhash.verify_pairs_exact(
+                ambiguous, docs, self.config, checkpoints=self._temp_checkpoints
+            )
         verified = verified.filter(F.col("sim") >= t)
         # score semantics marker (ADVICE r2): estimate-accepted edges carry
         # the byte-truncated signature-agreement estimate (quantized to
@@ -372,7 +378,10 @@ class DedupPipeline:
         finally:
             for df in self._temp_persists:
                 df.unpersist()
+            for rdd in self._temp_checkpoints:
+                rdd.unpersist(False)
             self._temp_persists.clear()
+            self._temp_checkpoints.clear()
 
     def _run(self, corpus: DataFrame) -> DedupResult:
         # NOT persisted: every consumer reads the superset `tagged` cache

@@ -58,7 +58,13 @@ def main() -> None:
     ap.add_argument("--verify-mode", default="auto", choices=["auto", "always"])
     ap.add_argument("--anchor-hash", default="rolling", choices=["rolling", "md5"])
     ap.add_argument("--max-bucket-size", type=int, default=200)
-    ap.add_argument("--seed", type=int, default=42)
+    ap.add_argument(
+        "--seed",
+        type=int,
+        default=42,
+        help="SimHash token-hash seed; MinHash signatures do not depend on it "
+        "(their shingle and bucket hashes are fixed)",
+    )
     ap.add_argument(
         "--streaming",
         action="store_true",

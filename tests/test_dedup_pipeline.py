@@ -219,8 +219,12 @@ def test_checkpoint_resume(spark, corpus_df, tmp_path):
 @pytest.mark.parametrize("verify_mode", ["auto", "always"])
 def test_run_releases_every_cached_frame(spark, corpus_df, tmp_path, verify_mode, collect_metrics):
     """After run(), both writes and unpersisting the handed-over edges, no
-    cached Dataset is left: every persist the pipeline made is released."""
+    cached Dataset and no persisted RDD is left: every persist the pipeline
+    made is released."""
+    jsc = spark.sparkContext._jsc
     spark.catalog.clearCache()
+    for rdd in list(jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     config = DedupConfig(verify_mode=verify_mode)
     result = DedupPipeline(
@@ -231,6 +235,7 @@ def test_run_releases_every_cached_frame(spark, corpus_df, tmp_path, verify_mode
     assert not cache_manager.isEmpty()  # edges reach the caller cached
     result.edges.unpersist(blocking=True)
     assert cache_manager.isEmpty()
+    assert len(jsc.getPersistentRDDs()) == 0
 
 
 @pytest.mark.parametrize("driver_threshold", [2_000_000, 0])

@@ -7,8 +7,8 @@ Three fences (operators/local_match.py docstring):
 2. ``SparkMatcher`` driver path == distributed path exactly on the same
    inputs (both return DataFrames with the same schema and values).
 3. The dispatch gate: small inputs go local for every scorer (and for
-   transliteration, under a 64x-shrunk pair budget); non-string columns,
-   oversize rows, char budget and pair-volume budget each force the
+   transliteration, under a 64x-shrunk pair budget) and for any column
+   type; oversize rows, char budget and pair-volume budget each force the
    distributed plan.
 """
 
@@ -21,6 +21,7 @@ from fuzzy_matching_spark.config import (
     TransliterationConfig,
 )
 from fuzzy_matching_spark.fixtures.persons import generate_person_pair
+from fuzzy_matching_spark.operators import greedy_match
 from fuzzy_matching_spark.operators.greedy_match import SparkMatcher
 from fuzzy_matching_spark.operators.local_match import LocalBatchedMatcher, pair_volume
 from fuzzy_matching_spark.oracle.matcher import OracleMatcher
@@ -146,7 +147,7 @@ def _run(spark, matcher, orig, var):
 @pytest.mark.parametrize(
     "algo", [FuzzyAlgorithm.RATIO, FuzzyAlgorithm.TOKEN_SORT], ids=["ratio", "token_sort"]
 )
-def test_driver_path_equals_distributed(spark, algo):
+def test_driver_path_equals_distributed(spark, monkeypatch, algo):
     orig, var = generate_person_pair(150, seed=42)
     config = cfg(fuzzy_algorithm=algo)
 
@@ -154,7 +155,8 @@ def test_driver_path_equals_distributed(spark, algo):
     lm, lc, lm_df = _run(spark, local, orig, var)
     assert local.last_strategy == "driver"
 
-    dist = SparkMatcher(config, driver_match_max_rows=0)
+    monkeypatch.setattr(greedy_match, "DRIVER_MAX_ROWS", 0)
+    dist = SparkMatcher(config)
     dm, dc, dm_df = _run(spark, dist, orig, var)
     assert dist.last_strategy == "distributed"
     dist.unpersist()
@@ -197,7 +199,7 @@ def test_gate_every_scorer_goes_driver(spark):
         assert matcher.last_strategy == "driver", algo
 
 
-def test_gate_translit_pair_budget_shrinks_64x(spark):
+def test_gate_translit_pair_budget_shrinks_64x(spark, monkeypatch):
     """Transliterate-enabled configs score scalar per unique pair, so the
     gate divides their pair budget by 64: a volume that fits the batched
     budget forces the distributed plan once transliteration is on."""
@@ -205,54 +207,84 @@ def test_gate_translit_pair_budget_shrinks_64x(spark):
     vol = pair_volume(orig, var, cfg())
     assert vol > 0
     budget = vol * 32  # fits plain (vol <= budget), not translit (vol > budget/64)
-    plain = SparkMatcher(cfg(), driver_match_pair_budget=budget)
+    monkeypatch.setattr(greedy_match, "DRIVER_PAIR_BUDGET", budget)
+    plain = SparkMatcher(cfg())
     plain.match_and_consolidate(_spark_df(spark, orig), _spark_df(spark, var))
     assert plain.last_strategy == "driver"
 
-    translit = SparkMatcher(cfg(**TRANSLIT_KW), driver_match_pair_budget=budget)
+    translit = SparkMatcher(cfg(**TRANSLIT_KW))
     translit.match_and_consolidate(_spark_df(spark, orig), _spark_df(spark, var))
     assert translit.last_strategy == "distributed"
     translit.unpersist()
 
 
-def test_gate_oversize_goes_distributed(spark):
+def test_gate_oversize_goes_distributed(spark, monkeypatch):
+    monkeypatch.setattr(greedy_match, "DRIVER_MAX_ROWS", 50)
     orig, var = generate_person_pair(60, seed=5)
-    matcher = SparkMatcher(cfg(), driver_match_max_rows=50)
+    matcher = SparkMatcher(cfg())
     matcher.match_and_consolidate(_spark_df(spark, orig), _spark_df(spark, var))
     assert matcher.last_strategy == "distributed"
     matcher.unpersist()
 
 
-def test_gate_char_budget_goes_distributed(spark):
+def test_gate_char_budget_goes_distributed(spark, monkeypatch):
+    monkeypatch.setattr(greedy_match, "DRIVER_CHAR_BUDGET", 100)
     orig, var = generate_person_pair(60, seed=5)
-    matcher = SparkMatcher(cfg(), driver_match_char_budget=100)
+    matcher = SparkMatcher(cfg())
     matcher.match_and_consolidate(_spark_df(spark, orig), _spark_df(spark, var))
     assert matcher.last_strategy == "distributed"
     matcher.unpersist()
 
 
-def test_gate_pair_budget_goes_distributed(spark):
+def test_gate_pair_budget_goes_distributed(spark, monkeypatch):
+    monkeypatch.setattr(greedy_match, "DRIVER_PAIR_BUDGET", 10)
     orig, var = generate_person_pair(60, seed=5)
-    matcher = SparkMatcher(cfg(), driver_match_pair_budget=10)
+    matcher = SparkMatcher(cfg())
     matcher.match_and_consolidate(_spark_df(spark, orig), _spark_df(spark, var))
     assert matcher.last_strategy == "distributed"
     matcher.unpersist()
 
 
-def test_gate_non_string_column_goes_distributed(spark):
-    df1 = spark.createDataFrame([(1, "ann"), (2, "bob")], "doc_id long, name string")
-    df2 = spark.createDataFrame([(3, "anna"), (4, "rob")], "doc_id long, name string")
+def test_long_column_takes_driver_path(spark, monkeypatch):
+    """Non-string columns go through the same string coercion on both
+    paths, so a ``long`` id no longer refuses the driver: same matches
+    with the same similarities, same consolidated multiset."""
+    from collections import Counter
+
+    schema = "doc_id long, name string"
+    left = [(1, "ann"), (2, "bob"), (3, "carl"), (4, None)]
+    right = [(13, "anna"), (14, "rob"), (15, "karl"), (16, "bob")]
     config = MatchConfig(
         fields=[MatchFieldConfig("name", 1.0)],
         threshold=0.5,
         block_field=None,
         sort_before_match=True,
+        sort_field="doc_id",
         fuzzy_algorithm=FuzzyAlgorithm.RATIO,
     )
-    matcher = SparkMatcher(config)
-    matcher.match_and_consolidate(df1, df2)
-    assert matcher.last_strategy == "distributed"
-    matcher.unpersist()
+
+    def run(matcher):
+        m_df, c_df = matcher.match_and_consolidate(
+            spark.createDataFrame(left, schema), spark.createDataFrame(right, schema)
+        )
+        matches = sorted(
+            (r["Оригинал"]["doc_id"], r["Вариант"]["doc_id"], r["Схожесть"])
+            for r in m_df.collect()
+        )
+        return matches, Counter(tuple(r) for r in c_df.collect())
+
+    local = SparkMatcher(config)
+    driver = run(local)
+    assert local.last_strategy == "driver"
+
+    monkeypatch.setattr(greedy_match, "DRIVER_MAX_ROWS", 0)
+    dist = SparkMatcher(config)
+    distributed = run(dist)
+    assert dist.last_strategy == "distributed"
+    dist.unpersist()
+
+    assert driver == distributed
+    assert len(driver[0]) > 0
 
 
 def test_pair_volume_counts_block_intersection():

@@ -16,6 +16,7 @@ from fuzzy_matching_spark.config import (
     TransliterationConfig,
 )
 from fuzzy_matching_spark.fixtures.persons import generate_person_pair
+from fuzzy_matching_spark.operators import greedy_match
 from fuzzy_matching_spark.operators.greedy_match import SparkMatcher, minhash_candidates
 from fuzzy_matching_spark.oracle.matcher import OracleMatcher
 
@@ -39,6 +40,14 @@ def base_config(**kw):
     return MatchConfig(**base)
 
 
+@pytest.fixture
+def distributed(monkeypatch):
+    """Turn the driver-local gate off: without it, small simple configs
+    would dispatch to the driver-local path (tests/test_local_match.py
+    covers that path and the dispatch gate)."""
+    monkeypatch.setattr(greedy_match, "DRIVER_MAX_ROWS", 0)
+
+
 def spark_df(spark, records):
     cols = list(records[0].keys())
     return spark.createDataFrame(
@@ -57,11 +66,9 @@ def run_both(spark, config, n=150, seed=42):
 
     df1 = spark_df(spark, originals)
     df2 = spark_df(spark, variants)
-    # driver_match_max_rows=0: this suite's purpose is the DISTRIBUTED
-    # plan vs the oracle; without the pin, small simple configs would
-    # silently dispatch to the driver-local path (tests/test_local_match.py
-    # covers that path and the dispatch gate)
-    matcher = SparkMatcher(config, driver_match_max_rows=0)
+    # callers turn the gate off (the `distributed` fixture): this suite's
+    # purpose is the DISTRIBUTED plan vs the oracle
+    matcher = SparkMatcher(config)
     s_matches_df, s_cons_df = matcher.match_and_consolidate(df1, df2)
     assert matcher.last_strategy == "distributed"
     s_matches = [
@@ -94,7 +101,7 @@ def run_both(spark, config, n=150, seed=42):
     ],
     ids=["flagship", "token_sort", "partial", "wratio", "thr09", "nosort", "noblock", "translit"],
 )
-def test_spark_matches_oracle(spark, config_kw):
+def test_spark_matches_oracle(spark, distributed, config_kw):
     config = base_config(**config_kw)
     n = 60 if config_kw.get("block_field", "x") is None else 150
     (o_matches, o_cons), (s_matches, s_cons) = run_both(spark, config, n=n)
@@ -110,7 +117,7 @@ def test_spark_matches_oracle(spark, config_kw):
     assert s_ids == o_ids
 
 
-def test_per_field_algorithm_override(spark):
+def test_per_field_algorithm_override(spark, distributed):
     config = base_config(
         fields=[
             MatchFieldConfig("Фамилия", 0.4, fuzzy_algorithm=FuzzyAlgorithm.TOKEN_SET),
@@ -129,7 +136,7 @@ def test_per_field_algorithm_override(spark):
     assert len(s_pairs) > 0
 
 
-def test_parallelism_invariance(spark):
+def test_parallelism_invariance(spark, distributed):
     """local[8] session at two shuffle-partition settings -> identical output
     (stand-in for the N vs 4N determinism requirement at test scale)."""
     config = base_config()
@@ -140,7 +147,7 @@ def test_parallelism_invariance(spark):
     results = []
     for parts in ("2", "16"):
         spark.conf.set("spark.sql.shuffle.partitions", parts)
-        m, c = SparkMatcher(config, driver_match_max_rows=0).match_and_consolidate(df1, df2)
+        m, c = SparkMatcher(config).match_and_consolidate(df1, df2)
         results.append(
             (
                 sorted((r["Оригинал"]["id"], r["Вариант"]["id"], round(r["Схожесть"], 9)) for r in m.collect()),
@@ -172,7 +179,7 @@ def _local_vs_distributed(spark, config, originals, variants):
         sorted((m["Оригинал"]["id"], m["Вариант"]["id"], m["Схожесть"]) for m in l_matches),
         Counter(record_key(r) for r in l_cons),
     )
-    matcher = SparkMatcher(config, driver_match_max_rows=0)
+    matcher = SparkMatcher(config)
     m_df, c_df = matcher.match_and_consolidate(
         spark_df(spark, originals), spark_df(spark, variants)
     )
@@ -222,7 +229,7 @@ _TRANSLIT = dict(
 @pytest.mark.parametrize(
     "sizes,seed,config_kw,tile,edit",
     [
-        # crosses SMALL_ROWS; the largest blocks span two tiles a side
+        # the largest blocks span two tiles a side
         ((1600, 1600), 11, {}, None, None),
         # many ragged tiles per block: ranks stay block-global across tiles
         ((300, 300), 5, {"fuzzy_algorithm": FuzzyAlgorithm.WRatio}, 16, None),
@@ -235,7 +242,9 @@ _TRANSLIT = dict(
     ids=["multi_tile", "small_tiles", "lopsided", "one_sided_keys", "blank_keys",
          "group_fields", "translit"],
 )
-def test_tiled_scoring_matches_local(spark, monkeypatch, sizes, seed, config_kw, tile, edit):
+def test_tiled_scoring_matches_local(
+    spark, monkeypatch, distributed, sizes, seed, config_kw, tile, edit
+):
     """Distributed tiled scoring == LocalBatchedMatcher: same matches with
     the same similarities, same consolidated multiset."""
     from fuzzy_matching_spark.operators import greedy_match
@@ -256,12 +265,12 @@ def test_tiled_scoring_matches_local(spark, monkeypatch, sizes, seed, config_kw,
     assert len(local[0]) > 0
 
 
-@pytest.mark.parametrize("mode", ["blocked", "lsh"])
-def test_unpersist_releases_every_cached_frame(spark, mode):
-    """The matcher always pins its prepared inputs (the ``_fm_seq``
-    determinism guard) and caches the greedy pair table; once both outputs
-    are consumed, ``unpersist`` must leave no cached Dataset and no
-    persisted RDD behind."""
+@pytest.mark.parametrize("mode", ["blocked", "lsh", "driver"])
+def test_unpersist_releases_every_cached_frame(spark, monkeypatch, mode):
+    """The distributed plan always pins its prepared inputs (the
+    ``_fm_seq`` determinism guard) and caches the greedy pair table; once
+    both outputs are consumed, ``unpersist`` must leave no cached Dataset
+    and no persisted RDD behind.  The driver path caches nothing."""
     jsc = spark.sparkContext._jsc
     # start from an empty cache so only this matcher's persists are counted
     spark.catalog.clearCache()
@@ -270,20 +279,18 @@ def test_unpersist_releases_every_cached_frame(spark, mode):
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
 
     originals, variants = generate_person_pair(300, seed=21)
+    kw = {"candidates": minhash_candidates()} if mode == "lsh" else {}
     if mode == "blocked":
-        matcher = SparkMatcher(base_config(), driver_match_max_rows=0)
-        kw = {}
-    else:
-        matcher = SparkMatcher(base_config())
-        kw = {"candidates": minhash_candidates()}
+        monkeypatch.setattr(greedy_match, "DRIVER_MAX_ROWS", 0)
+    matcher = SparkMatcher(base_config())
     matches, consolidated = matcher.match_and_consolidate(
         spark_df(spark, originals), spark_df(spark, variants), **kw
     )
-    assert matcher.last_strategy == "distributed"
+    assert matcher.last_strategy == ("driver" if mode == "driver" else "distributed")
     assert matches.collect()
     assert consolidated.collect()
-    assert not cache_manager.isEmpty()
-
-    matcher.unpersist(blocking=True)
+    if mode != "driver":
+        assert not cache_manager.isEmpty()
+        matcher.unpersist(blocking=True)
     assert cache_manager.isEmpty()
     assert len(jsc.getPersistentRDDs()) == 0
