@@ -24,6 +24,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -136,12 +137,12 @@ def run_matcher() -> None:
     """Matcher-latency bench -> BENCH/MATCHER.md (VERDICT r3 #8: a standing
     bench entry so drift in the small-n matcher path is caught per-round).
 
-    Protocol mirrors the r2/r3 hand measurements: full match_and_consolidate
-    (both outputs counted = two result actions + consolidation joins) on the
-    n=1000 distorted-persons fixture per scorer, 3 runs each in one session,
-    warm = min of runs 2-3; plus RATIO at n=1000 with the driver-local gate
-    off (what the gate saves) and the n=10000 RATIO flow for the
-    sublinearity check."""
+    Protocol: full match_and_consolidate (both outputs counted = two result
+    actions + consolidation joins) on the n=1000 distorted-persons fixture
+    per scorer, 5 runs each in one session; warm = median of runs 2-5,
+    reported with their min-max (run 1 carries first-plan warm-up); plus
+    RATIO at n=1000 with the driver-local gate off (what the gate saves)
+    and the n=10000 RATIO flow for the sublinearity check."""
     from fuzzy_matching_spark.config import (
         FuzzyAlgorithm, MatchConfig, MatchFieldConfig,
     )
@@ -161,7 +162,7 @@ def run_matcher() -> None:
             MatchFieldConfig("email", 0.1),
         ]
 
-    def measure(n: int, algo: FuzzyAlgorithm) -> tuple[float, list[float], int, str]:
+    def measure(n: int, algo: FuzzyAlgorithm) -> tuple[float, str, list[float], int, str]:
         orig, var = generate_person_pair(n, seed=42)
         # pandas-built frames: Arrow local relations evaluate JVM-side like
         # the file-backed frames real flows read; list-built frames replay a
@@ -175,7 +176,7 @@ def run_matcher() -> None:
             sort_before_match=True, fuzzy_algorithm=algo,
         )
         walls, n_matches, strategy = [], 0, "?"
-        for _ in range(3):
+        for _ in range(5):
             m = SparkMatcher(cfg)
             t0 = time.time()
             matches, cons = m.match_and_consolidate(d1, d2)
@@ -184,7 +185,9 @@ def run_matcher() -> None:
             walls.append(round(time.time() - t0, 2))
             strategy = m.last_strategy
             m.unpersist()
-        return min(walls[1:]), walls, n_matches, strategy
+        warm = sorted(walls[1:])
+        spread = f"{warm[0]}-{warm[-1]}"
+        return round(statistics.median(warm), 2), spread, walls, n_matches, strategy
 
     scorers = [
         FuzzyAlgorithm.RATIO,
@@ -232,22 +235,27 @@ def run_matcher() -> None:
             f"# Matcher latency — distorted persons, {master}, warm\n\n"
             "Auto-generated by `python bench.py --matcher` (protocol: full\n"
             "`match_and_consolidate`, BOTH outputs counted — two result actions\n"
-            "+ consolidation joins; 3 runs per scorer in one warmed session;\n"
-            "warm = min of runs 2-3; all walls listed).  `strategy` is the\n"
+            "+ consolidation joins; 5 runs per scorer in one warmed session;\n"
+            "warm = median of runs 2-5, with their min-max; all walls\n"
+            "listed).  `strategy` is the\n"
             "execution path SparkMatcher picked: `driver` = the bounded\n"
             "driver-local batched kernel (operators/local_match.py — small\n"
             "inputs are pure stage latency on the distributed plan),\n"
             "`distributed` = the executor-parallel plan that production\n"
             "sizes take (n=10000 exceeds the 4096-row gate; the second\n"
             "RATIO n=1000 row turns the gate off).\n\n"
-            "| scorer | n | strategy | warm wall (s) | all walls (s) | matches |\n"
-            "|---|---|---|---|---|---|\n"
+            "| scorer | n | strategy | warm wall (s) | runs 2-5 min-max (s) "
+            "| all walls (s) | matches |\n"
+            "|---|---|---|---|---|---|---|\n"
             + "".join(
-                f"| {k.upper()} | 1000 | {v[3]} | {v[0]} | {v[1]} | {v[2]} |\n"
-                for k, v in rows.items()
+                f"| {name} | {n} | {v[4]} | {v[0]} | {v[1]} | {v[2]} | {v[3]} |\n"
+                for name, n, v in [
+                    *((k.upper(), 1000, v) for k, v in rows.items()),
+                    ("RATIO", 1000, dist),
+                    ("RATIO", 10000, big),
+                ]
             )
-            + f"| RATIO | 1000 | {dist[3]} | {dist[0]} | {dist[1]} | {dist[2]} |\n"
-            + f"| RATIO | 10000 | {big[3]} | {big[0]} | {big[1]} | {big[2]} |\n\n"
+            + "\n"
             f"PARTIAL_RATIO / RATIO at n=1000: **{partial_x}x** "
             "(r2 bar: <= 1.5x; the reference itself pays 1.33x — "
             "0.0991 / 0.0744 s, benchmark_results_table.txt:39-40).\n\n"

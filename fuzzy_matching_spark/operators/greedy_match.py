@@ -7,27 +7,29 @@ argmax, right-exclusivity).  The Spark mapping separates the parallel part
 from the sequential part:
 
 * derive the block key as a Catalyst expression (``functions.text.block_key``);
-  the block equi-join *is* the reference's intersection rule
+  the block cogroup *is* the reference's intersection rule
   (``data_matcher.py:438-441``) — keys on one side only produce no pairs.
-* **scoring stage** — each side is ranked within its block and cut into
-  tiles of at most ``TILE`` ranks; the block equi-join pairs tiles, the
-  tile pairs are hash-spread over the cluster, and one ``mapInPandas``
-  scores each tile pair as a score-matrix block with the driver-local
-  kernel (``functions.scoring.config_score_matrix``).  A record crosses
-  the JVM->Python boundary once per tile of the other side, not once per
-  candidate pair, and a hot block key ('S' holds ~10% of a real corpus)
-  still splits into many independent tile-pair tasks instead of
-  serializing one cogroup task.
-* **assignment stage** — only the >= threshold edges (with block-local
-  ranks) are shuffled to a per-block greedy that replays the reference's
-  sequential argmax.  Sequential work is O(edges), not O(block^2).
+* **one Python stage per block** — both sides are cogrouped on the block
+  key, so one ``applyInPandas`` call receives a whole block from each side
+  (each record crosses the JVM->Python boundary once).  The call sorts each
+  side into the reference's processing order, scores the block in slices
+  of at most ``TILE`` x ``TILE`` cells with the driver-local kernel
+  (``functions.scoring.config_score_matrix``), keeps only the >= threshold
+  edges and runs the greedy over them, replaying the reference's
+  sequential argmax (``data_matcher.py:438-499`` also scores and assigns
+  one block at a time).  Sequential work is O(edges), not O(block^2).
+  Blocks are hash-partitioned over a fixed 2 x ``defaultParallelism`` tasks.
+  A hot block key ('S' holds ~10% of a real corpus) is one task, and the
+  blocks that hash into that task with it add to it, so that task bounds
+  the stage's wall; skewed keys belong in LSH candidate mode
+  (``match_pairs(candidates=...)``), which has no block key.
 * consolidation is pure DataFrame algebra: cleanliness scores as JVM column
   arithmetic, winner pick via ``when()``, unmatched re-entry via LEFT ANTI
   joins (``data_matcher.py:447-499``).
 
 Determinism: input order is pinned by ``_fm_seq``; within a block the
-processing rank is row_number over (sort keys..., _fm_seq), which equals
-the reference's global stable sort restricted to the block.  Output is
+processing order is (sort keys..., _fm_seq), which equals the reference's
+global stable sort restricted to the block.  Output is
 therefore independent of parallelism (local[8] == local[32]; SURVEY.md
 §5.2.4).
 
@@ -46,6 +48,7 @@ from pyspark.sql import functions as F
 
 from fuzzy_matching_spark.config import MatchConfig
 from fuzzy_matching_spark.functions.text import block_key, cleanliness_col
+from fuzzy_matching_spark.pipeline.session import job_phase
 
 __all__ = ["SparkMatcher", "attach_seq", "minhash_candidates"]
 
@@ -53,14 +56,16 @@ SEQ = "_fm_seq"
 BK = "_fm_bk"
 
 
-# Ranks per tile side in the blocked scorer: each tile pair is one
-# ``config_score_matrix`` call of at most TILE x TILE cells.  Smaller tiles
-# spread a hot block over more tasks but send each record to Python more
-# often (once per tile of the other side); larger tiles amortize the
-# per-call overhead.  Measured on the perfbench ``match_persons`` workload
-# (2 x 2,100 persons, 679,986 blocked pairs; local[4] on a 4-core shared
-# host), 5 alternating seeds per size, median op wall: T=128 3.65 s,
-# T=256 3.51 s, T=512 3.59 s — flat within noise, so the middle one.
+# Rows per side of one ``config_score_matrix`` call in the blocked scorer.
+# A block is scored in TILE x TILE slices inside its one task, so TILE only
+# bounds the size of each kernel call's matrices (a 2,527 x 2,500 block
+# would otherwise build 6.3 M-cell float64 matrices per field); it is not
+# a unit of work per task.  Measured on one core, all blocks of the persons
+# fixture through the cogroup body, RATIO, median of 7 runs at 2 x 2,100
+# rows: T=128 0.40 s, T=256 0.26 s, T=512 0.25 s, T=1024 0.21 s; median of
+# 3 at 2 x 10,000 rows: T=256 4.86 s, T=512 5.33 s, T=1024 4.70 s.  Below
+# 256 the per-call cost shows; above it the times are level within noise,
+# so the smallest matrices of the level range.
 TILE = 256
 
 # The driver-local strategy gate (``SparkMatcher._try_local``): a blocked
@@ -91,40 +96,48 @@ def _as_strings(df: DataFrame) -> DataFrame:
     )
 
 
-def _tile_scorer(config: MatchConfig):
-    """``mapInPandas`` body: score each (left tile, right tile) pair of a
-    block with the driver-local kernel (``config_score_matrix``) and emit
-    only the edges that can take part in the greedy — ``sim > 0`` and
-    ``sim >= threshold`` — with their block ranks and seqs."""
+def _block_matcher(config: MatchConfig, lkeys: list[str], rkeys: list[str]):
+    """Cogroup body: score and assign one block.
+
+    Each side is sorted by its processing order ((order cols..., seq); the
+    unique seq makes it total), so a row's position is its within-block
+    rank.  The block is scored in ``TILE`` x ``TILE`` slices with the
+    driver-local kernel; only the cells that can take part in the greedy
+    (``sim > 0`` and ``sim >= threshold``) become edges."""
     from fuzzy_matching_spark.functions.scoring import config_score_matrix
 
     threshold = config.threshold
+    tile = TILE  # read here, on the driver: the workers import the default
+    greedy = _make_greedy(1, 1)
 
-    def score(batches):
-        for pdf in batches:
-            out = []
-            for bk, ta, tb in zip(pdf[BK], pdf["_ta"], pdf["_tb"]):
-                left = pd.DataFrame.from_records(list(ta))
-                right = pd.DataFrame.from_records(list(tb))
-                m = config_score_matrix(left, right, config)
+    def match(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if left.empty or right.empty:
+            return greedy(pd.DataFrame())
+        left = left.sort_values([*lkeys, SEQ], kind="stable", ignore_index=True)
+        right = right.sort_values([*rkeys, SEQ], kind="stable", ignore_index=True)
+        lr, rr, sims = [], [], []
+        for i0 in range(0, len(left), tile):
+            lt = left.iloc[i0 : i0 + tile]
+            for j0 in range(0, len(right), tile):
+                m = config_score_matrix(lt, right.iloc[j0 : j0 + tile], config)
                 i, j = np.nonzero((m > 0.0) & (m >= threshold))
-                if i.size:
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                BK: bk,
-                                "_lr": left["_rank"].to_numpy()[i],
-                                "_rr": right["_rank"].to_numpy()[j],
-                                "left_seq": left["_seq"].to_numpy()[i],
-                                "right_seq": right["_seq"].to_numpy()[j],
-                                "sim": m[i, j],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+                lr.append(i + i0)
+                rr.append(j + j0)
+                sims.append(m[i, j])
+        lr, rr = np.concatenate(lr), np.concatenate(rr)
+        return greedy(
+            pd.DataFrame(
+                {
+                    "_lk0": lr,
+                    "_rk0": rr,
+                    "left_seq": left[SEQ].to_numpy()[lr],
+                    "right_seq": right[SEQ].to_numpy()[rr],
+                    "sim": np.concatenate(sims),
+                }
+            )
+        )
 
-    return score
+    return match
 
 
 def minhash_candidates(dedup_config=None, fields=None):
@@ -199,50 +212,17 @@ def minhash_candidates(dedup_config=None, fields=None):
     return gen
 
 
-def _greedy_over_edges(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Reference-order greedy 1:1 assignment over one block's edge list.
+def _make_greedy(nlk: int, nrk: int):
+    """Greedy 1:1 assignment over one block's or one connected component's
+    edge list, whose edges all have sim >= threshold and > 0.
 
-    Rows are (block, left rank, right rank, seqs, sim) with sim already
-    >= threshold and > 0.  Processing lefts in rank order and scanning
-    each left's candidates by (sim desc, right rank asc) reproduces the
-    reference's argmax semantics exactly: strict ``>`` keeps the earliest
-    right at equal scores, and a right is consumed on first assignment.
-    """
-    if pdf.empty:
-        return pd.DataFrame({"left_seq": [], "right_seq": [], "sim": []}).astype(
-            {"left_seq": "int64", "right_seq": "int64", "sim": "float64"}
-        )
-    pdf = pdf.sort_values(
-        ["_lr", "sim", "_rr"], ascending=[True, False, True], kind="stable"
-    )
-    taken: set[int] = set()
-    out_l, out_r, out_s = [], [], []
-    cur = None
-    assigned = False
-    for lr, rr, ls, rs, sim in zip(
-        pdf["_lr"], pdf["_rr"], pdf["left_seq"], pdf["right_seq"], pdf["sim"]
-    ):
-        if lr != cur:
-            cur = lr
-            assigned = False
-        if assigned or rr in taken:
-            continue
-        taken.add(rr)
-        assigned = True
-        out_l.append(int(ls))
-        out_r.append(int(rs))
-        out_s.append(float(sim))
-    return pd.DataFrame({"left_seq": out_l, "right_seq": out_r, "sim": out_s})
-
-
-def _make_component_greedy(nlk: int, nrk: int):
-    """Greedy 1:1 assignment over one connected component's edge list.
-
-    The generalization of :func:`_greedy_over_edges` from per-block ranks to
-    explicit order-key tuples: lefts are processed in (order fields...,
-    left_seq) order; within a left, candidates scan by (sim desc, right's
-    order fields..., right_seq).  Strict-``>`` argmax and right-exclusivity
-    semantics are identical to the reference (data_matcher.py:472-497).
+    Lefts are processed in (order keys ``_lk*``..., left_seq) order; within
+    a left, candidates scan by (sim desc, right's order keys ``_rk*``...,
+    right_seq).  Strict-``>`` argmax and right-exclusivity semantics are
+    identical to the reference (data_matcher.py:472-497): strict ``>``
+    keeps the earliest right at equal scores, and a right is consumed on
+    first assignment.  A block passes each row's within-block rank as its
+    one order key; candidate mode passes the order fields themselves.
     """
     lcols = [f"_lk{i}" for i in range(nlk)] + ["left_seq"]
     rcols = [f"_rk{i}" for i in range(nrk)] + ["right_seq"]
@@ -297,7 +277,7 @@ class SparkMatcher:
     """Distributed ``match_and_consolidate`` with reference semantics.
 
     The prepared inputs are always persisted, so the ``_fm_seq`` row ids
-    are computed once and every downstream consumer (scoring join,
+    are computed once and every downstream consumer (scoring cogroup,
     consolidation join-backs, anti-joins) reads the same snapshot — the
     determinism guard for inputs downstream of a shuffle/aggregation,
     whose partition row order Spark does not promise to reproduce across
@@ -313,9 +293,11 @@ class SparkMatcher:
     reads at most ``DRIVER_MAX_ROWS + 1`` string-coerced rows per side in
     one ``limit`` collect, never a full scan, so it is safe at any input
     scale.  Everything else takes the one distributed plan (see
-    :meth:`match_pairs`): tiles of the within-block rank order, joined on
-    the block key, hash-spread and scored as ``config_score_matrix``
-    blocks.  ``last_strategy`` records which path ran.
+    :meth:`match_pairs`): a cogroup on the block key whose one Python call
+    per block scores the block with ``config_score_matrix`` and assigns
+    it.  ``last_strategy`` records which path ran.  The jobs the matcher
+    issues itself carry ``spark.job.description`` ``matcher.probe`` (the
+    gate's collect) and ``matcher.pin`` (the input pin count).
     """
 
     def __init__(self, config: MatchConfig):
@@ -360,29 +342,6 @@ class SparkMatcher:
         return out.withColumn(BK, key)
 
     # ------------------------------------------------------------------
-    def _ranked(self, d: DataFrame, rank_col: str) -> DataFrame:
-        """Within-block processing rank = the reference's stable sort order
-        ((sort keys..., input seq) — unique SEQ makes it total)."""
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy(BK).orderBy(
-            *[F.col(c) for c in self._order_cols(d)], F.col(SEQ)
-        )
-        return d.filter(F.col(BK).isNotNull()).withColumn(
-            rank_col, F.row_number().over(w)
-        )
-
-    def _tiles(self, d: DataFrame, rank_col: str, tile_col: str, list_col: str) -> DataFrame:
-        """Group a ranked side into tiles of at most ``TILE`` consecutive
-        within-block ranks: one row per (block, tile) holding the tile's
-        records as ``array<struct<rank, seq, match fields...>>``."""
-        fields = [f for f in dict.fromkeys(self.match_fields) if f in d.columns]
-        tile = F.floor((F.col(rank_col) - 1) / F.lit(TILE)).alias(tile_col)
-        rec = F.struct(
-            F.col(rank_col).alias("_rank"), F.col(SEQ).alias("_seq"), *fields
-        )
-        return d.groupBy(F.col(BK), tile).agg(F.collect_list(rec).alias(list_col))
-
     def _side_cols(self, d: DataFrame, prefix: str) -> list:
         cols = []
         for i, fc in enumerate(self.config.fields):
@@ -411,34 +370,35 @@ class SparkMatcher:
 
         ``candidates`` swaps the candidate generator: a callable
         ``gen(d1, d2, match_fields) -> DataFrame[left_seq, right_seq]``
-        (e.g. :func:`minhash_candidates`) replaces the block equi-join —
+        (e.g. :func:`minhash_candidates`) replaces the block cogroup —
         the corpus-scale path promised by the module docstring.  Scoring
         semantics (weighted fields, thresholds) and the order-exact greedy
         are identical; ``block_field``/``group_fields`` are ignored because
         the LSH bands *are* the blocking.  See ``_match_pairs_candidates``
         for the component-wise greedy that replaces per-block grouping.
 
-        Execution shape: each side is ranked within its block and cut into
-        tiles of at most ``TILE`` consecutive ranks; the block equi-join
-        pairs tiles, not records, and one ``mapInPandas`` scores each tile
-        pair as a ``config_score_matrix`` block — the kernel
+        Execution shape: both sides are cogrouped on the block key and
+        one ``applyInPandas`` call per block sorts each side into the
+        reference's processing order, scores the block in ``TILE`` x
+        ``TILE`` slices with ``config_score_matrix`` — the kernel
         ``LocalBatchedMatcher`` runs on the driver, so any scorer and
-        transliteration take the same path.  A record crosses to Python
-        once per tile of the other side instead of once per candidate
-        pair, and a hot block still spreads: it becomes
-        ``ceil(n_a/T) * ceil(n_b/T)`` independent tasks.  Only the >=
-        threshold *edges* (with block-local ranks) reach the per-block
-        sequential greedy, which is cheap because the edge list is small.
-        The edge-list greedy is output-identical to the full-matrix
-        argmax: any right that could ever be assigned scores >= threshold
-        (and > 0), so dropping sub-threshold pairs cannot change an argmax
-        that leads to an assignment.
+        transliteration take the same path — and runs the greedy over the
+        >= threshold *edges*.  Each record crosses to Python once, and
+        scoring and assignment share one Python stage: on a small box the
+        per-task fixed cost of a Python stage outweighs the scoring.  The
+        edge-list greedy is output-identical to the full-matrix argmax:
+        any right that could ever be assigned scores >= threshold (and
+        > 0), so dropping sub-threshold pairs cannot change an argmax that
+        leads to an assignment.  Blocks are hash-partitioned over a fixed
+        2 x ``defaultParallelism`` tasks.  The trade-off: a hot block is one
+        task, so the task that holds it, with any block that hashes into
+        it too, bounds the stage's wall; inputs with skewed keys belong
+        in candidate mode.
         """
-        config = self.config
         # _fm_seq derives from monotonically_increasing_id, which is only
         # stable across re-evaluations for sources with deterministic
         # partition row order (file scans, createDataFrame).  The prepared
-        # frames feed BOTH the scoring join here and the consolidation
+        # frames feed BOTH the scoring cogroup here and the consolidation
         # join-backs in match_and_consolidate, so pin them (ADVICE r2):
         # persist + the pin count below populate the cache BEFORE any
         # downstream consumer runs, so every stage reads the same snapshot
@@ -455,26 +415,33 @@ class SparkMatcher:
         # ONE pin job for both sides: the union scan materializes both
         # persisted frames.  (InMemoryRelation caches whole rows on first
         # scan, so the narrow projection still populates the full pin.)
-        d1.select(SEQ).unionAll(d2.select(SEQ)).count()
+        with job_phase(df1.sparkSession, "matcher.pin"):
+            d1.select(SEQ).unionAll(d2.select(SEQ)).count()
         if candidates is not None:
             return self._match_pairs_candidates(d1, d2, candidates)
-        ta = self._tiles(self._ranked(d1, "_lr"), "_lr", "_ti", "_ta")
-        tb = self._tiles(self._ranked(d2, "_rr"), "_rr", "_tj", "_tb")
-        # the block equi-join pairs every left tile with every right tile of
-        # its block; spreading the tile pairs by hash turns a hot block into
-        # ceil(n_a/T) * ceil(n_b/T) independent tasks
-        par = df1.sparkSession.sparkContext.defaultParallelism
-        tile_pairs = (
-            ta.join(tb, BK)
-            .repartition(2 * par, F.col(BK), F.col("_ti"), F.col("_tj"))
-            .select(BK, "_ta", "_tb")
-        )
-        edges = tile_pairs.mapInPandas(
-            _tile_scorer(config),
-            schema=f"{BK} string, _lr int, _rr int, left_seq long, right_seq long, sim double",
-        )
-        pairs = edges.groupBy(BK).applyInPandas(
-            _greedy_over_edges, schema="left_seq long, right_seq long, sim double"
+        lkeys, rkeys = self._order_cols(d1), self._order_cols(d2)
+        # A fixed partition count: AQE coalesces a shuffle by bytes, but the
+        # scoring cost grows with the square of a block's rows, so coalescing
+        # packs every block of a modest input into one task.  AQE leaves an
+        # explicit count alone, and the cogroup reuses this partitioning.
+        # Twice the cores, because few block keys hash unevenly: on the
+        # persons fixture 4 partitions put the three largest blocks in one
+        # task (65% of the cells), 8 leave the largest alone (41%), and
+        # 2 x 40,000 persons took 46-59 s warm at 4 against 33-36 s at 8.
+        par = 2 * df1.sparkSession.sparkContext.defaultParallelism
+
+        def side(d: DataFrame, keys: list[str]):
+            cols = [c for c in dict.fromkeys(keys + self.match_fields) if c in d.columns]
+            return (
+                d.filter(F.col(BK).isNotNull())
+                .select(BK, SEQ, *cols)
+                .repartition(par, F.col(BK))
+                .groupBy(BK)
+            )
+
+        pairs = side(d1, lkeys).cogroup(side(d2, rkeys)).applyInPandas(
+            _block_matcher(self.config, lkeys, rkeys),
+            schema="left_seq long, right_seq long, sim double",
         )
         return pairs, d1, d2
 
@@ -560,7 +527,7 @@ class SparkMatcher:
             labels, "_lid"
         )
         pairs = comp_edges.groupBy("_comp").applyInPandas(
-            _make_component_greedy(len(lkeys), len(rkeys)),
+            _make_greedy(len(lkeys), len(rkeys)),
             schema="left_seq long, right_seq long, sim double",
         )
         return pairs, d1, d2
@@ -591,7 +558,9 @@ class SparkMatcher:
         )
         names = (df1.columns, df2.columns)
         l1, l2 = sides = ([], [])
-        for r in probe.collect():
+        with job_phase(df1.sparkSession, "matcher.probe"):
+            rows = probe.collect()
+        for r in rows:
             d = r.asDict()
             k = d[side]
             sides[k].append({c: d[c] for c in names[k]})

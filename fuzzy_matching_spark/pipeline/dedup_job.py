@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-from contextlib import contextmanager
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +37,7 @@ from pyspark.sql import functions as F
 from fuzzy_matching_spark.config import DedupConfig
 from fuzzy_matching_spark.operators import fingerprint, minhash, simhash
 from fuzzy_matching_spark.operators.connected_components import connected_components
+from fuzzy_matching_spark.pipeline.session import job_phase
 
 __all__ = ["DedupPipeline", "DedupResult"]
 
@@ -50,7 +50,6 @@ CHECKPOINT_FORMAT = 2
 # into the estimate join (~160 B/row serialized, so ~80 MB at the cap); above
 # it the join is left to AQE's shuffle plan (see ``minhash_edges``).
 SIG8_BROADCAST_MAX_ROWS = 500_000
-_DESCRIPTION = "spark.job.description"
 
 
 @dataclass
@@ -107,23 +106,9 @@ class DedupPipeline:
         if hpath.getFileSystem(hconf).exists(hpath):
             self._metrics.append((name, "resumed_from_checkpoint", 1.0))
             return self.spark.read.parquet(path)
-        with self._phase(f"checkpoint.{name}"):
+        with job_phase(self.spark, f"dedup.checkpoint.{name}"):
             builder().write.mode("overwrite").parquet(path)
         return self.spark.read.parquet(path)
-
-    @contextmanager
-    def _phase(self, name: str):
-        """Describe the Spark jobs issued inside as ``dedup.<name>`` (the
-        event log's and UI's ``spark.job.description``), then restore the
-        caller's description.  The job group is left alone: a caller may
-        group a whole run under it."""
-        sc = self.spark.sparkContext
-        outer = sc.getLocalProperty(_DESCRIPTION)
-        sc.setLocalProperty(_DESCRIPTION, f"dedup.{name}")
-        try:
-            yield
-        finally:
-            sc.setLocalProperty(_DESCRIPTION, outer)
 
     def _materialize(
         self,
@@ -170,7 +155,7 @@ class DedupPipeline:
         record = metric and self.collect_metrics
         if not (barrier or record):
             return df, None
-        with self._phase(f"{stage}.{name}"):
+        with job_phase(self.spark, f"dedup.{stage}.{name}"):
             n = df.count()
         if record:
             self._metrics.append((stage, name, float(n)))
@@ -213,7 +198,7 @@ class DedupPipeline:
             bands, _ = self._materialize(bands, "minhash", "bands", barrier=False)
         pairs, bucket_metrics = minhash.candidate_pairs(bands, self.config)
         if self.collect_metrics:
-            with self._phase("minhash.buckets"):
+            with job_phase(self.spark, "dedup.minhash.buckets"):
                 skew = bucket_metrics.filter(F.col("skipped")).agg(
                     F.count("*").alias("n"),
                     F.coalesce(F.sum("size"), F.lit(0)).alias("rows"),
@@ -230,7 +215,7 @@ class DedupPipeline:
         if not auto:
             # correctness mode: every candidate pair gets the exact
             # shingle-Jaccard; surviving edges are provably >= t
-            with self._phase("minhash.verify"):
+            with job_phase(self.spark, "dedup.minhash.verify"):
                 verified = minhash.verify_pairs_exact(
                     pairs, docs, self.config, checkpoints=self._temp_checkpoints
                 )
@@ -314,7 +299,7 @@ class DedupPipeline:
         )
         # the verifier's local checkpoint plans (and so runs the shuffle
         # stages of) its shingle input at call time: tag those jobs too
-        with self._phase("minhash.verify"):
+        with job_phase(self.spark, "dedup.minhash.verify"):
             verified = minhash.verify_pairs_exact(
                 ambiguous, docs, self.config, checkpoints=self._temp_checkpoints
             )
@@ -446,7 +431,7 @@ class DedupPipeline:
 
         # no distinct here: connected_components tolerates duplicate edges
         # (union-find ignores them; the distributed path dedups in `sym`)
-        with self._phase("cluster.components"):
+        with job_phase(self.spark, "dedup.cluster.components"):
             labels = connected_components(edges.select("id_a", "id_b"))
         # ids from a plain scan of the ingested rows, not from `tagged`:
         # the clusters frame is consumed after run() has released tagged's

@@ -9,10 +9,13 @@ boundary in batches, never per row).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-__all__ = ["build_session"]
+__all__ = ["build_session", "job_phase"]
+
+_DESCRIPTION = "spark.job.description"
 
 
 def build_session(
@@ -69,3 +72,18 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_phase(spark: SparkSession, description: str):
+    """Describe the Spark jobs issued inside as ``description`` (the event
+    log's and UI's ``spark.job.description``), then restore the caller's
+    description.  The job group is left alone: a caller may group a whole
+    run under it."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty(_DESCRIPTION)
+    sc.setLocalProperty(_DESCRIPTION, description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_DESCRIPTION, outer)

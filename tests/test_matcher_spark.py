@@ -7,6 +7,8 @@ blocking, cogroup intersection, per-block order, greedy exclusivity,
 cleanliness winner pick and anti-join re-entry.
 """
 
+import re
+
 import pytest
 
 from fuzzy_matching_spark.config import (
@@ -263,6 +265,64 @@ def test_tiled_scoring_matches_local(
     local, dist = _local_vs_distributed(spark, config, originals, variants)
     assert dist == local
     assert len(local[0]) > 0
+
+
+def test_blocked_plan_is_one_python_stage(spark, distributed):
+    """The blocked plan scores and assigns each block in one cogroup call:
+    its executed plan holds exactly one Python operator.  Each side reaches
+    it through one fixed-count block-key exchange that AQE does not
+    coalesce (a coalesced cogroup scores every block in one task)."""
+    originals, variants = generate_person_pair(200, seed=23)
+    matcher = SparkMatcher(base_config())
+    pairs, _, _ = matcher.match_pairs(
+        spark_df(spark, originals), spark_df(spark, variants)
+    )
+    assert pairs.collect()
+    # the final adaptive plan, without the initial plan AQE also prints
+    plan = pairs._jdf.queryExecution().executedPlan().executedPlan().toString()
+    matcher.unpersist()
+    assert plan.count("FlatMapCoGroupsInPandas") == 1
+    for op in ("MapInPandas", "FlatMapGroupsInPandas", "EvalPython"):
+        assert op not in plan
+    par = 2 * spark.sparkContext.defaultParallelism
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
+    assert [(kind, args.split(", ")[-1]) for kind, args in exchanges] == [
+        ("hashpartitioning", str(par))
+    ] * 2
+    assert "AQEShuffleRead" not in plan
+
+
+@pytest.mark.parametrize("gate", ["driver", "distributed"])
+def test_matcher_jobs_carry_phase_tags(spark, monkeypatch, gate):
+    """The jobs SparkMatcher issues itself are described ``matcher.probe``
+    (the driver gate's collect) and ``matcher.pin`` (the input pin count);
+    the caller's description is restored afterwards."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def jobs():
+        jsc.listenerBus().waitUntilEmpty()
+        listed = jsc.statusStore().jobsList(None)
+        return [listed.apply(i) for i in range(listed.size())]
+
+    if gate == "distributed":
+        monkeypatch.setattr(greedy_match, "DRIVER_MAX_ROWS", 0)
+    originals, variants = generate_person_pair(100, seed=29)
+    df1, df2 = spark_df(spark, originals), spark_df(spark, variants)
+    df1.count()  # so the status store lists at least one earlier job
+    last = max(job.jobId() for job in jobs())
+    sc.setLocalProperty("spark.job.description", "caller")
+    try:
+        matcher = SparkMatcher(base_config())
+        matcher.match_and_consolidate(df1, df2)
+        assert matcher.last_strategy == gate
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        expected = {"matcher.probe"} if gate == "driver" else {"matcher.pin"}
+        described = [job.description() for job in jobs() if job.jobId() > last]
+        assert {d.get() if d.isDefined() else None for d in described} == expected
+        matcher.unpersist()
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
 
 
 @pytest.mark.parametrize("mode", ["blocked", "lsh", "driver"])
