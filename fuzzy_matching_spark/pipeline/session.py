@@ -58,7 +58,9 @@ def build_session(
         # workers fork from a daemon that has already imported
         # numpy/pandas/pyarrow + our kernels: the pages are shared COW, so
         # the first Python stage doesn't pay N_workers x (import + first-
-        # touch page faults) — see worker_daemon.py
+        # touch page faults); the daemon also keeps a reused worker's
+        # per-task set-up flat (no zip directory re-reads, a frozen
+        # inherited heap) — see worker_daemon.py
         .config(
             "spark.python.daemon.module",
             "fuzzy_matching_spark.pipeline.worker_daemon",
