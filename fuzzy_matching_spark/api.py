@@ -142,8 +142,6 @@ def match_datasets(
     config: MatchConfig | None = None,
     field_mapping: dict[str, str] | None = None,
     candidate_source: str = "block",
-    candidates=None,
-    lsh_config=None,
     **kwargs,
 ) -> tuple[DataFrame, DataFrame]:
     """-> (matches, consolidated) DataFrames (reference ``api.py:184-217``).
@@ -155,21 +153,16 @@ def match_datasets(
     * ``"lsh"`` — MinHash/LSH band collisions over the concatenated match
       fields (:func:`~fuzzy_matching_spark.operators.greedy_match.minhash_candidates`);
       the corpus-scale path where explicit blocks would be too coarse.
-      ``lsh_config`` (a ``DedupConfig``) tunes shingling/banding.
-
-    ``candidates`` overrides both with any callable
-    ``(d1, d2, match_fields) -> DataFrame[left_seq, right_seq]``.
     """
-    if candidates is None:
-        if candidate_source == "lsh":
-            from fuzzy_matching_spark.operators.greedy_match import minhash_candidates
+    candidates = None
+    if candidate_source == "lsh":
+        from fuzzy_matching_spark.operators.greedy_match import minhash_candidates
 
-            candidates = minhash_candidates(lsh_config)
-        elif candidate_source != "block":
-            raise ValueError(
-                f"unknown candidate_source {candidate_source!r}; "
-                "expected 'block' or 'lsh' (or pass candidates=)"
-            )
+        candidates = minhash_candidates()
+    elif candidate_source != "block":
+        raise ValueError(
+            f"unknown candidate_source {candidate_source!r}; expected 'block' or 'lsh'"
+        )
     matcher = create_matcher(config, **kwargs)
     df1 = _as_df(spark, dataset1, field_mapping)
     df2 = _as_df(spark, dataset2, field_mapping)

@@ -27,23 +27,23 @@ from pyspark.sql import functions as F
 
 __all__ = ["connected_components"]
 
+# An edge set of at most DRIVER_MAX_EDGES rows (2M edges = 32 MB of ids) is
+# solved on the driver; 0 sends every non-empty edge set to the loop.
+DRIVER_MAX_EDGES = 2_000_000
+# Superstep cap of the distributed loop.
+MAX_ITERATIONS = 50
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 50,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    driver_threshold: int = 2_000_000,
-) -> DataFrame:
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """-> (id long, component long): component = min vertex id in the cluster.
 
-    ``edges`` must contain two long id columns; isolated vertices (not in
-    any edge) are absent from the output — union them in with
-    ``component = id`` at the call site if needed.
+    ``edges`` must contain the long id columns ``id_a`` and ``id_b``;
+    isolated vertices (not in any edge) are absent from the output — union
+    them in with ``component = id`` at the call site if needed.
 
     Size-adaptive strategy (same shape as Spark's broadcast-join threshold):
-    an edge set below ``driver_threshold`` rows (2M edges = 32 MB of ids) is
-    collected and solved with a vectorized numpy hash-min in one job — the distributed loop
+    an edge set of at most ``DRIVER_MAX_EDGES`` rows is collected and
+    solved with a vectorized numpy hash-min in one job — the distributed loop
     pays ~5 shuffle-barrier jobs per superstep, which on a small graph is
     pure serial overhead that an extra 4x of executors cannot shrink (it
     dominated the measured scaling efficiency).  Above the threshold the
@@ -58,19 +58,19 @@ def connected_components(
     which serializes the whole edge computation.)
     """
     n_edges = edges.count()
-    if n_edges <= driver_threshold:
+    if n_edges <= DRIVER_MAX_EDGES:
         # Arrow batch transfer, not row collect: collect() deserializes
         # per-row Row objects (~10x the wall of toPandas at 2M rows) and
         # this transfer is serial driver time — it costs the same at every
         # cluster size, so it lands directly on the scaling efficiency.
-        pdf = edges.select(id_a, id_b).toPandas()
+        pdf = edges.select("id_a", "id_b").toPandas()
         return _driver_numpy_cc(
-            pdf[id_a].to_numpy(), pdf[id_b].to_numpy(), edges.sparkSession
+            pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy(), edges.sparkSession
         )
 
     sym = (
-        edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
         .persist()
     )
@@ -88,7 +88,7 @@ def connected_components(
 
     prev_sum = _label_sum(labels)
 
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         msgs = (
             sym.join(labels, sym.src == labels.id)
             .select(F.col("dst").alias("id"), "component")

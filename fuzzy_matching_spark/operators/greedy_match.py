@@ -23,9 +23,10 @@ from the sequential part:
   blocks that hash into that task with it add to it, so that task bounds
   the stage's wall; skewed keys belong in LSH candidate mode
   (``match_pairs(candidates=...)``), which has no block key.
-* consolidation is pure DataFrame algebra: cleanliness scores as JVM column
-  arithmetic, winner pick via ``when()``, unmatched re-entry via LEFT ANTI
-  joins (``data_matcher.py:447-499``).
+* consolidation is pure DataFrame algebra over one frame — left rows LEFT
+  JOIN the pair table, FULL OUTER JOIN the right rows — read as ``matches``
+  (rows with a sim) and ``consolidated`` (one ``when()``: the unmatched
+  record or the cleaner one, ``data_matcher.py:447-499``).
 
 Determinism: input order is pinned by ``_fm_seq``; within a block the
 processing order is (sort keys..., _fm_seq), which equals the reference's
@@ -46,7 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fuzzy_matching_spark.config import MatchConfig
+from fuzzy_matching_spark.config import DedupConfig, MatchConfig
 from fuzzy_matching_spark.functions.text import block_key, cleanliness_col
 from fuzzy_matching_spark.pipeline.session import job_phase
 
@@ -77,6 +78,13 @@ TILE = 256
 DRIVER_MAX_ROWS = 4_096
 DRIVER_CHAR_BUDGET = 2_000_000
 DRIVER_PAIR_BUDGET = 2_000_000
+
+# minhash_candidates' shingling and banding: 64 bands x 2 rows over 3-char
+# shingles, P[collide] = 1-(1-J^2)^64 > 0.99 for J >= 0.3 — generous
+# because the weighted-field scorer, not the LSH, is the precision gate.
+LSH_CONFIG = DedupConfig(
+    shingle_size=3, tokenize="char", num_perm=128, bands=64, rows_per_band=2
+)
 
 
 def _as_strings(df: DataFrame) -> DataFrame:
@@ -140,7 +148,7 @@ def _block_matcher(config: MatchConfig, lkeys: list[str], rkeys: list[str]):
     return match
 
 
-def minhash_candidates(dedup_config=None, fields=None):
+def minhash_candidates():
     """Candidate-generator factory: MinHash/LSH in place of first-char blocks.
 
     Returns a callable ``gen(d1, d2, match_fields) -> DataFrame[left_seq,
@@ -153,31 +161,19 @@ def minhash_candidates(dedup_config=None, fields=None):
     text per record, both sides are unioned with a side-tagged id
     (``seq*2 + side`` — ``monotonically_increasing_id`` keeps bit 63 clear,
     so the shift cannot overflow), and ``minhash.candidate_pairs`` runs on
-    the union; only cross-side collisions survive.  Banding defaults to
-    (64 bands x 2 rows) over 3-char shingles: P[collide] = 1-(1-J^2)^64
-    > 0.99 for J >= 0.3 — generous because the weighted-field scorer, not
-    the LSH, is the precision gate.
-
-    ``fields`` restricts which match fields feed the LSH text (default: the
-    matcher's own match fields).
+    the union; only cross-side collisions survive.  Banding is
+    ``LSH_CONFIG``.
     """
-    from fuzzy_matching_spark.config import DedupConfig
     from fuzzy_matching_spark.operators import minhash
 
-    cfg = dedup_config or DedupConfig(
-        shingle_size=3, tokenize="char", num_perm=128, bands=64, rows_per_band=2
-    )
-
     def gen(d1: DataFrame, d2: DataFrame, match_fields: list) -> DataFrame:
-        use = fields or match_fields
-
         def tagged(d, side):
             text = F.lower(
                 F.concat_ws(
                     " ",
                     *[
                         F.coalesce(F.col(f).cast("string"), F.lit(""))
-                        for f in use
+                        for f in match_fields
                         if f in d.columns
                     ],
                 )
@@ -187,8 +183,8 @@ def minhash_candidates(dedup_config=None, fields=None):
             )
 
         un = tagged(d1, 0).unionByName(tagged(d2, 1))
-        sigs = minhash.minhash_signatures(un, cfg)
-        pairs, _ = minhash.candidate_pairs(minhash.band_table(sigs), cfg)
+        sigs = minhash.minhash_signatures(un, LSH_CONFIG)
+        pairs, _ = minhash.candidate_pairs(minhash.band_table(sigs), LSH_CONFIG)
         # candidate_pairs emits id_a < id_b; keep cross-side pairs in both
         # orientations and map the tagged ids back to per-side seqs.
         # Integer un-tagging (shiftright, never `/ 2`): Spark's `/` is double
@@ -278,7 +274,7 @@ class SparkMatcher:
 
     The prepared inputs are always persisted, so the ``_fm_seq`` row ids
     are computed once and every downstream consumer (scoring cogroup,
-    consolidation join-backs, anti-joins) reads the same snapshot — the
+    the consolidation frame's joins) reads the same snapshot — the
     determinism guard for inputs downstream of a shuffle/aggregation,
     whose partition row order Spark does not promise to reproduce across
     re-evaluations.  :meth:`unpersist` releases them.
@@ -295,8 +291,9 @@ class SparkMatcher:
     scale.  Everything else takes the one distributed plan (see
     :meth:`match_pairs`): a cogroup on the block key whose one Python call
     per block scores the block with ``config_score_matrix`` and assigns
-    it.  ``last_strategy`` records which path ran.  The jobs the matcher
-    issues itself carry ``spark.job.description`` ``matcher.probe`` (the
+    it; both outputs are read off one outer-joined frame.
+    ``last_strategy`` records which path ran.  The jobs the matcher issues
+    itself carry ``spark.job.description`` ``matcher.probe`` (the
     gate's collect) and ``matcher.pin`` (the input pin count).
     """
 
@@ -399,7 +396,7 @@ class SparkMatcher:
         # stable across re-evaluations for sources with deterministic
         # partition row order (file scans, createDataFrame).  The prepared
         # frames feed BOTH the scoring cogroup here and the consolidation
-        # join-backs in match_and_consolidate, so pin them (ADVICE r2):
+        # joins in match_and_consolidate, so pin them:
         # persist + the pin count below populate the cache BEFORE any
         # downstream consumer runs, so every stage reads the same snapshot
         # and the seqs cannot diverge even for shuffled inputs — short of
@@ -639,9 +636,8 @@ class SparkMatcher:
                 return local
         self.last_strategy = "distributed"
         pairs, d1, d2 = self.match_pairs(df1, df2, candidates=candidates)
-        # The greedy cogroup is the expensive stage and is consumed by three
-        # branches (winner pick + two anti-joins); persist its tiny output
-        # (id pairs + sim) so the plan runs it once, not three times.
+        # The greedy cogroup is the expensive stage and both outputs read
+        # it; persist its tiny output (id pairs + sim) so it runs once.
         pairs = pairs.persist()
         self._persisted.append(pairs)
         cols = [c for c in d1.columns if c not in (SEQ, BK)]
@@ -651,37 +647,40 @@ class SparkMatcher:
             F.length(F.coalesce(F.col(f).cast("string"), F.lit("")))
             for f in self.match_fields
         )
-        a = d1.withColumn("_clean", clean).withColumn("_flen", field_len).alias("a")
-        b = d2.withColumn("_clean", clean).withColumn("_flen", field_len).alias("b")
 
-        joined = (
-            pairs.alias("p")
-            .join(a, F.col("p.left_seq") == F.col(f"a.{SEQ}"))
-            .join(b, F.col("p.right_seq") == F.col(f"b.{SEQ}"))
+        def side(d: DataFrame, tag: str) -> DataFrame:
+            return d.select(
+                F.col(SEQ).alias(f"_fm_{tag}"),
+                F.struct(*cols).alias(f"_fm_rec_{tag}"),
+                clean.alias(f"_fm_clean_{tag}"),
+                field_len.alias(f"_fm_flen_{tag}"),
+            )
+
+        # One row per consolidated record: each left row with its partner
+        # seq and sim (NULL when unmatched), FULL OUTER joined to the right
+        # rows.  Only private _fm_ names, so no user column can collide.
+        frame = (
+            side(d1, "l")
+            .join(pairs.toDF("_fm_l", "_fm_r", "_fm_sim"), "_fm_l", "left")
+            .join(side(d2, "r"), "_fm_r", "full")
         )
 
-        s1 = F.struct(*[F.col(f"a.{c}").alias(c) for c in cols])
-        s2 = F.struct(*[F.col(f"b.{c}").alias(c) for c in cols])
-        matches = joined.select(
-            s1.alias("Оригинал"), s2.alias("Вариант"), F.col("p.sim").alias("Схожесть")
+        a, b = F.col("_fm_rec_l"), F.col("_fm_rec_r")
+        matches = frame.filter(F.col("_fm_sim").isNotNull()).select(
+            a.alias("Оригинал"), b.alias("Вариант"), F.col("_fm_sim").alias("Схожесть")
         )
 
-        # cleaner-record pick: lower score wins; tie -> shorter field length;
+        # right-only and left-only rows re-enter as they are; a match keeps
+        # the cleaner record: lower score wins; tie -> shorter field length;
         # tie -> left (reference select_cleaner_record, data_matcher.py:262-281)
-        winner = (
-            F.when(F.col("a._clean") < F.col("b._clean"), s1)
-            .when(F.col("b._clean") < F.col("a._clean"), s2)
-            .otherwise(F.when(F.col("a._flen") <= F.col("b._flen"), s1).otherwise(s2))
+        cl, cr = F.col("_fm_clean_l"), F.col("_fm_clean_r")
+        record = (
+            F.when(F.col("_fm_l").isNull(), b)
+            .when(F.col("_fm_sim").isNull(), a)
+            .when(cl < cr, a)
+            .when(cr < cl, b)
+            .when(F.col("_fm_flen_l") <= F.col("_fm_flen_r"), a)
+            .otherwise(b)
         )
-        winners = joined.select(winner.alias("w")).select("w.*")
-
-        un1 = (
-            d1.join(pairs.select("left_seq"), d1[SEQ] == F.col("left_seq"), "left_anti")
-            .select(*cols)
-        )
-        un2 = (
-            d2.join(pairs.select("right_seq"), d2[SEQ] == F.col("right_seq"), "left_anti")
-            .select(*cols)
-        )
-        consolidated = winners.unionByName(un1).unionByName(un2)
+        consolidated = frame.select(record.alias("_fm_rec")).select("_fm_rec.*")
         return matches, consolidated

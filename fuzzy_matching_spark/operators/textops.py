@@ -25,6 +25,10 @@ __all__ = [
     "exact_dedup_stats",
 ]
 
+# token_jaccard_pairs takes the bitmask plan up to this many distinct tokens:
+# one bit per token in a signed long, sign bit clear; 0 always runs PPJoin.
+BITMASK_VOCAB_LIMIT = 62
+
 
 def language_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Detected-language histogram: (detected_lang, n_docs)."""
@@ -67,7 +71,6 @@ def token_jaccard_pairs(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bitmask_vocab_limit: int = 62,
 ) -> DataFrame:
     """Token-set Jaccard near-dup pairs >= threshold (n-gram Jaccard, n=1).
 
@@ -75,7 +78,7 @@ def token_jaccard_pairs(
     the SQL-checkable member of the dedup family.  Two physical plans,
     chosen by measured vocabulary size (one tiny aggregate job):
 
-    * **small vocabulary** (<= ``bitmask_vocab_limit`` distinct tokens,
+    * **small vocabulary** (<= ``BITMASK_VOCAB_LIMIT`` distinct tokens,
       e.g. log/telemetry corpora): every token set is encoded as one
       64-bit bitmask over the global vocabulary, so intersection/union are
       ``bit_count`` codegen ops instead of string-array intersections, the
@@ -108,8 +111,8 @@ def token_jaccard_pairs(
         .groupBy("tok")
         .agg(F.count("*").alias("df"))
     )
-    vocab_probe = freq.limit(bitmask_vocab_limit + 1).collect()
-    if len(vocab_probe) <= bitmask_vocab_limit:
+    vocab_probe = freq.limit(BITMASK_VOCAB_LIMIT + 1).collect()
+    if len(vocab_probe) <= BITMASK_VOCAB_LIMIT:
         return _token_jaccard_bitmask(
             tok_arrays, vocab_probe, threshold, id_col
         )

@@ -6,8 +6,7 @@ Cluster usage (north rule)::
     spark-submit --py-files fuzzy_matching_spark.zip jobs/dedup_job.py \
         --input  my_catalog.corpus.files        --input-format table \
         --output /warehouse/dedup_out           --checkpoint-dir /warehouse/dedup_ckpt \
-        --detectors minhash,simhash             --shingle-size 5 --num-perm 128 \
-        --bands 32 --rows-per-band 4 --verify-threshold 0.7
+        --detectors minhash,simhash             --verify-threshold 0.7
 
 Local smoke::
 
@@ -30,6 +29,7 @@ pair evidence), ``metrics/`` (per-stage lineage + skew accounting).
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import os
 import sys
 
@@ -49,19 +49,23 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--detectors", default="minhash")
-    ap.add_argument("--shingle-size", type=int, default=5)
-    ap.add_argument("--num-perm", type=int, default=128)
-    ap.add_argument("--bands", type=int, default=32)
-    ap.add_argument("--rows-per-band", type=int, default=4)
-    ap.add_argument("--tokenize", default="char", choices=["char", "word"])
-    ap.add_argument("--verify-threshold", type=float, default=0.7)
-    ap.add_argument("--verify-mode", default="auto", choices=["auto", "always"])
-    ap.add_argument("--anchor-hash", default="rolling", choices=["rolling", "md5"])
-    ap.add_argument("--max-bucket-size", type=int, default=200)
-    ap.add_argument(
+    # a flag left out is absent from args, so DedupConfig supplies its value
+    cfg = ap.add_argument_group(
+        "DedupConfig fields (default: DedupConfig's)",
+        argument_default=argparse.SUPPRESS,
+    )
+    cfg.add_argument("--shingle-size", type=int)
+    cfg.add_argument("--num-perm", type=int)
+    cfg.add_argument("--bands", type=int)
+    cfg.add_argument("--rows-per-band", type=int)
+    cfg.add_argument("--tokenize", choices=["char", "word"])
+    cfg.add_argument("--verify-threshold", type=float)
+    cfg.add_argument("--verify-mode", choices=["auto", "always"])
+    cfg.add_argument("--anchor-hash", choices=["rolling", "md5"])
+    cfg.add_argument("--max-bucket-size", type=int)
+    cfg.add_argument(
         "--seed",
         type=int,
-        default=42,
         help="SimHash token-hash seed; MinHash signatures do not depend on it "
         "(their shingle and bucket hashes are fixed)",
     )
@@ -88,18 +92,8 @@ def main() -> None:
         .getOrCreate()
     )
 
-    config = DedupConfig(
-        shingle_size=args.shingle_size,
-        num_perm=args.num_perm,
-        bands=args.bands,
-        rows_per_band=args.rows_per_band,
-        tokenize=args.tokenize,
-        verify_threshold=args.verify_threshold,
-        verify_mode=args.verify_mode,
-        anchor_hash=args.anchor_hash,
-        max_bucket_size=args.max_bucket_size,
-        seed=args.seed,
-    )
+    fields = {f.name for f in dataclasses.fields(DedupConfig)}
+    config = DedupConfig(**{k: v for k, v in vars(args).items() if k in fields})
     if args.streaming:
         if args.input_format != "parquet":
             raise SystemExit("--streaming requires --input-format parquet "

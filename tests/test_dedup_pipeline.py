@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from fuzzy_matching_spark.config import DedupConfig
 from fuzzy_matching_spark.fixtures.corpus import generate_corpus
+from fuzzy_matching_spark.operators import connected_components as cc
 from fuzzy_matching_spark.operators.connected_components import connected_components
 from fuzzy_matching_spark.operators.minhash import shingle_hashes
 from fuzzy_matching_spark.pipeline.dedup_job import DedupPipeline
@@ -144,14 +145,15 @@ def test_metrics_present(spark, corpus_df):
 # threshold 0 forces the distributed hash-min loop; the default exercises
 # the driver union-find fast path — both must produce min-id labels
 @pytest.mark.parametrize("driver_threshold", [2_000_000, 0])
-def test_connected_components_basic(spark, driver_threshold):
+def test_connected_components_basic(spark, monkeypatch, driver_threshold):
+    monkeypatch.setattr(cc, "DRIVER_MAX_EDGES", driver_threshold)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
         schema="id_a long, id_b long",
     )
     labels = {
         r["id"]: r["component"]
-        for r in connected_components(edges, driver_threshold=driver_threshold).collect()
+        for r in connected_components(edges).collect()
     }
     assert labels[1] == labels[2] == labels[3] == 1
     assert labels[10] == labels[11] == 10
@@ -159,19 +161,20 @@ def test_connected_components_basic(spark, driver_threshold):
 
 
 @pytest.mark.parametrize("driver_threshold", [2_000_000, 0])
-def test_connected_components_chain_convergence(spark, driver_threshold):
+def test_connected_components_chain_convergence(spark, monkeypatch, driver_threshold):
+    monkeypatch.setattr(cc, "DRIVER_MAX_EDGES", driver_threshold)
     # a 40-vertex path graph: worst case for hash-min diameter
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 140)], schema="id_a long, id_b long"
     )
     labels = {
         r["id"]: r["component"]
-        for r in connected_components(edges, driver_threshold=driver_threshold).collect()
+        for r in connected_components(edges).collect()
     }
     assert set(labels.values()) == {100}
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, monkeypatch):
     """Driver union-find and the distributed loop must label identically."""
     import random
 
@@ -180,7 +183,8 @@ def test_connected_components_paths_agree(spark):
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, schema="id_a long, id_b long")
     fast = sorted(map(tuple, connected_components(df).collect()))
-    dist = sorted(map(tuple, connected_components(df, driver_threshold=0).collect()))
+    monkeypatch.setattr(cc, "DRIVER_MAX_EDGES", 0)
+    dist = sorted(map(tuple, connected_components(df).collect()))
     assert fast == dist
 
 
@@ -239,16 +243,17 @@ def test_run_releases_every_cached_frame(spark, corpus_df, tmp_path, verify_mode
 
 
 @pytest.mark.parametrize("driver_threshold", [2_000_000, 0])
-def test_connected_components_tolerates_duplicate_edges(spark, driver_threshold):
+def test_connected_components_tolerates_duplicate_edges(spark, monkeypatch, driver_threshold):
     """Callers skip the distinct shuffle; duplicate/reversed edges must not
     change labels on either path."""
+    monkeypatch.setattr(cc, "DRIVER_MAX_EDGES", driver_threshold)
     edges = spark.createDataFrame(
         [(1, 2), (1, 2), (2, 1), (2, 3), (2, 3), (10, 11), (10, 11)],
         schema="id_a long, id_b long",
     )
     labels = {
         r["id"]: r["component"]
-        for r in connected_components(edges, driver_threshold=driver_threshold).collect()
+        for r in connected_components(edges).collect()
     }
     assert labels[1] == labels[2] == labels[3] == 1
     assert labels[10] == labels[11] == 10

@@ -4,10 +4,11 @@ The distributed matcher must reproduce the reference semantics *exactly* on
 the person fixtures: same match pairs, same similarities, same consolidated
 multiset.  Scoring is shared kernel code, so this exercises orchestration:
 blocking, cogroup intersection, per-block order, greedy exclusivity,
-cleanliness winner pick and anti-join re-entry.
+cleanliness winner pick and unmatched re-entry.
 """
 
 import re
+from collections import Counter
 
 import pytest
 
@@ -160,26 +161,25 @@ def test_parallelism_invariance(spark, distributed):
     assert results[0] == results[1]
 
 
+def _record_key(rec):
+    return tuple(sorted(rec.items()))
+
+
 def _local_vs_distributed(spark, config, originals, variants):
     """(matches, consolidated multiset) from LocalBatchedMatcher and from
     the distributed plan on the same records.  NULLs are fed to Spark as
     NULLs and to the local matcher as "" — the coercion both plans apply."""
-    from collections import Counter
-
     from fuzzy_matching_spark.operators.local_match import LocalBatchedMatcher
 
     def coerce(rows):
         return [{k: ("" if v is None else v) for k, v in r.items()} for r in rows]
-
-    def record_key(rec):
-        return tuple(sorted(rec.items()))
 
     l_matches, l_cons = LocalBatchedMatcher(config).match_and_consolidate(
         coerce(originals), coerce(variants)
     )
     local = (
         sorted((m["Оригинал"]["id"], m["Вариант"]["id"], m["Схожесть"]) for m in l_matches),
-        Counter(record_key(r) for r in l_cons),
+        Counter(_record_key(r) for r in l_cons),
     )
     matcher = SparkMatcher(config)
     m_df, c_df = matcher.match_and_consolidate(
@@ -188,7 +188,7 @@ def _local_vs_distributed(spark, config, originals, variants):
     assert matcher.last_strategy == "distributed"
     dist = (
         sorted((r["Оригинал"]["id"], r["Вариант"]["id"], r["Схожесть"]) for r in m_df.collect()),
-        Counter(record_key(r.asDict()) for r in c_df.collect()),
+        Counter(_record_key(r.asDict()) for r in c_df.collect()),
     )
     matcher.unpersist()
     return local, dist
@@ -354,3 +354,71 @@ def test_unpersist_releases_every_cached_frame(spark, monkeypatch, mode):
         matcher.unpersist(blocking=True)
     assert cache_manager.isEmpty()
     assert len(jsc.getPersistentRDDs()) == 0
+
+
+def _outputs(matches, consolidated):
+    """(sorted match triples of whole records, consolidated multiset)."""
+    return (
+        sorted(
+            (_record_key(r["Оригинал"].asDict()), _record_key(r["Вариант"].asDict()), r["Схожесть"])
+            for r in matches.collect()
+        ),
+        Counter(_record_key(r.asDict()) for r in consolidated.collect()),
+    )
+
+
+@pytest.mark.parametrize("empty", ["left", "right"])
+def test_distributed_empty_side(spark, distributed, empty):
+    """With one input empty, the one outer-joined frame holds only the other
+    side's rows: no matches, and those rows are the consolidated output."""
+    originals, variants = generate_person_pair(40, seed=31)
+    df1, df2 = spark_df(spark, originals), spark_df(spark, variants)
+    if empty == "left":
+        df1, kept = df1.limit(0), variants
+    else:
+        df2, kept = df2.limit(0), originals
+    matcher = SparkMatcher(base_config())
+    matches, consolidated = matcher.match_and_consolidate(df1, df2)
+    assert matcher.last_strategy == "distributed"
+    got_matches, got_cons = _outputs(matches, consolidated)
+    matcher.unpersist()
+    assert got_matches == []
+    assert got_cons == Counter(_record_key(r) for r in kept)
+
+
+def test_user_columns_named_like_pair_columns(spark, monkeypatch):
+    """Input columns named ``sim``, ``left_seq`` and ``right_seq`` pass
+    through both paths as plain record fields, with the same results."""
+    originals, variants = generate_person_pair(150, seed=37)
+    for side, records in (("l", originals), ("r", variants)):
+        for i, r in enumerate(records):
+            r.update(sim=f"{side}{i % 7}", left_seq=str(i), right_seq=f"{side}{i}")
+    config = base_config()
+    results = []
+    for gate in ("driver", "distributed"):
+        if gate == "distributed":
+            monkeypatch.setattr(greedy_match, "DRIVER_MAX_ROWS", 0)
+        matcher = SparkMatcher(config)
+        matches, consolidated = matcher.match_and_consolidate(
+            spark_df(spark, originals), spark_df(spark, variants)
+        )
+        assert matcher.last_strategy == gate
+        results.append(_outputs(matches, consolidated))
+        matcher.unpersist()
+    assert results[0] == results[1]
+    assert len(results[0][0]) > 0
+
+
+def test_consolidation_has_no_anti_join(spark, distributed):
+    """Both outputs come from one outer-joined frame: the executed plan of
+    ``consolidated`` holds a full outer join and no LEFT ANTI join."""
+    originals, variants = generate_person_pair(100, seed=41)
+    matcher = SparkMatcher(base_config())
+    _, consolidated = matcher.match_and_consolidate(
+        spark_df(spark, originals), spark_df(spark, variants)
+    )
+    assert consolidated.collect()
+    plan = consolidated._jdf.queryExecution().executedPlan().executedPlan().toString()
+    matcher.unpersist()
+    assert "FullOuter" in plan
+    assert "LeftAnti" not in plan

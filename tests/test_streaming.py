@@ -139,12 +139,10 @@ def test_stream_lsh_candidates_incremental(spark, tmp_path):
     assert again == want
 
 
-def test_dedup_job_streaming_mode(spark, tmp_path, monkeypatch):
-    """The spark-submit entry's --streaming flag drains a landing dir and
-    leaves pairs + band index + checkpoint behind (rerunnable)."""
+def _load_dedup_job():
+    """The spark-submit entry script, loaded as a module."""
     import importlib.util
     import os
-    import sys
 
     spec = importlib.util.spec_from_file_location(
         "dedup_job_entry",
@@ -152,7 +150,15 @@ def test_dedup_job_streaming_mode(spark, tmp_path, monkeypatch):
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod
 
+
+def test_dedup_job_streaming_mode(spark, tmp_path, monkeypatch):
+    """The spark-submit entry's --streaming flag drains a landing dir and
+    leaves pairs + band index + checkpoint behind (rerunnable)."""
+    import sys
+
+    mod = _load_dedup_job()
     landing = _write_docs(spark, tmp_path, DOCS, n_files=2)
     out = str(tmp_path / "out")
     monkeypatch.setattr(
@@ -174,3 +180,40 @@ def test_dedup_job_streaming_mode(spark, tmp_path, monkeypatch):
     }
     assert {(0, 1), (2, 5)} <= pairs
     assert spark.read.parquet(f"{out}/band_index").count() > 0
+
+
+@pytest.mark.parametrize(
+    "flags,expected",
+    [
+        ([], DedupConfig()),
+        (
+            ["--num-perm", "128", "--bands", "32", "--rows-per-band", "4", "--seed", "7"],
+            DedupConfig(num_perm=128, bands=32, rows_per_band=4, seed=7),
+        ),
+    ],
+    ids=["defaults", "given"],
+)
+def test_dedup_job_config_defaults_are_dedupconfig(spark, tmp_path, monkeypatch, flags, expected):
+    """A flag left out keeps DedupConfig's default; a given flag is passed on."""
+    import sys
+
+    mod = _load_dedup_job()
+    built = []
+
+    class Stop(Exception):
+        pass
+
+    def capture(spark, config, **kw):
+        built.append(config)
+        raise Stop
+
+    monkeypatch.setattr(mod, "load_corpus", lambda *a, **kw: None)
+    monkeypatch.setattr(mod, "DedupPipeline", capture)
+    monkeypatch.setattr(
+        sys,
+        "argv",
+        ["dedup_job.py", "--input", str(tmp_path / "in"), "--output", str(tmp_path / "out"), *flags],
+    )
+    with pytest.raises(Stop):
+        mod.main()
+    assert built == [expected]

@@ -11,17 +11,17 @@ def _collect(df):
     }
 
 
-def test_bitmask_and_ppjoin_plans_agree(spark):
+def test_bitmask_and_ppjoin_plans_agree(spark, monkeypatch):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for threshold in (0.5, 0.8):
         fast = textops.token_jaccard_pairs(docs, threshold=threshold)
-        general = textops.token_jaccard_pairs(
-            docs, threshold=threshold, bitmask_vocab_limit=0
-        )
+        with monkeypatch.context() as m:
+            m.setattr(textops, "BITMASK_VOCAB_LIMIT", 0)
+            general = textops.token_jaccard_pairs(docs, threshold=threshold)
         assert _collect(fast) == _collect(general)
 
 
-def test_banded_plan_emits_each_pair_exactly_once(spark):
+def test_banded_plan_emits_each_pair_exactly_once(spark, monkeypatch):
     # crafted small-vocab corpus where pairs agree on MULTIPLE bands and
     # several docs share identical token sets — the two historic sources of
     # duplicate emissions.  t=0.8 over a <=62-token vocabulary selects the
@@ -39,11 +39,10 @@ def test_banded_plan_emits_each_pair_exactly_once(spark):
     keys = [(r["id_a"], r["id_b"]) for r in got]
     assert len(keys) == len(set(keys)), "duplicate pair emissions"
     as_set = {(r["id_a"], r["id_b"], r["jaccard"]) for r in got}
+    monkeypatch.setattr(textops, "BITMASK_VOCAB_LIMIT", 0)
     general = {
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in textops.token_jaccard_pairs(
-            docs, threshold=0.8, bitmask_vocab_limit=0
-        ).collect()
+        for r in textops.token_jaccard_pairs(docs, threshold=0.8).collect()
     }
     assert as_set == general
     assert (1, 2, 1.0) in as_set and (5, 6, 1.0) in as_set
