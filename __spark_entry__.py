@@ -31,7 +31,6 @@ from fuzzy_matching_spark.functions.text import (
     block_key,
     cleanliness_col,
     normalize_name_ru_col,
-    quality_score_col,
 )
 from fuzzy_matching_spark.operators import embeddings, textops
 from fuzzy_matching_spark.operators.greedy_match import SparkMatcher
@@ -284,8 +283,7 @@ def q_token_stats(spark, sf_dir):
 
 def q_quality_scores(spark, sf_dir):
     """Heuristic quality scoring per document (training-data op)."""
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", F.round(quality_score_col("text"), 6).alias("quality"))
+    return textops.quality_scores(_t(spark, sf_dir, "documents"))
 
 
 def q_token_jaccard(spark, sf_dir):

@@ -12,6 +12,12 @@ from dataclasses import dataclass, field
 from enum import Enum
 
 
+def _check_range(name: str, value, low, high=None) -> None:
+    if value < low or (high is not None and value > high):
+        bounds = f"in [{low}, {high}]" if high is not None else f">= {low}"
+        raise ValueError(f"{name} must be {bounds}, got {value!r}")
+
+
 class FuzzyAlgorithm(Enum):
     """The five string scorers (reference ``match_config_classes.py:6-14``)."""
 
@@ -51,6 +57,9 @@ class MatchConfig:
     reference — is *not* used by the cleanliness score (the reference reads
     ``weights.get('length', 0)`` where ``weights`` maps field names, see
     ``data_matcher.py:270``; SURVEY.md §2.4 A2 says reproduce the bug).
+
+    ``threshold`` outside [0, 1] or a negative weight raises ``ValueError``
+    when the config is built.
     """
 
     fields: list[MatchFieldConfig]
@@ -62,6 +71,47 @@ class MatchConfig:
     sort_field: str | None = None
     transliteration: TransliterationConfig = field(default_factory=TransliterationConfig)
     fuzzy_algorithm: FuzzyAlgorithm = FuzzyAlgorithm.RATIO
+
+    def __post_init__(self):
+        _check_range("threshold", self.threshold, 0.0, 1.0)
+        for fc in self.fields:
+            _check_range(f"weight of field {fc.field!r}", fc.weight, 0.0)
+        _check_range("length_weight", self.length_weight, 0.0)
+
+
+# The allowed values of DedupConfig's modes, checked when a config is built;
+# jobs/dedup_job.py takes its argparse choices from this table.
+DEDUP_MODES: dict[str, tuple[str, ...]] = {
+    # shingle units: unicode codepoints or whitespace tokens
+    "tokenize": ("char", "word"),
+    # "auto": settle dense-signature pairs from the byte-truncated estimate
+    # (3-sigma accept/drop band) and exact-verify the rest — the scale
+    # default.  Sparse-signature pairs (n_shingles < num_perm) always go to
+    # exact verification: OPH densification correlates their components, so
+    # the estimate is unreliable in both directions.  "always": exact-verify
+    # every candidate pair — the correctness/audit mode (and what the
+    # SQL-checkable driver queries run, so results are oracle-reproducible).
+    "verify_mode": ("auto", "always"),
+    # "rolling": vectorized polynomial rolling hash over codepoint windows —
+    # the O(n) scale default.  "md5": windows selected by codepoint sum
+    # mod q, anchor = md5 hex digest of the window — slower but reproducible
+    # in ANSI SQL, so the driver's DuckDB oracle can recompute the exact
+    # anchor set; both modes implement the same 0-mod-q sampling semantics.
+    "anchor_hash": ("rolling", "md5"),
+}
+
+# Inclusive (low, high) bounds of DedupConfig's numbers; None = open.  One
+# SimHash slice would need a 64-bit mask, which a signed long cannot hold.
+_DEDUP_RANGES: dict[str, tuple[float, float | None]] = {
+    **dict.fromkeys(
+        ("shingle_size", "num_perm", "bands", "rows_per_band",
+         "max_bucket_size", "substring_min_len", "fingerprint_mod"),
+        (1, None),
+    ),
+    "verify_threshold": (0.0, 1.0),
+    "simhash_bands": (2, 64),
+    "simhash_max_hamming": (0, 64),
+}
 
 
 @dataclass
@@ -77,46 +127,43 @@ class DedupConfig:
       probability 0.990 at Jaccard 0.70 — the steepest curve that still
       meets the >=0.99 recall gate at the default ``verify_threshold``;
       the flatter 32x4 curve admits everything above ~0.42 and floods
-      verification with candidates.
+      verification with candidates.  MinHash's shingle and bucket hashes
+      are fixed: ``seed`` does not change them.
     * SimHash 64-bit with ``simhash_bands`` Hamming bands and
-      ``simhash_max_hamming`` verification threshold.
+      ``simhash_max_hamming`` verification threshold; ``seed`` keys its
+      token hashes (SimHash only).
     * Fingerprint (0-mod-q winnowing) long-substring detector with windows of
       ``substring_min_len`` chars.
     * ``verify_threshold`` — Jaccard cut for verified candidate pairs.
     * ``max_bucket_size`` — LSH buckets above this are dropped from pair
       expansion (hot boilerplate bands; dropped counts land in the metrics
       table, never silently).
+    * ``tokenize``, ``verify_mode`` and ``anchor_hash`` take the values
+      listed in :data:`DEDUP_MODES`; any other value, or a number outside
+      its bounds, raises ``ValueError`` when the config is built.
     """
 
     shingle_size: int = 5
     num_perm: int = 125
     bands: int = 25
     rows_per_band: int = 5
-    tokenize: str = "char"  # "char" | "word"
+    tokenize: str = "char"
     verify_threshold: float = 0.7
-    # "auto": settle dense-signature pairs from the byte-truncated estimate
-    # (3-sigma accept/drop band) and exact-verify the rest — the scale
-    # default.  Sparse-signature pairs (n_shingles < num_perm) always go to
-    # exact verification: OPH densification correlates their components, so
-    # the estimate is unreliable in both directions.  "always": exact-verify
-    # every candidate pair — the correctness/audit mode (and what the
-    # SQL-checkable driver queries run, so results are oracle-reproducible).
     verify_mode: str = "auto"
     max_bucket_size: int = 200
     simhash_bands: int = 4
     simhash_max_hamming: int = 3
     substring_min_len: int = 64
     fingerprint_mod: int = 8
-    # "rolling": vectorized polynomial rolling hash over codepoint windows —
-    # the O(n) scale default.  "md5": per-window md5 (anchor = hex digest,
-    # selected on the first digest byte mod q) — slower but reproducible in
-    # ANSI SQL, so the driver's DuckDB oracle can recompute the exact anchor
-    # set; both modes implement the same 0-mod-q sampling semantics.
     anchor_hash: str = "rolling"
-    # SimHash token-hash seed; MinHash's shingle and bucket hashes are fixed
     seed: int = 42
 
     def __post_init__(self):
+        for name, allowed in DEDUP_MODES.items():
+            if getattr(self, name) not in allowed:
+                raise ValueError(f"{name} must be one of {allowed}, got {getattr(self, name)!r}")
+        for name, (low, high) in _DEDUP_RANGES.items():
+            _check_range(name, getattr(self, name), low, high)
         if self.bands * self.rows_per_band != self.num_perm:
             raise ValueError(
                 f"bands*rows_per_band ({self.bands}x{self.rows_per_band}) "

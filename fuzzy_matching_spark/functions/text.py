@@ -2,7 +2,7 @@
 
 Everything here compiles to Catalyst expressions (whole-stage codegen, no
 Python boundary): blocking keys, language detection arithmetic (F8),
-the F12 name normalizer, cleanliness scoring (A2), content hashing.  The
+the F12 name normalizer, cleanliness scoring (A2), quality scoring.  The
 fuzzy scorers themselves need the vendored kernel and live in
 ``functions/scoring.py`` as pandas UDFs.
 """
@@ -17,7 +17,6 @@ __all__ = [
     "detect_language_col",
     "normalize_name_ru_col",
     "cleanliness_col",
-    "content_sha256",
     "quality_score_col",
     "token_count_col",
 ]
@@ -78,12 +77,6 @@ def cleanliness_col(match_fields: list[str], weights: dict[str, float]) -> Colum
     if length_w:
         return special + F.length(combined) * F.lit(length_w)
     return special.cast("double")
-
-
-def content_sha256(col: Column | str) -> Column:
-    """Per-row content invariant: lowercase hex sha256 (BASELINE input_hint)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sha2(c, 256)
 
 
 def token_count_col(col: Column | str) -> Column:

@@ -66,9 +66,9 @@ def load_json(spark: SparkSession, path: str, name_fields: dict[str, str] | None
 def load_corpus(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     """North-rule corpus table ``(repo, path, commit, lang, content)``.
 
-    Iceberg in production is a catalog identifier (``spark.read.table``);
-    locally the same columns come from partitioned Parquet — one code path
-    above this call either way (see ``io.catalog.CatalogIO``).
+    Iceberg in production is a catalog identifier (``fmt="table"``,
+    ``spark.read.table``); locally the same columns come from partitioned
+    Parquet — one code path above this call either way.
     """
     if fmt == "table":
         return spark.read.table(path)

@@ -75,14 +75,13 @@ def anchor_table(
 
     ``anchor`` is a long (rolling mode, the scale default) or the md5 hex
     string of the window (md5 mode — SQL-reproducible; see
-    ``DedupConfig.anchor_hash``).  Both modes select ~1/q of the windows by
+    ``config.DEDUP_MODES``).  Both modes select ~1/q of the windows by
     a content-determined rule, so shared substrings align across docs.
     """
     L = config.substring_min_len
     q = config.fingerprint_mod
-    mode = getattr(config, "anchor_hash", "rolling")
 
-    if mode == "md5":
+    if config.anchor_hash == "md5":
         import hashlib
 
         # Selection is decoupled from the anchor digest (VERDICT r2 #6):

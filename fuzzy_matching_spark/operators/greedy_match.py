@@ -509,7 +509,10 @@ class SparkMatcher:
             *[f"_lk{i}" for i in range(len(lkeys))],
             *[f"_rk{i}" for i in range(len(rkeys))],
             "sim",
-        )
+        ).persist()
+        # connected_components counts, then collects, and the component join
+        # reads the edges a third time: score the candidates once
+        self._persisted.append(edges)
 
         # component labels over the bipartite edge graph; ids side-tagged so
         # the two seq spaces cannot collide (seq has bit 63 clear)

@@ -8,8 +8,10 @@ within Hamming distance d collide on at least one slice whenever
 d < bands (pigeonhole) — and equi-joins per slice, then verifies true
 Hamming distance ≤ ``simhash_max_hamming``.
 
-Same join geometry as MinHash LSH (derived-key equi-join + verify), so the
-same skew handling applies: bucket caps + AQE.
+Same join geometry as MinHash LSH (derived-key equi-join + verify), but
+no bucket cap: every slice bucket expands in full, and AQE's skew-join
+splitting is the only skew handling (``max_bucket_size`` applies to MinHash
+only).
 """
 
 from __future__ import annotations

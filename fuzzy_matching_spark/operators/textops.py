@@ -27,6 +27,9 @@ __all__ = [
 
 # token_jaccard_pairs takes the bitmask plan up to this many distinct tokens:
 # one bit per token in a signed long, sign bit clear; 0 always runs PPJoin.
+# Measured on the sf0.1 documents (31 distinct tokens), t = 0.8, collected,
+# local[4]: bitmask 14.8-21.2 s against PPJoin 113.7-155.0 s, same
+# 2,968,398 pairs.
 BITMASK_VOCAB_LIMIT = 62
 
 
@@ -140,6 +143,10 @@ def _token_jaccard_bitmask(tok_arrays, vocab_rows, threshold, id_col):
     # B = d_max+1 bands they agree exactly on >= 1 band (pigeonhole).
     d_max = int((1.0 - threshold) * V + 1e-9)
     n_bands = d_max + 1
+    # Bands of >= 2 bits, else the prefix plan.  Measured on the sf0.1
+    # documents (V = 31), counted, local[4]: at t = 0.5, where this test
+    # picks prefix, both plans read 21-30 s with the same pairs; at t = 0.3
+    # prefix took 48 s and banded ran over 13 min.
     if V > 0 and 2 * n_bands <= V:
         return _token_jaccard_mask_banded(
             tok_arrays, ordered, threshold, id_col, V, n_bands

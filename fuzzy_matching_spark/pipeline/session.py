@@ -26,14 +26,16 @@ def build_session(
 ) -> SparkSession:
     """Create (or reuse) a session with the engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster leave it unset and let spark-submit provide it.
+    In a plain Python process ``master`` defaults to
+    ``local[$SPARK_GRAFT_CPUS]`` and ``shuffle_partitions`` to 32.  Under
+    spark-submit (which hands PySpark its gateway through
+    ``PYSPARK_GATEWAY_PORT``) an unset one is left to the launcher:
+    builder options override the launcher's conf, so setting them here
+    would replace ``--master`` and ``--conf spark.sql.shuffle.partitions``.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = 32
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+        shuffle_partitions = shuffle_partitions or 32
 
     # glibc returns mmap'd allocations (>=128 KB) to the OS on free, so
     # numpy-heavy UDF workers re-fault the same pages on every Arrow batch —
@@ -48,8 +50,6 @@ def build_session(
 
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -69,6 +69,10 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    if master is not None:
+        builder = builder.master(master)
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in malloc_env.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
     for k, v in (extra_conf or {}).items():

@@ -24,6 +24,16 @@ The job is resumable: stage outputs land in ``--checkpoint-dir`` keyed by a
 hash of the full configuration, so a rerun after failure skips completed
 stages.  Outputs: ``clusters/`` (doc_id, component), ``edges/`` (detector
 pair evidence), ``metrics/`` (per-stage lineage + skew accounting).
+
+The session comes from ``pipeline.session.build_session``: spark-submit's
+``--master`` stands, and the engine conf is added on top of it.  That conf
+starts each executor's Python workers from the engine's worker daemon
+(``spark.python.daemon.module``), so the package must be importable where
+an executor starts its daemon: build the zip from the repo root
+(``zip -r fuzzy_matching_spark.zip fuzzy_matching_spark``) and ship it with
+``--py-files``.  A cluster that does not put ``--py-files`` on the
+executors' Python path at daemon start needs the package installed in the
+executors' Python environment instead.
 """
 
 from __future__ import annotations
@@ -35,14 +45,13 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-from fuzzy_matching_spark.config import DedupConfig
+from fuzzy_matching_spark.config import DEDUP_MODES, DedupConfig
 from fuzzy_matching_spark.io.readers import load_corpus
 from fuzzy_matching_spark.pipeline.dedup_job import DedupPipeline
+from fuzzy_matching_spark.pipeline.session import build_session
 
 
-def main() -> None:
+def parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--input-format", default="parquet", choices=["parquet", "table"])
@@ -58,11 +67,10 @@ def main() -> None:
     cfg.add_argument("--num-perm", type=int)
     cfg.add_argument("--bands", type=int)
     cfg.add_argument("--rows-per-band", type=int)
-    cfg.add_argument("--tokenize", choices=["char", "word"])
     cfg.add_argument("--verify-threshold", type=float)
-    cfg.add_argument("--verify-mode", choices=["auto", "always"])
-    cfg.add_argument("--anchor-hash", choices=["rolling", "md5"])
     cfg.add_argument("--max-bucket-size", type=int)
+    for name, allowed in DEDUP_MODES.items():
+        cfg.add_argument("--" + name.replace("_", "-"), choices=allowed)
     cfg.add_argument(
         "--seed",
         type=int,
@@ -80,17 +88,12 @@ def main() -> None:
     )
     ap.add_argument("--content-col", default="content")
     ap.add_argument("--id-col", default="doc_id")
-    args = ap.parse_args()
+    return ap
 
-    # On a cluster spark-submit supplies master/deploy config; we only add
-    # the engine's execution settings.
-    spark = (
-        SparkSession.builder.appName("fms-dedup")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+
+def main() -> None:
+    args = parser().parse_args()
+    spark = build_session(app_name="fms-dedup")
 
     fields = {f.name for f in dataclasses.fields(DedupConfig)}
     config = DedupConfig(**{k: v for k, v in vars(args).items() if k in fields})

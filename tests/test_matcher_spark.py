@@ -356,6 +356,35 @@ def test_unpersist_releases_every_cached_frame(spark, monkeypatch, mode):
     assert len(jsc.getPersistentRDDs()) == 0
 
 
+def _plan_nodes(node) -> list[str]:
+    """Operator names of an executed plan, through its query stages but not
+    into the plans behind cached relations."""
+    names = [node.nodeName()]
+    children = node.children()
+    for i in range(children.size()):
+        names += _plan_nodes(children.apply(i))
+    if "QueryStage" in names[0]:
+        names += _plan_nodes(node.plan())
+    return names
+
+
+def test_lsh_component_join_reads_cached_edges(spark):
+    """Candidate mode scores each candidate pair once: the scored edges are
+    cached, so the component join feeding the greedy reads them from memory
+    instead of re-running candidates, joins and the Python scorer."""
+    originals, variants = generate_person_pair(300, seed=21)
+    matcher = SparkMatcher(base_config())
+    pairs, _, _ = matcher.match_pairs(
+        spark_df(spark, originals), spark_df(spark, variants),
+        candidates=minhash_candidates(),
+    )
+    assert pairs.collect()
+    nodes = _plan_nodes(pairs._jdf.queryExecution().executedPlan().executedPlan())
+    matcher.unpersist()
+    assert "InMemoryTableScan" in nodes
+    assert "ArrowEvalPython" not in nodes
+
+
 def _outputs(matches, consolidated):
     """(sorted match triples of whole records, consolidated multiset)."""
     return (

@@ -217,3 +217,16 @@ def test_dedup_job_config_defaults_are_dedupconfig(spark, tmp_path, monkeypatch,
     with pytest.raises(Stop):
         mod.main()
     assert built == [expected]
+
+
+def test_dedup_job_mode_choices_are_the_config_table():
+    """The job's --tokenize / --verify-mode / --anchor-hash choices are
+    exactly DedupConfig's allowed values."""
+    from fuzzy_matching_spark.config import DEDUP_MODES
+
+    choices = {
+        a.dest: tuple(a.choices)
+        for a in _load_dedup_job().parser()._actions
+        if a.dest in DEDUP_MODES
+    }
+    assert choices == DEDUP_MODES
