@@ -1,27 +1,38 @@
-"""Vectorized scorer registry: FuzzyAlgorithm enum value -> batched scorer.
+"""Vectorized scorer registry and the weighted-field rule built on it.
 
-The reference dispatches every pair through rapidfuzz C++
-(``/root/reference/fuzzy_matching/core/data_matcher.py:626-638``).  The
-Spark engine's hot paths instead go through this module:
+The reference scores a record pair as the weighted mean of per-field
+similarities (its ``data_matcher.py:186-230, 601-638``), one rapidfuzz C++
+call per field.  The Spark engine's hot paths go through this module
+instead:
 
-* :func:`score_matrix`   — all-pairs score matrix for a block (the greedy
-  matchers' kernel through :func:`config_score_matrix`: the driver-local
-  matcher scores whole blocks, ``operators/greedy_match.py`` scores tiles
-  of them on executors, and both then run the sequential argmax
-  assignment the reference semantics demand);
-* :func:`score_pairs`    — aligned pairwise scores for Arrow batches;
-* :func:`make_general_pair_scorer` — the weighted-field pandas UDF that
-  scores the matcher's LSH candidate pairs, one Arrow row per pair, with
-  the full per-field semantics (any scorer, transliteration).
+* :func:`score_matrix` / :func:`score_pairs` — the kernel registry: an
+  algorithm name's all-pairs score matrix, or its aligned pairwise scores,
+  in [0, 100];
+* :func:`field_similarity` — the per-field rule, written once: the field's
+  algorithm (the config's when the field names none), transliteration when
+  the field and the config enable it (else both sides lowercased), each
+  distinct value or distinct pair scored once by the registry, and 0
+  wherever either side is empty;
+* :func:`config_score_matrix` — its cross shape: the weighted mean over a
+  block's (n_left, n_right) cells, the kernel of the driver-local matcher
+  and of the distributed matcher's per-block cogroup
+  (``operators/greedy_match.py``);
+* :func:`config_score_pairs` — its aligned shape: the weighted mean over
+  aligned rows, which the candidate-mode (LSH) pandas UDF calls per Arrow
+  batch;
+* :func:`kernel_cost` — the driver gate's per-pair cost of a config
+  relative to RATIO.
 
 ``ratio`` and ``token_sort_ratio`` run on the numpy bit-parallel LCS
 kernel (:mod:`kernel.batchlcs`); the remaining scorers (partial / token-set
-/ WRatio — sliding-window and cascade logic that doesn't vectorize into a
-single LCS pass) fall back to the scalar kernel over *unique* value pairs,
-which the lru-cached :func:`kernel.fuzz.score` already serves.
+/ WRatio) run on :mod:`kernel.batchfuzz`, which decomposes their window
+and cascade logic into batched LCS passes.  The cross shape keeps the
+matrix kernel: scoring the expanded grid as aligned pairs measured 4-8x
+slower for the same floats.
 
-Float parity with the scalar path is exact (same integer LCS, same
-``200.0 * lcs / total`` arithmetic) and locked by ``tests/test_scoring.py``.
+Float parity with ``pairscore.weighted_similarity`` is exact (same integer
+LCS, same ``200.0 * lcs / total`` arithmetic, same field accumulation
+order) and locked by ``tests/test_scoring.py``.
 """
 
 from __future__ import annotations
@@ -29,13 +40,15 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from fuzzy_matching_spark.kernel import batchfuzz, batchlcs
+from fuzzy_matching_spark.kernel import batchfuzz, batchlcs, pairscore
 
 __all__ = [
     "score_matrix",
     "score_pairs",
+    "field_similarity",
     "config_score_matrix",
-    "make_general_pair_scorer",
+    "config_score_pairs",
+    "kernel_cost",
 ]
 
 _BATCH_PAIRS = {
@@ -44,6 +57,24 @@ _BATCH_PAIRS = {
     "token_set_ratio": batchfuzz.token_set_ratio_pairs,
     "wratio": batchfuzz.wratio_pairs,
 }
+
+# Per-scorer kernel cost relative to RATIO, measured on the n=1000 persons
+# fixture (155k blocked pairs, one core): PARTIAL_RATIO sweeps every
+# alignment window, but through the vectorized all-windows kernel
+# (batchlcs.partial_ratio_windows) that is ~5x a plain ratio batch, not
+# ~70x; WRatio cascades into it for length-mismatched pairs (~5x),
+# TOKEN_SET scores one derived diff-string LCS plus arithmetic (~2x).
+_KERNEL_COST = {
+    "ratio": 1,
+    "token_sort_ratio": 1,
+    "token_set_ratio": 2,
+    "wratio": 5,
+    "partial_ratio": 5,
+}
+# A transliterating field transforms each distinct pair in scalar Python
+# (the direction depends on both values' detected languages) before the
+# batched kernel scores it.
+_TRANSLIT_COST = 64
 
 
 def _sorted_joins(vals) -> list:
@@ -84,90 +115,29 @@ def score_pairs(algorithm: str, left_vals, right_vals) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# pair-stream scorer (the matcher's LSH candidate mode)
+# the weighted-field rule (pairscore.weighted_similarity, batched)
 # ---------------------------------------------------------------------------
 
 
-def _dedup_pair_scores(a_vals, b_vals, pairs_fn) -> np.ndarray:
-    """Score aligned value pairs, each distinct (a, b) combination once."""
-    ca, ua = pd.factorize(pd.Series(a_vals, dtype=object))
-    cb, ub = pd.factorize(pd.Series(b_vals, dtype=object))
-    nb = len(ub)
-    key = ca.astype(np.int64) * nb + cb
-    kcodes, kuniq = pd.factorize(key)
-    # fancy-index object arrays: element-wise pandas Index lookups are slow
-    ka = ua.to_numpy(dtype=object)[kuniq // nb].tolist()
-    kb = ub.to_numpy(dtype=object)[kuniq % nb].tolist()
-    scored = pairs_fn(ka, kb)
-    return np.asarray(scored, dtype=np.float64)[kcodes]
+def _field_kernel(fc, config) -> tuple[str, bool]:
+    """A field's scorer name — the config's when the field names none — and
+    whether the field transliterates."""
+    algo = fc.fuzzy_algorithm if fc.fuzzy_algorithm is not None else config.fuzzy_algorithm
+    return algo.value, fc.transliterate and config.transliteration.enabled
 
 
-def make_general_pair_scorer(config):
-    """Pandas UDF: weighted-mean similarity in [0, 1] of aligned value pairs.
-
-    Argument order: (a_f1, b_f1, a_f2, b_f2, ...) matching ``config.fields``.
-    Full per-field semantics (any algorithm, transliteration) over the
-    original values, float-identical to :func:`config_score_matrix`:
-    per-field ``fn(lower, lower)/100`` (empty operands 0), accumulated in
-    field order, divided by the weight sum.  Unique (a, b) combinations
-    are scored once per batch."""
-    from pyspark.sql.functions import pandas_udf
-
-    from fuzzy_matching_spark.kernel import pairscore
-
-    fields = config.fields
-    total_w = sum(fc.weight for fc in fields)
-
-    @pandas_udf("double")
-    def _score(*cols: pd.Series) -> pd.Series:
-        n = len(cols[0])
-        acc = np.zeros(n, dtype=np.float64)
-        for i, fc in enumerate(fields):
-            a = cols[2 * i].fillna("").astype(str).tolist()
-            b = cols[2 * i + 1].fillna("").astype(str).tolist()
-
-            if fc.transliterate and config.transliteration.enabled:
-                def field_fn(ua, ub, fc=fc):
-                    out = []
-                    for v1, v2 in zip(ua, ub):
-                        t1, t2, _ = pairscore.process_transliteration(v1, v2, config)
-                        out.append(
-                            pairscore.get_similarity(
-                                t1, t2, fc.fuzzy_algorithm, config.fuzzy_algorithm
-                            )
-                        )
-                    return out
-                s = _dedup_pair_scores(a, b, field_fn)
-            else:
-                algo = (
-                    fc.fuzzy_algorithm
-                    if fc.fuzzy_algorithm is not None
-                    else config.fuzzy_algorithm
-                )
-
-                def field_fn(ua, ub, algo=algo):
-                    la = [v.lower() for v in ua]
-                    lb = [v.lower() for v in ub]
-                    return score_pairs(algo.value, la, lb)
-                s = _dedup_pair_scores(a, b, field_fn) / 100.0
-                empty = np.array([not x for x in a]) | np.array([not x for x in b])
-                s[empty] = 0.0
-            acc += s * fc.weight
-        if total_w <= 0:
-            return pd.Series(np.zeros(n))
-        return pd.Series(acc / total_w)
-
-    # asNondeterministic: the score IS deterministic, but without this the
-    # optimizer pushes the >= threshold filter (which references the UDF
-    # column) below the load-balancing repartition exchange and DUPLICATES
-    # the UDF — the expensive pass then runs inside the skewed join stage,
-    # defeating the rebalance (observed: 2x Python work, 1 hot task)
-    return _score.asNondeterministic()
+def kernel_cost(config) -> int:
+    """Per-pair scoring cost of ``config`` relative to an all-RATIO config:
+    its most expensive field's (1 with no fields)."""
+    costs = []
+    for fc in config.fields:
+        algo, translit = _field_kernel(fc, config)
+        costs.append(_TRANSLIT_COST if translit else _KERNEL_COST.get(algo, 1))
+    return max(costs, default=1)
 
 
-# ---------------------------------------------------------------------------
-# block score matrix for a MatchConfig (the greedy matcher kernel)
-# ---------------------------------------------------------------------------
+def _lower(vals: list) -> list:
+    return [v.lower() for v in vals]
 
 
 def _unique_inverse(vals: list):
@@ -176,66 +146,87 @@ def _unique_inverse(vals: list):
     return list(uniq), inv
 
 
-def _translit_field_matrix(left_vals, right_vals, fc, config) -> np.ndarray:
-    """Scalar unique-pair path for transliterate-enabled fields.
+def _unique_pairs(a: list, b: list):
+    """Distinct (a, b) combinations of aligned values, and each row's index
+    into them."""
+    ca, ua = pd.factorize(pd.Series(a, dtype=object))
+    cb, ub = pd.factorize(pd.Series(b, dtype=object))
+    nb = len(ub)
+    codes, kuniq = pd.factorize(ca.astype(np.int64) * nb + cb)
+    # fancy-index object arrays: element-wise pandas Index lookups are slow
+    ka = ua.to_numpy(dtype=object)[kuniq // nb].tolist()
+    kb = ub.to_numpy(dtype=object)[kuniq % nb].tolist()
+    return codes, ka, kb
 
-    Transliteration direction depends on *both* sides' detected languages
-    (``pairscore.process_transliteration``), so the transform is genuinely
-    pair-wise; uniqueness still collapses repeated values.
+
+def _similarity(kernel, algo: str, a: list, b: list) -> np.ndarray:
+    """``kernel`` (score_matrix or score_pairs) scaled to [0, 1], with 0
+    wherever an operand is empty (``pairscore.get_similarity``'s guard)."""
+    s = kernel(algo, a, b) / 100.0
+    ea = np.array([not v for v in a], dtype=bool)
+    eb = np.array([not v for v in b], dtype=bool)
+    s[(ea[:, None] | eb) if s.ndim == 2 else (ea | eb)] = 0.0
+    return s
+
+
+def field_similarity(fc, left: list, right: list, config, cross: bool = False) -> np.ndarray:
+    """One field's similarities in [0, 1], float-identical to
+    ``pairscore.get_similarity`` after the field's transliteration.
+
+    ``cross`` gives the (len(left), len(right)) matrix of every left value
+    against every right value, otherwise the aligned vector (``left[k]``
+    against ``right[k]``).  Distinct values are scored once: per side for
+    the cross shape (one matrix-kernel call), per pair for the aligned one.
+    A transliterating field's transform is pair-wise, so its cross shape is
+    the aligned shape over the grid of distinct values.
     """
-    from fuzzy_matching_spark.kernel import pairscore
+    algo, translit = _field_kernel(fc, config)
+    if cross and not translit:
+        ul, li = _unique_inverse(_lower(left))
+        ur, ri = _unique_inverse(_lower(right))
+        return _similarity(score_matrix, algo, ul, ur)[li][:, ri]
+    if cross:
+        ul, li = _unique_inverse(left)
+        ur, ri = _unique_inverse(right)
+        grid = field_similarity(fc, [v for v in ul for _ in ur], ur * len(ul), config)
+        return grid.reshape(len(ul), len(ur))[li][:, ri]
+    codes, a, b = _unique_pairs(left, right)
+    if translit:
+        pairs = [pairscore.process_transliteration(x, y, config) for x, y in zip(a, b)]
+        a, b = [x for x, _, _ in pairs], [y for _, y, _ in pairs]
+    return _similarity(score_pairs, algo, _lower(a), _lower(b))[codes]
 
-    ul, linv = _unique_inverse(left_vals)
-    ur, rinv = _unique_inverse(right_vals)
-    m = np.empty((len(ul), len(ur)), dtype=np.float64)
-    for i, v1 in enumerate(ul):
-        for j, v2 in enumerate(ur):
-            t1, t2, _ = pairscore.process_transliteration(v1, v2, config)
-            m[i, j] = pairscore.get_similarity(
-                t1, t2, fc.fuzzy_algorithm, config.fuzzy_algorithm
-            )
-    return m[linv][:, rinv]
+
+def _values(frame: pd.DataFrame, name: str) -> list:
+    """A field's values as strings (NULL -> ""); "" for every row when the
+    frame lacks the field."""
+    if name not in frame.columns:
+        return [""] * len(frame)
+    return frame[name].fillna("").astype(str).tolist()
+
+
+def _weighted(left: pd.DataFrame, right: pd.DataFrame, config, cross: bool) -> np.ndarray:
+    """``sum(s * w) / sum(w)`` over ``config.fields``, accumulated in field
+    order as ``pairscore.weighted_similarity`` does; 0 everywhere when the
+    weights sum to <= 0 (which covers a config with no fields)."""
+    acc = np.zeros((len(left), len(right)) if cross else len(left), dtype=np.float64)
+    total_w = sum(fc.weight for fc in config.fields)
+    if total_w <= 0:
+        return acc
+    for fc in config.fields:
+        lv, rv = _values(left, fc.field), _values(right, fc.field)
+        acc += field_similarity(fc, lv, rv, config, cross) * fc.weight
+    return acc / total_w
 
 
 def config_score_matrix(left: pd.DataFrame, right: pd.DataFrame, config) -> np.ndarray:
-    """(n_left, n_right) weighted-mean similarity in [0, 1].
+    """(n_left, n_right) weighted-mean similarity in [0, 1]: float-identical
+    to ``pairscore.weighted_similarity`` over the cross product."""
+    return _weighted(left, right, config, cross=True)
 
-    Float-identical to looping ``pairscore.weighted_similarity`` over the
-    cross product: same per-field ``fn(lower, lower)/100`` values, same
-    field accumulation order, same ``sum(s*w)/sum(w)`` arithmetic.
-    """
-    nl, nr = len(left), len(right)
-    if not config.fields:
-        return np.zeros((nl, nr))
-    total_w = sum(fc.weight for fc in config.fields)
-    acc = np.zeros((nl, nr), dtype=np.float64)
-    for fc in config.fields:
-        lv = (
-            left[fc.field].fillna("").astype(str).tolist()
-            if fc.field in left.columns
-            else [""] * nl
-        )
-        rv = (
-            right[fc.field].fillna("").astype(str).tolist()
-            if fc.field in right.columns
-            else [""] * nr
-        )
-        if fc.transliterate and config.transliteration.enabled:
-            mat = _translit_field_matrix(lv, rv, fc, config)
-        else:
-            algo = fc.fuzzy_algorithm if fc.fuzzy_algorithm is not None else config.fuzzy_algorithm
-            ul, linv = _unique_inverse([v.lower() for v in lv])
-            ur, rinv = _unique_inverse([v.lower() for v in rv])
-            m_u = score_matrix(algo.value, ul, ur) / 100.0
-            # empty operands score 0 (pairscore.get_similarity guard)
-            for i, v in enumerate(ul):
-                if not v:
-                    m_u[i, :] = 0.0
-            for j, v in enumerate(ur):
-                if not v:
-                    m_u[:, j] = 0.0
-            mat = m_u[linv][:, rinv]
-        acc += mat * fc.weight
-    if total_w <= 0:
-        return np.zeros((nl, nr))
-    return acc / total_w
+
+def config_score_pairs(left: pd.DataFrame, right: pd.DataFrame, config) -> np.ndarray:
+    """Weighted-mean similarity in [0, 1] of aligned rows (``left`` and
+    ``right`` have the same length): float-identical to
+    ``pairscore.weighted_similarity`` row by row."""
+    return _weighted(left, right, config, cross=False)

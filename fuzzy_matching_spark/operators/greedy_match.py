@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fuzzy_matching_spark.config import DedupConfig, MatchConfig
+from fuzzy_matching_spark.functions import scoring
 from fuzzy_matching_spark.functions.text import block_key, cleanliness_col
 from fuzzy_matching_spark.pipeline.session import job_phase
 
@@ -73,7 +74,7 @@ TILE = 256
 # match runs on the driver when both inputs together hold at most
 # DRIVER_MAX_ROWS rows, DRIVER_CHAR_BUDGET characters of match-field and
 # block-field text and DRIVER_PAIR_BUDGET blocked pairs (the pair budget
-# divided by the scorer's kernel cost).  DRIVER_MAX_ROWS = 0 turns the gate
+# divided by ``scoring.kernel_cost``).  DRIVER_MAX_ROWS = 0 turns the gate
 # off.
 DRIVER_MAX_ROWS = 4_096
 DRIVER_CHAR_BUDGET = 2_000_000
@@ -112,8 +113,6 @@ def _block_matcher(config: MatchConfig, lkeys: list[str], rkeys: list[str]):
     rank.  The block is scored in ``TILE`` x ``TILE`` slices with the
     driver-local kernel; only the cells that can take part in the greedy
     (``sim > 0`` and ``sim >= threshold``) become edges."""
-    from fuzzy_matching_spark.functions.scoring import config_score_matrix
-
     threshold = config.threshold
     tile = TILE  # read here, on the driver: the workers import the default
     greedy = _make_greedy(1, 1)
@@ -127,7 +126,7 @@ def _block_matcher(config: MatchConfig, lkeys: list[str], rkeys: list[str]):
         for i0 in range(0, len(left), tile):
             lt = left.iloc[i0 : i0 + tile]
             for j0 in range(0, len(right), tile):
-                m = config_score_matrix(lt, right.iloc[j0 : j0 + tile], config)
+                m = scoring.config_score_matrix(lt, right.iloc[j0 : j0 + tile], config)
                 i, j = np.nonzero((m > 0.0) & (m >= threshold))
                 lr.append(i + i0)
                 rr.append(j + j0)
@@ -282,9 +281,9 @@ class SparkMatcher:
     One strategy decision: a blocked match (no ``candidates``) whose
     inputs fit the driver gate (``DRIVER_MAX_ROWS`` rows together,
     ``DRIVER_CHAR_BUDGET`` characters, ``DRIVER_PAIR_BUDGET`` blocked pairs
-    scaled down by the scorer's kernel cost and 64x for
-    transliteration) runs on the driver through the same batched kernel
-    the executors use (:mod:`fuzzy_matching_spark.operators.local_match`);
+    divided by ``scoring.kernel_cost``) runs on the driver through the same
+    batched kernel the executors use
+    (:mod:`fuzzy_matching_spark.operators.local_match`);
     at that size the distributed plan is pure stage latency.  The probe
     reads at most ``DRIVER_MAX_ROWS + 1`` string-coerced rows per side in
     one ``limit`` collect, never a full scan, so it is safe at any input
@@ -337,14 +336,6 @@ class SparkMatcher:
         else:
             key = F.lit("ALL")
         return out.withColumn(BK, key)
-
-    # ------------------------------------------------------------------
-    def _side_cols(self, d: DataFrame, prefix: str) -> list:
-        cols = []
-        for i, fc in enumerate(self.config.fields):
-            src = F.col(fc.field) if fc.field in d.columns else F.lit("")
-            cols.append(src.alias(f"{prefix}{i}"))
-        return cols
 
     def _order_cols(self, d: DataFrame) -> list[str]:
         config = self.config
@@ -449,9 +440,10 @@ class SparkMatcher:
 
         Scale shape: the candidate frame (left_seq, right_seq) is joined to
         both sides' match-field values as they are, every pair is scored
-        one Arrow row per pair by ``scoring.make_general_pair_scorer`` (any
-        scorer, transliteration; candidate pairs are sparse, so there is no
-        tile structure to score as matrix blocks), and only the >=
+        one Arrow row per pair by a pandas UDF over
+        ``scoring.config_score_pairs`` (the aligned shape of the per-field
+        rule the blocked path scores as matrices; candidate pairs are
+        sparse, so there is no tile structure to score), and only the >=
         threshold edges survive.  There is no per-record pre-transform and
         no JVM-side prune: every candidate pair reaches the scorer.
         The greedy then runs per *connected component* of the thresholded
@@ -464,29 +456,28 @@ class SparkMatcher:
         stays O(component edges) and components parallelize freely.  No
         global window/rank anywhere — this is what survives 10^12 rows.
         """
-        from fuzzy_matching_spark.functions import scoring
         from fuzzy_matching_spark.operators.connected_components import (
             connected_components,
         )
 
         config = self.config
         cand = candidates(d1, d2, self.match_fields)
-
-        nf = len(config.fields)
         lkeys = self._order_cols(d1)
         rkeys = self._order_cols(d2)
 
-        asel = d1.select(
-            F.col(SEQ).alias("left_seq"),
-            *[F.col(c).alias(f"_lk{i}") for i, c in enumerate(lkeys)],
-            *self._side_cols(d1, "_fa"),
+        def side(d: DataFrame, seq: str, tag: str, keys: list[str]) -> DataFrame:
+            # the scorer reads one struct per side: the seq (so a row count
+            # exists even with no match fields) and each match field present
+            fields = [f for f in dict.fromkeys(self.match_fields) if f in d.columns]
+            return d.select(
+                F.col(SEQ).alias(seq),
+                *[F.col(c).alias(f"_{tag}k{i}") for i, c in enumerate(keys)],
+                F.struct(SEQ, *fields).alias(f"_fm_{tag}"),
+            )
+
+        joined = cand.join(side(d1, "left_seq", "l", lkeys), "left_seq").join(
+            side(d2, "right_seq", "r", rkeys), "right_seq"
         )
-        bsel = d2.select(
-            F.col(SEQ).alias("right_seq"),
-            *[F.col(c).alias(f"_rk{i}") for i, c in enumerate(rkeys)],
-            *self._side_cols(d2, "_fb"),
-        )
-        joined = cand.join(asel, "left_seq").join(bsel, "right_seq")
 
         # spread the lefts across the cluster, each left's candidates in one
         # partition so its repeated values collapse in the scorer's
@@ -496,10 +487,18 @@ class SparkMatcher:
         # 2 x 2,100 persons (37.8 s vs 38.4 s warm, 820,394 candidates).
         joined = joined.repartition(F.col("left_seq"))
 
-        scorer = scoring.make_general_pair_scorer(config)
+        @F.pandas_udf("double")
+        def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.Series:
+            return pd.Series(scoring.config_score_pairs(left, right, config))
+
+        # asNondeterministic: the score IS deterministic, but without this
+        # the optimizer pushes the >= threshold filter (which references the
+        # UDF column) below the load-balancing repartition exchange and
+        # DUPLICATES the UDF — the expensive pass then runs inside the skewed
+        # join stage, defeating the rebalance (observed: 2x Python work, 1
+        # hot task)
         scored = joined.withColumn(
-            "sim",
-            scorer(*[F.col(f"_f{s}{i}") for i in range(nf) for s in ("a", "b")]),
+            "sim", score.asNondeterministic()(F.col("_fm_l"), F.col("_fm_r"))
         )
         edges = scored.filter(
             (F.col("sim") > 0.0) & (F.col("sim") >= F.lit(config.threshold))
@@ -578,41 +577,11 @@ class SparkMatcher:
         if chars > DRIVER_CHAR_BUDGET:
             return None
         # block membership is order-independent, so the volume probe needs
-        # no sort replay
-        from fuzzy_matching_spark.config import FuzzyAlgorithm
-
-        # Per-scorer kernel cost relative to RATIO, measured on the n=1000
-        # persons fixture (155k blocked pairs, one core): PARTIAL_RATIO
-        # sweeps every alignment window, but through the vectorized
-        # all-windows kernel (batchlcs.partial_ratio_windows) that is ~5x
-        # a plain ratio batch, not ~70x; WRatio cascades into it for
-        # length-mismatched pairs (~5x), TOKEN_SET scores one derived
-        # diff-string LCS plus arithmetic (~2x).  The divisor keeps the
-        # driver path only where one core still beats the cluster's ~1.5 s
-        # of fixed stage latency.
-        _cost = {
-            FuzzyAlgorithm.RATIO: 1,
-            FuzzyAlgorithm.TOKEN_SORT: 1,
-            FuzzyAlgorithm.TOKEN_SET: 2,
-            FuzzyAlgorithm.WRatio: 5,
-            FuzzyAlgorithm.PARTIAL_RATIO: 5,
-        }
-        scorer_cost = max(
-            _cost.get(fc.fuzzy_algorithm or self.config.fuzzy_algorithm, 1)
-            for fc in self.config.fields
-        ) if self.config.fields else 1
-        divisor = scorer_cost
-        if any(
-            fc.transliterate and self.config.transliteration.enabled
-            for fc in self.config.fields
-        ):
-            # transliterate-enabled fields score pair-wise through a scalar
-            # unique-pair path (direction depends on BOTH sides' detected
-            # languages — scoring._translit_field_matrix), not the batched
-            # LCS kernel; a single driver core should only take that on at
-            # a fraction of the batched budget
-            divisor = max(divisor, 64)
-        if local_match.pair_volume(l1, l2, self.config) > DRIVER_PAIR_BUDGET // divisor:
+        # no sort replay.  The pair budget shrinks by the config's kernel
+        # cost, keeping the driver path only where one core still beats the
+        # cluster's ~1.5 s of fixed stage latency.
+        budget = DRIVER_PAIR_BUDGET // scoring.kernel_cost(self.config)
+        if local_match.pair_volume(l1, l2, self.config) > budget:
             return None
         self.last_strategy = "driver"
         cols = [c for c in df1.columns if c not in (SEQ, BK)]
@@ -647,8 +616,8 @@ class SparkMatcher:
 
         clean = cleanliness_col(self.match_fields, self.weights)
         field_len = sum(
-            F.length(F.coalesce(F.col(f).cast("string"), F.lit("")))
-            for f in self.match_fields
+            (F.length(F.coalesce(F.col(f).cast("string"), F.lit(""))) for f in self.match_fields),
+            F.lit(0),
         )
 
         def side(d: DataFrame, tag: str) -> DataFrame:

@@ -3,8 +3,8 @@
 ``SparkMatcher.match_and_consolidate`` dispatches here when both inputs
 together fit under a bounded row / character / pair-volume budget — any
 scorer, transliteration included (``config_score_matrix`` covers them
-all; transliterate-enabled fields score through a scalar unique-pair
-path, so the dispatch gate shrinks their pair budget 64x).
+all; a transliterating field transforms each distinct pair in scalar
+Python, so ``scoring.kernel_cost`` shrinks its pair budget 64x).
 At that size the distributed plan's wall is pure fixed latency — half a
 dozen stages of scheduler and Python-worker round-trips over
 sub-millisecond partitions — while one driver core pushes the whole

@@ -144,9 +144,14 @@ def _token_jaccard_bitmask(tok_arrays, vocab_rows, threshold, id_col):
     d_max = int((1.0 - threshold) * V + 1e-9)
     n_bands = d_max + 1
     # Bands of >= 2 bits, else the prefix plan.  Measured on the sf0.1
-    # documents (V = 31), counted, local[4]: at t = 0.5, where this test
-    # picks prefix, both plans read 21-30 s with the same pairs; at t = 0.3
-    # prefix took 48 s and banded ran over 13 min.
+    # documents (V = 31), local[4]: at t = 0.5, where this test picks
+    # prefix, both plans read 21-30 s counted with the same pairs; at
+    # t = 0.3 prefix took 48 s and banded ran over 13 min.  Banded is only
+    # taken from t ~ 0.53 up; at the headline's t = 0.8, collected, two
+    # alternating pairs in one session (the first run cold): banded 31.0 /
+    # 19.9 s, prefix 24.6 / 22.4 s, both 2,968,398 pairs with the same
+    # digest; an earlier sitting's four pairs read banded 22.3 / 16.1 /
+    # 18.2 / 13.6 s against prefix 21.6 / 23.1 / 20.4 / 19.8 s.
     if V > 0 and 2 * n_bands <= V:
         return _token_jaccard_mask_banded(
             tok_arrays, ordered, threshold, id_col, V, n_bands

@@ -27,15 +27,22 @@ def build_session(
     """Create (or reuse) a session with the engine defaults.
 
     In a plain Python process ``master`` defaults to
-    ``local[$SPARK_GRAFT_CPUS]`` and ``shuffle_partitions`` to 32.  Under
-    spark-submit (which hands PySpark its gateway through
-    ``PYSPARK_GATEWAY_PORT``) an unset one is left to the launcher:
-    builder options override the launcher's conf, so setting them here
-    would replace ``--master`` and ``--conf spark.sql.shuffle.partitions``.
+    ``local[$SPARK_GRAFT_CPUS]`` and ``shuffle_partitions`` to 32, the
+    driver memory is ``$SPARK_GRAFT_DRIVER_MEM`` (8g) and the UI is off.
+    Under spark-submit (which hands PySpark its gateway through
+    ``PYSPARK_GATEWAY_PORT``) an unset master or partition count, the
+    driver memory and the UI are left to the launcher: builder options
+    override the launcher's conf, so setting them here would replace
+    ``--master``, ``--driver-memory`` and the ``--conf`` values.
     """
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
         master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
         shuffle_partitions = shuffle_partitions or 32
+        extra_conf = {
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+            "spark.ui.enabled": "false",
+            **(extra_conf or {}),
+        }
 
     # glibc returns mmap'd allocations (>=128 KB) to the OS on free, so
     # numpy-heavy UDF workers re-fault the same pages on every Arrow batch —
@@ -65,8 +72,6 @@ def build_session(
             "spark.python.daemon.module",
             "fuzzy_matching_spark.pipeline.worker_daemon",
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
     if master is not None:

@@ -1,5 +1,5 @@
 """Configs fail when they are built, and the session builder leaves a
-spark-submit launcher's master alone.  No Spark session is started here."""
+spark-submit launcher's master, driver memory and UI alone.  No Spark session is started here."""
 
 import pytest
 from pyspark.sql import SparkSession
@@ -46,11 +46,13 @@ def test_default_configs_build():
 
 @pytest.mark.parametrize("launcher", ["python", "spark-submit"])
 def test_build_session_leaves_launcher_conf(monkeypatch, launcher):
-    """In a plain process an unset master becomes ``local[...]`` and the
-    shuffle partitions 32; under spark-submit (``PYSPARK_GATEWAY_PORT`` set)
-    both are left to the launcher.  Explicit values are kept either way."""
+    """In a plain process an unset master becomes ``local[...]``, the
+    shuffle partitions 32, and the driver memory and UI are set; under
+    spark-submit (``PYSPARK_GATEWAY_PORT`` set) all four are left to the
+    launcher.  Explicit values are kept either way."""
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
     if launcher == "spark-submit":
         monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
     else:
@@ -59,5 +61,10 @@ def test_build_session_leaves_launcher_conf(monkeypatch, launcher):
     defaults = ("local[3]", "32") if launcher == "python" else (None, None)
     assert (opts.get("spark.master"), opts.get("spark.sql.shuffle.partitions")) == defaults
     assert opts["spark.python.daemon.module"].endswith("worker_daemon")
+    launcher_keys = ("spark.driver.memory", "spark.ui.enabled")
+    if launcher == "python":
+        assert [opts.get(k) for k in launcher_keys] == ["8g", "false"]
+    else:
+        assert not set(launcher_keys) & set(opts)
     opts = build_session(master="local[2]", shuffle_partitions=5)
     assert (opts["spark.master"], opts["spark.sql.shuffle.partitions"]) == ("local[2]", "5")

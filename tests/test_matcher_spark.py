@@ -451,3 +451,26 @@ def test_consolidation_has_no_anti_join(spark, distributed):
     matcher.unpersist()
     assert "FullOuter" in plan
     assert "LeftAnti" not in plan
+
+
+@pytest.mark.parametrize("mode", ["driver", "blocked", "lsh"])
+def test_config_with_no_fields_equals_oracle(spark, monkeypatch, mode):
+    """``api.match_datasets`` without a config matches on no fields: every
+    path equals the oracle — no matches, every record consolidated."""
+    originals, variants = generate_person_pair(20, seed=43)
+    config = MatchConfig(fields=[])
+    o_matches, o_cons = OracleMatcher(config).match_and_consolidate(originals, variants)
+    assert o_matches == [] and len(o_cons) == len(originals) + len(variants)
+    if mode != "driver":
+        monkeypatch.setattr(greedy_match, "DRIVER_MAX_ROWS", 0)
+    matcher = SparkMatcher(config)
+    matches, consolidated = matcher.match_and_consolidate(
+        spark_df(spark, originals),
+        spark_df(spark, variants),
+        candidates=minhash_candidates() if mode == "lsh" else None,
+    )
+    assert matcher.last_strategy == ("driver" if mode == "driver" else "distributed")
+    got_matches, got_cons = _outputs(matches, consolidated)
+    matcher.unpersist()
+    assert got_matches == []
+    assert got_cons == Counter(_record_key(r) for r in o_cons)

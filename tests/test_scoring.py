@@ -8,7 +8,12 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from fuzzy_matching_spark.config import FuzzyAlgorithm, MatchConfig, MatchFieldConfig
+from fuzzy_matching_spark.config import (
+    FuzzyAlgorithm,
+    MatchConfig,
+    MatchFieldConfig,
+    TransliterationConfig,
+)
 from fuzzy_matching_spark.functions import scoring
 from fuzzy_matching_spark.kernel import batchlcs, fuzz, pairscore
 
@@ -112,27 +117,111 @@ def test_partial_ratio_pairs_branch_boundaries(monkeypatch):
     assert (batchfuzz.partial_ratio_pairs(left, right) == want).all()
 
 
-def test_config_score_matrix_matches_weighted_similarity():
+def _shape_case(name):
+    """(config, left, right) for one case of the weighted-field parity test."""
+    rng = random.Random(29)
+    F, A = MatchFieldConfig, FuzzyAlgorithm
+    if name == "two_fields":
+        config = MatchConfig(
+            fields=[F("name", 0.6), F("email", 0.4, fuzzy_algorithm=A.TOKEN_SORT)]
+        )
+        left = {
+            "name": ["Ivan Petrov", "anna", "", "bob marley"],
+            "email": ["a@x.com", "b@y.com", "c@z.com", ""],
+        }
+        right = {"name": ["Petrov Ivan", "ana", "dave"], "email": ["a@x.com", "", "d@w.com"]}
+        return config, pd.DataFrame(left), pd.DataFrame(right)
+    if name in [a.value for a in A]:
+        # the config's algorithm on one field, a field override on the other
+        config = MatchConfig(
+            fields=[F("a", 0.7), F("b", 0.3, fuzzy_algorithm=A.RATIO)],
+            fuzzy_algorithm=A(name),
+        )
+
+        def side():
+            return pd.DataFrame(
+                {c: _rand_strings(rng, 9, "ab Cd", 0, 14) + [""] for c in "ab"}
+            )
+
+        return config, side(), side()
+    if name == "translit":
+        config = MatchConfig(
+            fields=[
+                F("last", 0.5, transliterate=True, fuzzy_algorithm=A.TOKEN_SORT),
+                F("first", 0.3, transliterate=True),
+                F("email", 0.2, transliterate=True),
+            ],
+            transliteration=TransliterationConfig(enabled=True),
+        )
+        left = {
+            "last": ["Иванов", "Petrova", "Smith John", "", "Сидоров"],
+            "first": ["Ivan", "Мария", "", "Ольга", "Petr"],
+            "email": ["ivan@x.ru", "", "js@y.com", "o@z.ru", "p@q.ru"],
+        }
+        right = {
+            "last": ["Ivanov", "Петрова", "Иванов", "Sidorov"],
+            "first": ["Иван", "Maria", "Olga", ""],
+            "email": ["ivan@x.ru", "m@y.ru", "", "p@q.ru"],
+        }
+        return config, pd.DataFrame(left), pd.DataFrame(right)
+    if name == "missing_field":
+        config = MatchConfig(fields=[F("a", 0.5), F("only_left", 0.5)])
+        left = pd.DataFrame({"a": ["abc", "abd", ""], "only_left": ["x", "", "y"]})
+        return config, left, pd.DataFrame({"a": ["abc", "ab", "b"]})
+    if name == "zero_weights":
+        config = MatchConfig(fields=[F("a", 0.0), F("b", 0.0)])
+        left = pd.DataFrame({"a": ["abc", "x"], "b": ["d", "e"]})
+        return config, left, pd.DataFrame({"a": ["abc"], "b": ["d"]})
+    if name == "no_fields":
+        config = MatchConfig(fields=[])
+        return config, pd.DataFrame({"a": ["abc", "x"]}), pd.DataFrame({"a": ["abc"]})
+    assert name == "repeated_pairs"
+    # few distinct values per side: the aligned shape sees each (a, b)
+    # combination dozens of times
     config = MatchConfig(
-        fields=[
-            MatchFieldConfig("name", 0.6),
-            MatchFieldConfig("email", 0.4, fuzzy_algorithm=FuzzyAlgorithm.TOKEN_SORT),
-        ],
-        fuzzy_algorithm=FuzzyAlgorithm.RATIO,
+        fields=[F("a", 0.6), F("b", 0.4, fuzzy_algorithm=A.WRatio)],
+        fuzzy_algorithm=A.PARTIAL_RATIO,
     )
-    left = pd.DataFrame(
-        {"name": ["Ivan Petrov", "anna", "", "bob marley"], "email": ["a@x.com", "b@y.com", "c@z.com", ""]}
-    )
-    right = pd.DataFrame(
-        {"name": ["Petrov Ivan", "ana", "dave"], "email": ["a@x.com", "", "d@w.com"]}
+    pool_a = _rand_strings(rng, 5, "abc d", 0, 12) + [""]
+    pool_b = _rand_strings(rng, 5, "abd c", 0, 12)
+
+    def side():
+        return pd.DataFrame(
+            {c: [rng.choice(pool) for _ in range(40)] for c, pool in zip("ab", (pool_a, pool_b))}
+        )
+
+    return config, side(), side()
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "two_fields",
+        *[a.value for a in FuzzyAlgorithm],
+        "translit",
+        "missing_field",
+        "zero_weights",
+        "no_fields",
+        "repeated_pairs",
+    ],
+)
+def test_config_scores_match_weighted_similarity(case):
+    """Both shapes of the weighted-field rule — the cross matrix and the
+    aligned rows — give ``pairscore.weighted_similarity``'s floats exactly.
+    The aligned shape scores every cell of the cross product as one row."""
+    config, left, right = _shape_case(case)
+    lrec, rrec = left.to_dict("records"), right.to_dict("records")
+    want = np.array(
+        [[pairscore.weighted_similarity(a, b, config)[0] for b in rrec] for a in lrec]
     )
     got = scoring.config_score_matrix(left, right, config)
-    for i in range(len(left)):
-        for j in range(len(right)):
-            want, _ = pairscore.weighted_similarity(
-                left.iloc[i].to_dict(), right.iloc[j].to_dict(), config
-            )
-            assert got[i, j] == want  # exact float equality
+    assert got.shape == want.shape
+    assert (got == want).all()  # exact float equality
+    li, ri = np.divmod(np.arange(want.size), len(right))
+    pairs = scoring.config_score_pairs(
+        left.iloc[li].reset_index(drop=True), right.iloc[ri].reset_index(drop=True), config
+    )
+    assert (pairs == want.ravel()).all()
 
 
 def test_long_strings_multiword():
@@ -171,16 +260,3 @@ def test_partial_ratio_windows_property():
         assert (got == want).all()
 
     check()
-
-
-def test_dedup_pair_scores_matches_rowwise():
-    """The unique-combination scorer returns exactly the row-by-row scores
-    on a batch with many repeated values and repeated (a, b) combinations."""
-    rng = random.Random(23)
-    pool_a = _rand_strings(rng, 40, "abc d", 0, 12)
-    pool_b = _rand_strings(rng, 40, "abd c", 0, 12)
-    a = [rng.choice(pool_a) for _ in range(3000)]
-    b = [rng.choice(pool_b) for _ in range(3000)]
-    got = scoring._dedup_pair_scores(a, b, batchlcs.ratio_pairs)
-    assert got.dtype == np.float64
-    assert list(got) == [fuzz.ratio(x, y) for x, y in zip(a, b)]
